@@ -63,8 +63,10 @@ def _engine_queries(spark, sf_dir):
 
     def eng_rollup_stream():
         # sequential sorted-run path (rollup_stream): rides the O1 sort,
-        # zero wide shuffle — the scaling job's default cascade since
-        # round 5 (bit-identical states; BENCH/profile_stream.py A/B)
+        # zero wide shuffle, states bit-identical to the hash cascade. Not
+        # the scaling job's default (opt-in BENCH_CASCADE=stream): measured
+        # cold, the hash cascade above is as fast or faster
+        # (BENCH/profile_stream.py A/B with the plan cache cleared)
         from ecmwf_models_spark.operators.rollup_stream import stream_rollup
 
         return finalize(stream_rollup(_silver(), "monthly"))

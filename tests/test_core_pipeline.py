@@ -102,5 +102,19 @@ def test_point_read(tmp_path, spark, bronze):
 
 
 def test_cell_routing_matches_write(spark, tmp_path, bronze):
-    cid = cell_id_for(spark, "conv-000007", 16)
-    assert 0 <= cid < 16
+    """Driver-side routing == the write path's cell_of, for every bronze
+    conv, non-ASCII keys and keys of 0-100 bytes (crossing XXH64's 32-,
+    8-, 4- and 1-byte stages), at several cell counts."""
+    from ecmwf_models_spark.grid import cell_of
+
+    keys = [r[0] for r in bronze.select("conv_id").distinct().collect()]
+    keys += ["", "é", "日本語"] + ["k" * n for n in range(101)]
+    keys += ["é" * n for n in range(1, 51)]
+    df = spark.createDataFrame([(k,) for k in keys], "conv_id string")
+    for n_cells in (1, 16, 64):
+        written = dict(
+            df.select("conv_id", cell_of("conv_id", n_cells)).collect()
+        )
+        routed = {k: cell_id_for(spark, k, n_cells) for k in keys}
+        assert routed == written, n_cells
+        assert all(0 <= c < n_cells for c in routed.values())

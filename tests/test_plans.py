@@ -15,6 +15,7 @@ import io
 
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.operators.rollup import (
     rollup_cascade,
@@ -51,19 +52,17 @@ def test_rollup_cascade_one_exchange_per_tier(bronze):
 
 
 def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):
-    """The ERATs.read analogue: cell_id filter must land in PartitionFilters
-    (directory pruning — the gpi2cell file routing) and the conv_id filter
-    in PushedFilters (row-group pruning)."""
+    """The ERATs.read analogue, as TsReader plans it: the scan lists only
+    the conv's cell directory (the gpi2cell file routing), the conv_id
+    filter lands in PushedFilters (row-group pruning), and there is no
+    Exchange and no Sort — the rows are ordered on the driver."""
     path = str(tmp_path / "silver")
     write_silver(reshuffle(bronze, n_cells=8), path)
     spark = bronze.sparkSession
-    df = spark.read.parquet(path).where(
-        (F.col("cell_id") == 3) & (F.col("conv_id") == "conv-000001")
-    )
-    plan = plan_of(df)
-    assert "PartitionFilters: [" in plan and "cell_id" in plan.split(
-        "PartitionFilters:"
-    )[1].split("]")[0], plan
+    plan = plan_of(TsReader(spark, path, n_cells=8).query("conv-000001"))
+    cell = cell_id_for(spark, "conv-000001", 8)
+    assert f"/cell_id={cell}]" in plan, plan
+    assert "Exchange" not in plan and "Sort" not in plan, plan
     assert "conv_id" in plan.split("PushedFilters:")[1].split("]")[0], plan
 
 

@@ -1,0 +1,146 @@
+"""Point-read contract (ERATs.read analogue, reference interface.py:675-720).
+
+`TsReader.read` must return exactly what the plain Spark query
+`where(conv_id).orderBy("ts", "turn_idx").toPandas().set_index("ts")`
+returns — same columns, dtypes, index and row order — while launching one
+Spark job. A reader opened before `extend_silver` must see the extend.
+"""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from ecmwf_models_spark.incremental import extend_silver
+from ecmwf_models_spark.lineage import read_table_attrs
+from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
+from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
+from ecmwf_models_spark.synth import gen_transcripts
+
+# conv-000000 is a hot conv (600 turns over 16 six-hourly buckets), so it
+# holds many turns at the same ts; conv-999999 is in no silver table
+CONVS = ["conv-000000", "conv-000007", "conv-000013", "conv-999999"]
+RESCALED = dict(
+    parameters=["text_len", "tool_call"],
+    scale_factors={"text_len": 2.0},
+    offsets={"text_len": 1.0, "tool_call": -0.5},
+)
+
+
+@pytest.fixture(scope="module")
+def silver16(tmp_path_factory, bronze):
+    path = str(tmp_path_factory.mktemp("pointread") / "silver")
+    write_silver(reshuffle(bronze, n_cells=16, num_partitions=8), path)
+    return path
+
+
+def spark_read(spark, path, conv_id, parameters=None, offsets=None,
+               scale_factors=None) -> pd.DataFrame:
+    """The read as one global-sorted Spark query over the whole table."""
+    df = (
+        spark.read.parquet(path)
+        .where(F.col("conv_id") == conv_id)
+        .orderBy("ts", "turn_idx")
+    )
+    if parameters:
+        df = df.select("ts", *parameters)
+    for c, sf in (scale_factors or {}).items():
+        df = df.withColumn(c, F.col(c) * F.lit(sf))
+    for c, off in (offsets or {}).items():
+        df = df.withColumn(c, F.col(c) + F.lit(off))
+    return df.toPandas().set_index("ts")
+
+
+def jobs_of(spark, fn, *args):
+    """Run fn under a fresh job group; return (result, jobs launched)."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hot_conv_has_ts_ties(spark, silver16):
+    pdf = spark_read(spark, silver16, "conv-000000")
+    assert pdf.index.duplicated().any()
+
+
+@pytest.mark.parametrize("read_bulk", [False, True])
+@pytest.mark.parametrize("opts", [{}, RESCALED], ids=["all", "rescaled"])
+def test_read_matches_spark_query(spark, silver16, read_bulk, opts):
+    r = TsReader(spark, silver16, n_cells=16, read_bulk=read_bulk, **opts)
+    attrs = read_table_attrs(spark, f"{silver16}/_meta")
+    try:
+        for conv in CONVS:
+            got = r.read(conv)
+            want = spark_read(spark, silver16, conv, **opts)
+            pd.testing.assert_frame_equal(got, want)
+            assert got.attrs["var_attrs"] == {
+                c: attrs[c] for c in want.columns if c in attrs
+            }
+            if conv == "conv-999999":
+                assert got.empty and list(got.columns) == list(want.columns)
+            else:
+                assert len(got) > 0
+    finally:
+        r.close()
+
+
+def test_reader_sees_extends_after_open(spark, tmp_path):
+    """A reader opened before two extends returns their rows: a conv in a
+    cell that had no directory at open, and new turns of a conv whose
+    cell the extend rewrote."""
+    initial = gen_transcripts(spark, n_conv=10, days=2, turns_per_conv=6)
+    path = str(tmp_path / "silver")
+    write_silver(reshuffle(initial, n_cells=64, num_partitions=4), path)
+    r = TsReader(spark, path, n_cells=64)
+
+    cells = {int(d.split("=")[1]) for d in os.listdir(path)
+             if d.startswith("cell_id=")}
+    new_conv = next(
+        c for c in (f"conv-9{i:05d}" for i in range(1000))
+        if cell_id_for(spark, c, 64) not in cells
+    )
+    empty = r.read(new_conv)
+    pd.testing.assert_frame_equal(empty, spark_read(spark, path, new_conv))
+    assert empty.empty
+
+    finals = initial.where(~F.col("is_prelim"))
+    one_turn = finals.where(
+        (F.col("conv_id") == "conv-000001") & (F.col("turn_idx") == 0)
+    ).withColumn("conv_id", F.lit(new_conv))
+    extend_silver(spark, path, one_turn, n_cells=64)
+    got = r.read(new_conv)
+    assert len(got) == 1
+    pd.testing.assert_frame_equal(got, spark_read(spark, path, new_conv))
+
+    before = r.read("conv-000003")
+    later = (
+        finals.where(F.col("conv_id") == "conv-000003")
+        .withColumn("turn_idx", F.col("turn_idx") + 100)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 3 DAYS"))
+    )
+    extend_silver(spark, path, later, n_cells=64)
+    after = r.read("conv-000003")
+    assert len(after) == 2 * len(before) > 0
+    assert (after["turn_idx"] >= 100).sum() == len(before)
+    want = spark_read(spark, path, "conv-000003")
+    pd.testing.assert_frame_equal(after, want)
+
+
+def test_read_is_one_job_and_routing_none(spark, silver16):
+    r = TsReader(spark, silver16, n_cells=16)
+    _, route_jobs = jobs_of(spark, cell_id_for, spark, "conv-000007", 16)
+    assert route_jobs == 0
+    for conv in ("conv-000007", "conv-000000"):
+        pdf, read_jobs = jobs_of(spark, r.read, conv)
+        assert len(pdf) > 0
+        assert read_jobs == 1

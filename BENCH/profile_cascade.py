@@ -139,10 +139,13 @@ def cascade_once():
 def main():
     n_conv = sys.argv[1] if len(sys.argv) > 1 else "600000"
     results = []
-    # full    = chained 3-shuffle cascade, full state (round-4 shape);
+    # full    = chained cascade, full state;
     # prim    = chained, sum/cnt/min/max only (narrower state rows);
     # oneshuf = production rollup_tiers: ONE narrow exchange by conv_id,
     #           all tiers pipelined (the round-5 fix).
+    # profile_cascade.json was recorded when the chain shuffled once per
+    # tier (round-4 shape); rollup_from_raw now carries the conv_id
+    # repartition, so full plans the same single exchange as oneshuf.
     # All three plan as codegen'd HashAggregate (Spark 4 min_by/max_by
     # are DeclarativeAggregates) — the discriminator is shuffle volume
     # and state width, not aggregate exec choice.

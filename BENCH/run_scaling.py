@@ -751,7 +751,7 @@ probe's median says what the box could do in those same minutes), which
 is why the normalized number is the one that predicts multi-executor
 behavior on real silicon. Consistent with that:
 {contention_claim}
-(Three least-contended windows by engine speedup, raw eff: {best3_raw}.)
+(Top {len(best3)} of {len(pairs)} windows by engine speedup, raw eff: {best3_raw}.)
 
 ## Best-of throughput per level
 

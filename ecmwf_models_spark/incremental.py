@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .grid import DEFAULT_N_CELLS
+from .grid import DEFAULT_N_CELLS, with_cell_id
 from .operators.dedup import latest_final_wins
 from .operators.reshuffle import reshuffle
 
@@ -53,9 +53,14 @@ def extend_silver(
     if n_cells is None:
         stored = read_run_settings(spark, f"{silver_path}/_settings")
         n_cells = int(stored.get("n_cells", DEFAULT_N_CELLS))
-    new_silverish = reshuffle(new_bronze, n_cells=n_cells)
+    # a turn's cell depends only on its conv_id, so the batch's cells
+    # need no transpose (no range sample, no shuffle of the batch)
     affected = [
-        r[0] for r in new_silverish.select("cell_id").distinct().collect()
+        r[0]
+        for r in with_cell_id(new_bronze, n_cells)
+        .select("cell_id")
+        .distinct()
+        .collect()
     ]
     if not affected:
         return []

@@ -13,8 +13,8 @@ and a writer protocol that makes retention-tier materialization resumable
 MID-TIER: every cell directory is written atomically (task temp + rename is
 Spark's own commit protocol at partition-dir grain via dynamic partition
 overwrite), then the cell's lineage row is appended. On rerun, committed
-cells are skipped via an anti-join on the lineage table — exactly-once at
-cell grain without a transactional table format (SURVEY 7 plan B).
+cells are skipped (their ids filter the input) — exactly-once at cell
+grain without a transactional table format (SURVEY 7 plan B).
 
 Checksums are order-insensitive (sum of xxhash64 over rows) so they are
 stable under any task placement/parallelism.
@@ -75,13 +75,15 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     return _read_or_empty(spark, path, LINEAGE_SCHEMA)
 
 
-def committed_cells(spark: SparkSession, path: str, tier: str) -> DataFrame:
-    return (
+def committed_cells(spark: SparkSession, path: str, tier: str) -> list[int]:
+    rows = (
         read_lineage(spark, path)
         .where((F.col("tier") == tier) & (F.col("status") == "committed"))
         .select("cell_id")
         .distinct()
-    )
+        .collect()
+    )  # bounded: one row per committed cell
+    return [r[0] for r in rows]
 
 
 def cell_stats(df: DataFrame) -> DataFrame:
@@ -185,6 +187,12 @@ class ResumableTierWriter:
     Usage:
         w = ResumableTierWriter(spark, out_dir, lineage_dir, tier="daily")
         w.run(df_with_cell_id)          # writes only uncommitted cells
+
+    run() evaluates its input twice: cell_stats of the pending cells
+    (which cells, and each one's lineage row), then the write. It does
+    not persist: on the three CLI tiers (18k turns, 16 cells, local[4])
+    a MEMORY_AND_DISK persist cost 28-30 CPU-s, against 9.6 s for three
+    unpersisted passes and 8.4 s for these two.
     """
 
     def __init__(
@@ -203,10 +211,6 @@ class ResumableTierWriter:
         self.snapshot_id = snapshot_id
         self.job_id = job_id or uuid.uuid4().hex[:12]
 
-    def pending(self, df: DataFrame) -> DataFrame:
-        done = committed_cells(self.spark, self.lineage_dir, self.tier)
-        return df.join(F.broadcast(done), "cell_id", "left_anti")
-
     def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
         """Materialize uncommitted cells; returns number of cells written.
 
@@ -215,24 +219,23 @@ class ResumableTierWriter:
         committed), then raises — the next run() must complete the rest and
         produce a byte-identical tier.
         """
-        pend = self.pending(df)
-        cells = [r[0] for r in pend.select("cell_id").distinct().collect()]
-        cells.sort()
-        if not cells:
+        done = committed_cells(self.spark, self.lineage_dir, self.tier)
+        pend = df.where(~F.col("cell_id").isin(done)) if done else df
+        stats = sorted(cell_stats(pend).collect(), key=lambda r: r["cell_id"])
+        if not stats:
             return 0
-        crash = fail_after_cells is not None and fail_after_cells < len(cells)
-        todo = cells[:fail_after_cells] if crash else cells
-
-        batch = pend.where(F.col("cell_id").isin(todo))
+        crash = fail_after_cells is not None and fail_after_cells < len(stats)
+        todo = stats[:fail_after_cells] if crash else stats
+        if crash:
+            pend = pend.where(F.col("cell_id").isin([r[0] for r in todo]))
         # dynamic partition overwrite: each cell dir replaced atomically,
         # untouched cells preserved — write-temp-then-rename at cell grain.
         (
-            batch.write.mode("overwrite")
+            pend.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("cell_id")
             .parquet(self.out_dir)
         )
-        stats = cell_stats(batch).collect()
         now = time.time()
         rows = [
             (
@@ -245,7 +248,7 @@ class ResumableTierWriter:
                 "committed",
                 now,
             )
-            for r in stats
+            for r in todo
         ]
         self.spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
@@ -259,7 +262,7 @@ class ResumableTierWriter:
         )
         if crash:
             raise RuntimeError(
-                f"simulated crash after {len(todo)} of {len(cells)} cells"
+                f"simulated crash after {len(todo)} of {len(stats)} cells"
             )
         return len(todo)
 

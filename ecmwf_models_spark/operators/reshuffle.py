@@ -15,7 +15,10 @@ Spark-first: the whole transpose is ONE wide shuffle —
 Range partitioning on (cell_id, conv_id) keeps every cell contiguous
 (partition pruning at read ≙ gpi2cell file routing) and every conversation
 clustered inside its cell; the within-partition sort gives the reference's
-on-disk ordering invariant for free in the parquet row groups. At 100 TB
+on-disk ordering invariant for free in the parquet row groups. The range
+count is an upper bound that AQE coalesces: merging ADJACENT ranges keeps
+cells contiguous, so 18.7k turns over 16 cells at 32 ranges write 16 files
+(one <cell>.nc each, as the reference), not 45. At 100 TB
 this is a single full shuffle — unavoidable (it IS the transpose) — and the
 only one in the pipeline; AQE handles skewed cells, and a salt column can
 split a pathologically hot conv across tasks before the final per-cell
@@ -31,7 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..grid import DEFAULT_N_CELLS, with_cell_id
 from .bucket import with_ts_bucket
-from .dedup import latest_final_wins
 
 SILVER_COLS = [
     "cell_id",
@@ -73,6 +75,8 @@ def reshuffle(
       1. repartitionByRange(cell_id, conv_id)  — THE transpose shuffle.
          Range (not hash-by-cell) so a hot cell/conv still splits across
          tasks by conv ranges and parallelism isn't capped at n_cells.
+         An explicit num_partitions is planned as given; None leaves
+         spark.sql.shuffle.partitions as the bound AQE coalesces.
       2. dedup as secondary sort + streaming first-aggregate:
          sortWithinPartitions(cell, conv, turn_idx, is_prelim ASC,
          ingest_ts DESC, payload-hash) puts the winning duplicate first
@@ -113,9 +117,6 @@ def reshuffle(
     partitioning with no extra exchange.
     """
     df = with_cell_id(bronze, n_cells)
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
     salt = []
     if salt_segment_hours:
         df = df.withColumn(
@@ -123,7 +124,12 @@ def reshuffle(
             F.floor(F.unix_timestamp("ts") / (salt_segment_hours * 3600)),
         )
         salt = ["_seg"]
-    ranged = df.repartitionByRange(int(parts), "cell_id", "conv_id", *salt)
+    keys = ("cell_id", "conv_id", *salt)
+    ranged = (
+        df.repartitionByRange(num_partitions, *keys)
+        if num_partitions
+        else df.repartitionByRange(*keys)
+    )
 
     payload = [c for c in bronze.columns if c not in
                ("conv_id", "turn_idx", "is_prelim", "ingest_ts")]

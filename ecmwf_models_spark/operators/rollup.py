@@ -39,8 +39,9 @@ Spark-first: plain hash aggregation — partial (map-side) + final, fully
 whole-stage-codegen'd, no UDFs. first/last use min_by/max_by on the bucket
 timestamp, which re-aggregates exactly (min_by over min_by composes).
 Each cascade step groups by a coarser bucket of the SAME key prefix
-(conv_id, ...), so at 100 TB the daily->monthly shuffle moves only the
-daily aggregate rows (~1/4-1/30 of the previous tier), not raw data.
+(conv_id, ...), so the one conv_id exchange under tier 0 clusters every
+later tier: the whole cascade moves the narrow raw rows once and never
+re-shuffles aggregate state.
 """
 
 from __future__ import annotations
@@ -134,15 +135,19 @@ def rollup_from_raw(
     first_last: bool = True,
     order_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """Tier-0 rollup straight from turn-grain rows."""
+    """Tier-0 rollup straight from turn-grain rows, hash-repartitioned
+    by conv_id first (narrow columns only, AQE-sized). At transcript
+    grain the hourly tier barely reduces, so raw rows cost no more to
+    shuffle than partial states, and HashPartitioning(conv_id) satisfies
+    ClusteredDistribution(conv_id, bucket) for this tier and every later
+    rollup_cascade: the CLI chain plans one rollup exchange, not one per
+    tier (plan-asserted in tests/test_plans.py)."""
+    order_cols = order_cols or (ts_col,)
+    keep = dict.fromkeys(("conv_id", ts_col, *order_cols, *value_cols))
+    base = silver.select(*keep).repartition("conv_id")
     b = F.date_trunc(_TRUNC[tier], F.col(ts_col)).alias("bucket_ts")
-    return silver.groupBy("conv_id", b).agg(
-        *_agg_state(
-            value_cols,
-            F.count(F.lit(1)),
-            first_last,
-            order_cols or (ts_col,),
-        )
+    return base.groupBy("conv_id", b).agg(
+        *_agg_state(value_cols, F.count(F.lit(1)), first_last, order_cols)
     )
 
 
@@ -215,23 +220,11 @@ def rollup_tiers(
     value_cols: tuple[str, ...] = METRICS,
     ts_col: str = "ts",
     first_last: bool = True,
-    one_shuffle: bool = True,
 ) -> dict[str, DataFrame]:
-    """The full cascade. Returns raw-state tier DataFrames (finalize() for
-    serving).
-
-    one_shuffle=True (default) plans the whole cascade behind a SINGLE
-    exchange. The naive chain shuffles three times, and at transcript
-    grain the hourly tier barely reduces (a conversation emits ~one turn
-    per hour bucket), so tier-1's exchange moves 15-field aggregate STATE
-    rows — wider than the raw input. Instead: project the narrow raw
-    columns (conv_id, ts, metrics) and hash-repartition by conv_id once.
-    HashPartitioning(conv_id) satisfies ClusteredDistribution(conv_id,
-    date_trunc(tier, ts)) — rows that agree on (conv_id, bucket) agree on
-    conv_id — so EnsureRequirements inserts no further exchange for ANY
-    tier: hourly, daily and monthly aggregate pipelined in one stage
-    (plan-asserted in tests/test_plans.py). Results are bit-identical to
-    the chained path (int64 sums, min/max/min_by are order-independent).
+    """The full cascade: the rollup_from_raw -> rollup_cascade chain the
+    CLI runs tier by tier, behind rollup_from_raw's one exchange, all
+    three tiers pipelined in one stage. Returns raw-state tier
+    DataFrames (finalize() for serving).
 
     Cluster note: partitioning by conversation holds at any executor
     count and any tier — this is the 100 TB plan shape (one narrow-row
@@ -240,12 +233,7 @@ def rollup_tiers(
     per task stays bounded by the same keys-per-task argument as the
     shuffle-partition sizing rule (session.py).
     """
-    base = silver
-    if one_shuffle:
-        base = silver.select("conv_id", ts_col, *value_cols).repartition(
-            "conv_id"
-        )
-    hourly = rollup_from_raw(base, "hourly", value_cols, ts_col, first_last)
+    hourly = rollup_from_raw(silver, "hourly", value_cols, ts_col, first_last)
     daily = rollup_cascade(hourly, "daily", value_cols, first_last)
     monthly = rollup_cascade(daily, "monthly", value_cols, first_last)
     return {"hourly": hourly, "daily": daily, "monthly": monthly}

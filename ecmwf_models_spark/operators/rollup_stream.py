@@ -280,12 +280,30 @@ def _make_mapper(tier, value_cols, first_last, emit_rows=65_536):
         chunks, buffered = [], 0
         first_open = True  # next closed run is the split's first
         seen = set()  # convs fully closed in this split (the guard)
+        tail = None  # (ts, turn_idx) of the split's last row so far
         for pdf in batches:
             if not len(pdf):
                 continue
             runs = _batch_runs(pdf, bucket_unit, value_cols, first_last)
             m = len(runs["conv_id"])
             rconv = runs["conv_id"]
+
+            # _batch_runs checks (ts, turn_idx) order only inside the
+            # batch: a batch continuing the open conv must not start
+            # before the carried tail key (an earlier bucket implies an
+            # earlier ts), or the carry would close and its bucket be
+            # emitted twice, both runs FINAL
+            edge = pdf.iloc[[0, -1]]
+            edge_ts = edge["_ts"].to_numpy(dtype="datetime64[ns]")
+            edge_ts = edge_ts.view("int64")
+            edge_idx = edge["_idx"].to_numpy(dtype="int64")
+            if (
+                carry is not None
+                and rconv[0] == carry["conv_id"]
+                and (edge_ts[0], edge_idx[0]) < tail
+            ):
+                raise not_contiguous
+            tail = (edge_ts[1], edge_idx[1])
 
             # contiguity guard. factorize codes are ordered by first
             # appearance, so a non-decreasing code sequence over the

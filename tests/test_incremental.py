@@ -114,3 +114,28 @@ def test_extend_uses_persisted_run_kwargs(tmp_path, spark):
     # a second settings write with a newer value wins (latest committed_at)
     write_run_settings(spark, f"{path}/_settings", {"n_cells": 16})
     assert read_run_settings(spark, f"{path}/_settings") == {"n_cells": "16"}
+
+
+def test_extend_affected_cells_match_reshuffle(tmp_path, spark):
+    """extend_silver routes the batch by conv_id alone; the cells it
+    reports are exactly the cells reshuffle(batch) puts rows in, also
+    for convs whose turns are all preliminary."""
+    initial = gen_transcripts(spark, n_conv=40, days=2, turns_per_conv=6)
+    path = str(tmp_path / "silver_aff")
+    write_silver(reshuffle(initial, n_cells=64, num_partitions=4), path)
+
+    finals = initial.where(
+        ~F.col("is_prelim") & (F.col("conv_id") < "conv-000010")
+    )
+    prelim_only = initial.where(
+        F.col("conv_id") >= "conv-000030"
+    ).withColumn("is_prelim", F.lit(True))
+    batch = finals.unionByName(prelim_only)
+
+    def cells(df):
+        return {r[0] for r in df.select("cell_id").distinct().collect()}
+
+    final_cells = cells(reshuffle(finals, n_cells=64))
+    expected = cells(reshuffle(batch, n_cells=64))
+    assert expected - final_cells  # the PRELIM-only convs add cells
+    assert set(extend_silver(spark, path, batch, n_cells=64)) == expected

@@ -66,6 +66,52 @@ def test_crash_and_resume_identical(tmp_path, spark, daily_with_cells):
     assert w2.verify(df)
 
 
+def test_run_evaluates_input_twice(tmp_path, spark, daily_with_cells):
+    """run() passes over its input twice — cell_stats, then the write —
+    for a fresh run and over only the pending cells for a resumed one.
+    A Python UDF filter in the input counts the rows each run evaluates;
+    as a filter it cannot be pruned from a pass that reads only cell_id,
+    and the committed-cell filter is evaluated below it."""
+    rows_per_cell = {
+        r["cell_id"]: r["count"]
+        for r in daily_with_cells.groupBy("cell_id").count().collect()
+    }
+    n = sum(rows_per_cell.values())
+    first5 = sum(rows_per_cell[c] for c in sorted(rows_per_cell)[:5])
+
+    def counted():
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("boolean")
+        def bump(x):
+            acc.add(1)
+            return True
+
+        return acc, daily_with_cells.where(bump("n_turns"))
+
+    def writer(name):
+        return ResumableTierWriter(
+            spark, str(tmp_path / name), str(tmp_path / f"{name}_lin"),
+            tier="daily",
+        )
+
+    acc, df = counted()
+    assert writer("fresh").run(df) == 16
+    assert acc.value == 2 * n
+
+    # crashed run: stats over all 16 cells, write of the first 5
+    acc, df = counted()
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        writer("out").run(df, fail_after_cells=5)
+    assert acc.value == n + first5
+
+    acc, df = counted()
+    w = writer("out")
+    assert w.run(df) == 11
+    assert acc.value == 2 * (n - first5)
+    assert w.verify(df)
+
+
 def test_lineage_rows_complete(tmp_path, spark, daily_with_cells):
     out, lin = str(tmp_path / "o2"), str(tmp_path / "l2")
     w = ResumableTierWriter(

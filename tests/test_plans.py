@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -38,17 +39,42 @@ def test_reshuffle_is_single_shuffle(bronze):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_rollup_cascade_one_exchange_per_tier(bronze):
-    """hourly-from-raw + daily + monthly = exactly 3 aggregation shuffles,
-    each with map-side partial aggregation (partial_ functions present)."""
+def test_rollup_chain_one_rollup_exchange(bronze):
+    """The CLI chain rollup_from_raw -> rollup_cascade -> rollup_cascade
+    over reshuffle: the transpose exchange plus ONE rollup exchange.
+    rollup_from_raw's conv_id repartition clusters every later tier, and
+    every tier stays on codegen'd HashAggregate with map-side partials."""
     silver = reshuffle(bronze)
     hourly = rollup_from_raw(silver, "hourly")
     daily = rollup_cascade(hourly, "daily")
     monthly = rollup_cascade(daily, "monthly")
     plan = plan_of(monthly, "simple")
-    # 1 reshuffle exchange + 3 rollup exchanges
-    assert plan.count("Exchange") == 4, plan
+    assert plan.count("Exchange") == 2, plan
     assert "partial_sum" in plan, plan  # map-side combine confirmed
+    # the reshuffle's dedup is a SortAggregate; the rollup sits above
+    # the conv_id exchange
+    rollup = plan.split("hashpartitioning(conv_id")[0]
+    assert rollup.count("HashAggregate") == 6, plan  # partial+final x 3
+    assert "ObjectHashAggregate" not in rollup, plan
+    assert "SortAggregate" not in rollup, plan
+
+
+def test_reshuffle_one_file_per_cell(bronze, tmp_path):
+    """AQE coalesces the transpose's adjacent ranges: each cell lands in
+    one parquet file (the reference's one <cell>.nc per cell)."""
+    path = tmp_path / "silver"
+    write_silver(reshuffle(bronze, n_cells=16), str(path))
+    cells = sorted(path.glob("cell_id=*"))
+    assert len(cells) == 16
+    for d in cells:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+
+def test_reshuffle_honours_num_partitions(bronze):
+    """An explicit num_partitions is planned as given."""
+    plan = plan_of(reshuffle(bronze, num_partitions=8), "simple")
+    assert re.search(r"rangepartitioning\(cell_id#\d+ ASC NULLS FIRST, "
+                     r"conv_id#\d+ ASC NULLS FIRST, 8\)", plan), plan
 
 
 def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):

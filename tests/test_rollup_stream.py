@@ -141,6 +141,34 @@ def test_stream_rollup_rejects_non_contiguous(spark):
         stream_rollup(df, "daily", value_cols=("m",)).collect()
 
 
+def test_stream_rollup_rejects_unsorted_across_batches(spark):
+    """Each Arrow batch sorted, but the open conv steps back into an
+    earlier hour across the batch boundary: without the carried tail key
+    hour 09 would be emitted twice, both runs FINAL."""
+    hours = ["08:10", "09:10", "10:10", "09:20", "09:40", "11:00"]
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["a"] * len(hours),
+            "turn_idx": range(len(hours)),
+            "ts": pd.to_datetime([f"2024-03-01 {h}" for h in hours]),
+            "m": np.arange(len(hours), dtype="float64"),
+        }
+    )
+    df = spark.createDataFrame(pdf).coalesce(1)
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_key)
+    try:
+        spark.conf.set(batch_key, "3")
+        with pytest.raises(Exception, match="not contiguous"):
+            stream_rollup(df, "hourly", value_cols=("m",)).collect()
+        # the same rows sorted pass the guard, across the same boundary
+        ok = df.orderBy("ts", "turn_idx").coalesce(1)
+        got = stream_rollup(ok, "hourly", value_cols=("m",)).collect()
+        assert sorted(r["n_turns"] for r in got) == [1, 1, 1, 3]
+    finally:
+        spark.conf.set(batch_key, old_batch)
+
+
 def test_stream_rollup_fixed_point_rounding(spark):
     """floor(x*1e6 + 0.5) half-up rounding matches to_micro exactly on
     boundary values (incl. negative halves)."""

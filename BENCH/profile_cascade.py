@@ -12,11 +12,15 @@ earlier suspicion — min_by/max_by forcing ObjectHashAggregate — is
 disproven by the plan: Spark 4 compiles them as DeclarativeAggregates
 and every variant here runs codegen'd HashAggregate.)
 
-This harness runs ONLY the cascade phase (silver pre-written once per
-JVM, not measured) at 8 and 32 pinned cores and dumps per-stage REST
-metrics: executorRunTime, executorCpuTime, jvmGcTime, shuffle
+This harness runs ONLY the cascade phase (rollup_tiers -> monthly
+write; silver pre-written once per JVM, not measured) at 8 and 32
+pinned cores and dumps per-stage REST metrics: executorRunTime, executorCpuTime, jvmGcTime, shuffle
 read/write bytes, spill, task count. The stage whose runTime stays
-flat while its GC share grows is the culprit.
+flat while its GC share grows is the culprit. profile_cascade.json was
+recorded with three variants (chained full-state, chained without
+first/last, one-shuffle); the chained form now plans the same single
+exchange as rollup_tiers, and the narrow-state variant is gone with
+the first/last switch it needed.
 
 Usage: python BENCH/profile_cascade.py [n_conv] > out.json
 """
@@ -44,11 +48,7 @@ def cascade_once():
         reshuffle,
         write_silver,
     )
-    from ecmwf_models_spark.operators.rollup import (
-        finalize,
-        rollup_cascade,
-        rollup_from_raw,
-    )
+    from ecmwf_models_spark.operators.rollup import finalize, rollup_tiers
     from ecmwf_models_spark.session import (
         get_spark,
         sized_shuffle_partitions,
@@ -74,14 +74,9 @@ def cascade_once():
     silver = spark.read.parquet(f"{out}/silver")
 
     # JIT warmup on a slice (unmeasured), same contract as scaling_job
-    finalize(
-        rollup_cascade(
-            rollup_cascade(
-                rollup_from_raw(silver.limit(200_000), "hourly"), "daily"
-            ),
-            "monthly",
-        )
-    ).write.mode("overwrite").parquet(f"{out}/warm")
+    finalize(rollup_tiers(silver.limit(200_000))["monthly"]).write.mode(
+        "overwrite"
+    ).parquet(f"{out}/warm")
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
@@ -92,19 +87,10 @@ def cascade_once():
         ) as r:
             return json.loads(r.read())
 
-    from ecmwf_models_spark.operators.rollup import rollup_tiers
-
-    variant = os.environ.get("PROFILE_CASCADE_VARIANT", "full")
     seen = {s["stageId"] for s in stages()}
     t0 = time.time()
-    if variant == "oneshuf":
-        # production path: single narrow exchange, tiers pipelined
-        monthly = rollup_tiers(silver)["monthly"]
-    else:
-        fl = variant == "full"  # "prim" drops first/last state
-        hourly = rollup_from_raw(silver, "hourly", first_last=fl)
-        daily = rollup_cascade(hourly, "daily", first_last=fl)
-        monthly = rollup_cascade(daily, "monthly", first_last=fl)
+    # production path: single narrow exchange, tiers pipelined
+    monthly = rollup_tiers(silver)["monthly"]
     finalize(monthly).write.mode("overwrite").parquet(f"{out}/monthly")
     wall = round(time.time() - t0, 3)
 
@@ -139,60 +125,47 @@ def cascade_once():
 def main():
     n_conv = sys.argv[1] if len(sys.argv) > 1 else "600000"
     results = []
-    # full    = chained cascade, full state;
-    # prim    = chained, sum/cnt/min/max only (narrower state rows);
-    # oneshuf = production rollup_tiers: ONE narrow exchange by conv_id,
-    #           all tiers pipelined (the round-5 fix).
-    # profile_cascade.json was recorded when the chain shuffled once per
-    # tier (round-4 shape); rollup_from_raw now carries the conv_id
-    # repartition, so full plans the same single exchange as oneshuf.
-    # All three plan as codegen'd HashAggregate (Spark 4 min_by/max_by
-    # are DeclarativeAggregates) — the discriminator is shuffle volume
-    # and state width, not aggregate exec choice.
-    for variant in ("full", "prim", "oneshuf"):
-        for cpus in (8, 32):
-            shm = f"/dev/shm/pcasc_{cpus}"
-            os.makedirs(shm, exist_ok=True)
-            env = dict(os.environ)
-            env.update(
-                SPARK_GRAFT_CPUS=str(cpus),
-                SPARK_GRAFT_OFFHEAP_SIZE="16g",
-                SPARK_DRIVER_MEM="16g",
-                SPARK_LOCAL_DIRS=shm,
-                TMPDIR=shm,
-                BENCH_N_CONV=n_conv,
-                SPARK_GRAFT_FAST_COMMIT="1",
-                PROFILE_CASCADE_CHILD="1",
-                PROFILE_CASCADE_VARIANT=variant,
+    for cpus in (8, 32):
+        shm = f"/dev/shm/pcasc_{cpus}"
+        os.makedirs(shm, exist_ok=True)
+        env = dict(os.environ)
+        env.update(
+            SPARK_GRAFT_CPUS=str(cpus),
+            SPARK_GRAFT_OFFHEAP_SIZE="16g",
+            SPARK_DRIVER_MEM="16g",
+            SPARK_LOCAL_DIRS=shm,
+            TMPDIR=shm,
+            BENCH_N_CONV=n_conv,
+            SPARK_GRAFT_FAST_COMMIT="1",
+            PROFILE_CASCADE_CHILD="1",
+        )
+        pin = (
+            ["taskset", "-c", f"0-{cpus - 1}"]
+            if shutil.which("taskset")
+            else []
+        )
+        try:
+            r = subprocess.run(
+                pin + [sys.executable, os.path.abspath(__file__)],
+                capture_output=True, text=True, env=env, timeout=3600,
             )
-            pin = (
-                ["taskset", "-c", f"0-{cpus - 1}"]
-                if shutil.which("taskset")
-                else []
-            )
-            try:
-                r = subprocess.run(
-                    pin + [sys.executable, os.path.abspath(__file__)],
-                    capture_output=True, text=True, env=env, timeout=3600,
-                )
-            finally:
-                shutil.rmtree(shm, ignore_errors=True)
-            if r.returncode != 0:
-                raise RuntimeError(r.stderr[-3000:])
-            line = [
-                l for l in r.stdout.splitlines() if l.startswith("{")
-            ][-1]
-            res = json.loads(line)
-            res["variant"] = variant
-            results.append(res)
-            cpu = sum(s["cpu_ms"] for s in res["stages"]) / 1000
-            print(
-                f"== {variant} {cpus} cores: cascade "
-                f"{res['cascade_wall_sec']}s, total cpu {cpu:.1f}s",
-                file=sys.stderr,
-            )
-            for st in res["stages"]:
-                print("  ", st, file=sys.stderr)
+        finally:
+            shutil.rmtree(shm, ignore_errors=True)
+        if r.returncode != 0:
+            raise RuntimeError(r.stderr[-3000:])
+        line = [
+            l for l in r.stdout.splitlines() if l.startswith("{")
+        ][-1]
+        res = json.loads(line)
+        results.append(res)
+        cpu = sum(s["cpu_ms"] for s in res["stages"]) / 1000
+        print(
+            f"== {cpus} cores: cascade "
+            f"{res['cascade_wall_sec']}s, total cpu {cpu:.1f}s",
+            file=sys.stderr,
+        )
+        for st in res["stages"]:
+            print("  ", st, file=sys.stderr)
     print(json.dumps(results, indent=1))
 
 

@@ -43,7 +43,6 @@ def pipeline(spark, bronze, out_dir, n_cells, phase_hook=None):
     from ecmwf_models_spark.operators.gapfill import gap_fill
     from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
     from ecmwf_models_spark.operators.rollup import finalize, rollup_tiers
-    from ecmwf_models_spark.operators.rollup_stream import stream_rollup
 
     phases = {}
     t0 = time.time()
@@ -55,23 +54,9 @@ def pipeline(spark, bronze, out_dir, n_cells, phase_hook=None):
 
     t0 = time.time()
     silver = spark.read.parquet(silver_path)
-    if os.environ.get("BENCH_CASCADE", "hash") == "stream":
-        # sequential sorted-run path (rollup_stream): rides the O1 sort
-        # of the silver files — zero wide shuffle, bit-identical states
-        # (tests/test_rollup_stream.py). NOT the default: with the
-        # plan-cache reuse controlled (see profile_stream.py clearCache
-        # note — the first A/B was 10x flattered by reading its own
-        # persisted states across reps), the cold pass costs ~8-12s at
-        # 22.5M turns vs the one-shuffle hash cascade's ~5-10s: the
-        # Arrow->python serialization of every fact row outweighs the
-        # single narrow shuffle it saves. Kept as the measured
-        # counterfactual; a JVM-side sorted-run operator (no python
-        # boundary) is the form that would actually win.
-        monthly = stream_rollup(silver, "monthly")
-    else:
-        # one-shuffle hash cascade: single narrow-row exchange by conv_id,
-        # all three tier aggregations pipelined in one stage
-        monthly = rollup_tiers(silver)["monthly"]
+    # one-shuffle hash cascade: single narrow-row exchange by conv_id,
+    # all three tier aggregations pipelined in one stage
+    monthly = rollup_tiers(silver)["monthly"]
     finalize(monthly).write.mode("overwrite").parquet(f"{out_dir}/monthly")
     phases["rollup_cascade_write"] = round(time.time() - t0, 3)
     if phase_hook:

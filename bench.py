@@ -61,16 +61,6 @@ def _engine_queries(spark, sf_dir):
         # conv_id, all three tier aggregations pipelined in one stage
         return finalize(rollup_tiers(_silver())["monthly"])
 
-    def eng_rollup_stream():
-        # sequential sorted-run path (rollup_stream): rides the O1 sort,
-        # zero wide shuffle, states bit-identical to the hash cascade. Not
-        # the scaling job's default (opt-in BENCH_CASCADE=stream): measured
-        # cold, the hash cascade above is as fast or faster
-        # (BENCH/profile_stream.py A/B with the plan cache cleared)
-        from ecmwf_models_spark.operators.rollup_stream import stream_rollup
-
-        return finalize(stream_rollup(_silver(), "monthly"))
-
     def eng_gapfill():
         return gap_fill(_silver())
 
@@ -96,7 +86,6 @@ def _engine_queries(spark, sf_dir):
     return {
         "eng_reshuffle": eng_reshuffle,
         "eng_rollup_cascade": eng_rollup_cascade,
-        "eng_rollup_stream": eng_rollup_stream,
         "eng_gapfill": eng_gapfill,
         "eng_pack": eng_pack,
         "minhash_lsh_pairs_fast": minhash_lsh_pairs_fast,

@@ -78,29 +78,24 @@ def cmd_reshuffle(args):
 def cmd_rollup(args):
     from .grid import with_cell_id
     from .lineage import ResumableTierWriter
-    from .operators.rollup import finalize, rollup_cascade, rollup_from_raw
+    from .operators.rollup import TIERS, finalize, rollup_tiers
 
-    spark = _spark(args)
-    silver = spark.read.parquet(args.silver)
     tiers = args.tiers.split(",")
-    lower = None
-    for tier in ("hourly", "daily", "monthly"):
+    unknown = sorted(set(tiers) - set(TIERS))
+    if unknown:
+        raise SystemExit(f"rollup: unknown tiers {unknown}; choose from {TIERS}")
+    spark = _spark(args)
+    frames = rollup_tiers(spark.read.parquet(args.silver))
+    for tier in TIERS:
         if tier not in tiers:
             continue
-        df = (
-            rollup_from_raw(silver, tier)
-            if lower is None
-            else rollup_cascade(lower, tier)
-        )
-        lower = df
-        out = finalize(df)
         w = ResumableTierWriter(
             spark,
             f"{args.out}/{tier}",
             f"{args.out}/_lineage",
             tier=tier,
         )
-        n = w.run(with_cell_id(out, args.n_cells))
+        n = w.run(with_cell_id(finalize(frames[tier]), args.n_cells))
         print(f"tier {tier}: {n} cells committed")
 
 

@@ -88,11 +88,3 @@ def extend_silver(
         .parquet(silver_path)
     )
     return affected
-
-
-def affected_buckets(new_bronze: DataFrame, tier_trunc: str) -> DataFrame:
-    """Distinct (conv_id, bucket) a batch touches at a given tier — the
-    re-rollup scope."""
-    return new_bronze.select(
-        "conv_id", F.date_trunc(tier_trunc, "ts").alias("bucket_ts")
-    ).distinct()

@@ -83,22 +83,16 @@ def _nan_to_null(c):
     return F.when(F.isnan(col), F.lit(None)).otherwise(col)
 
 
-def _agg_state(value_cols, n_turns_expr, first_last=True, order_cols=("ts",)):
-    # first/last ordering. With the default single-column ("ts",) order,
-    # exact-ts ties inside one bucket leave the winner to Spark's
-    # min_by/max_by tie rule (LAST row encountered — i.e. encounter
-    # order, deterministic only for sorted single-partition groups).
-    # Passing order_cols=("ts", "turn_idx") makes the winner fully
-    # order-defined (the BASELINE input_hint's "stable (conv_id,
-    # turn_idx) ordering" contract) and is what rollup_stream's
-    # sequential path reproduces bit-for-bit.
-    if len(order_cols) == 1:
-        ordering = F.col(order_cols[0])
-    else:
-        ordering = F.struct(*[F.col(o) for o in order_cols])
-    aggs = [n_turns_expr.alias("n_turns")]
+def _agg_state(value_cols):
+    aggs = [F.count(F.lit(1)).alias("n_turns")]
     for c in value_cols:
         v = _nan_to_null(c)
+        # min_by/max_by skip NULL-valued rows, so a NaN row on the
+        # bucket's ts boundary never becomes first/last. Exact-ts ties
+        # inside one bucket go by min_by/max_by encounter order; a
+        # struct (ts, turn_idx) key would break them stably but plans
+        # SortAggregate instead of the codegen'd HashAggregate.
+        ts = F.when(v.isNotNull(), F.col("ts"))
         aggs += [
             F.sum(to_micro(c)).alias(f"{c}_sum"),
             # count the same NaN-nulled expression the sum uses, so
@@ -106,24 +100,9 @@ def _agg_state(value_cols, n_turns_expr, first_last=True, order_cols=("ts",)):
             F.count(to_micro(c)).alias(f"{c}_cnt"),
             F.min(v).alias(f"{c}_min"),
             F.max(v).alias(f"{c}_max"),
+            F.min_by(v, ts).alias(f"{c}_first"),
+            F.max_by(v, ts).alias(f"{c}_last"),
         ]
-        if first_last:
-            # min_by/max_by skip NULL-valued rows, so a NaN row on the
-            # bucket's ts boundary no longer becomes first/last. NOTE:
-            # in Spark 4 min_by/max_by are DeclarativeAggregates
-            # (valueWithExtremumOrdering primitive buffers) — the rollup
-            # stays a codegen'd HashAggregate either way; first_last=False
-            # is a narrower-state variant for consumers that only need
-            # sum/cnt/min/max (BENCH/profile_cascade.py uses it to
-            # isolate state-width effects at 32 threads).
-            aggs += [
-                F.min_by(v, F.when(v.isNotNull(), ordering)).alias(
-                    f"{c}_first"
-                ),
-                F.max_by(v, F.when(v.isNotNull(), ordering)).alias(
-                    f"{c}_last"
-                ),
-            ]
     return aggs
 
 
@@ -131,9 +110,6 @@ def rollup_from_raw(
     silver: DataFrame,
     tier: str = "hourly",
     value_cols: tuple[str, ...] = METRICS,
-    ts_col: str = "ts",
-    first_last: bool = True,
-    order_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Tier-0 rollup straight from turn-grain rows, hash-repartitioned
     by conv_id first (narrow columns only, AQE-sized). At transcript
@@ -142,20 +118,15 @@ def rollup_from_raw(
     ClusteredDistribution(conv_id, bucket) for this tier and every later
     rollup_cascade: the CLI chain plans one rollup exchange, not one per
     tier (plan-asserted in tests/test_plans.py)."""
-    order_cols = order_cols or (ts_col,)
-    keep = dict.fromkeys(("conv_id", ts_col, *order_cols, *value_cols))
-    base = silver.select(*keep).repartition("conv_id")
-    b = F.date_trunc(_TRUNC[tier], F.col(ts_col)).alias("bucket_ts")
-    return base.groupBy("conv_id", b).agg(
-        *_agg_state(value_cols, F.count(F.lit(1)), first_last, order_cols)
-    )
+    base = silver.select("conv_id", "ts", *value_cols).repartition("conv_id")
+    b = F.date_trunc(_TRUNC[tier], F.col("ts")).alias("bucket_ts")
+    return base.groupBy("conv_id", b).agg(*_agg_state(value_cols))
 
 
 def rollup_cascade(
     lower: DataFrame,
     to_tier: str,
     value_cols: tuple[str, ...] = METRICS,
-    first_last: bool = True,
 ) -> DataFrame:
     """Tier k -> tier k+1 by re-aggregating carried state. Exact:
     sum(sum), sum(cnt), min(min), max(max), first = min_by(first, bucket),
@@ -168,27 +139,20 @@ def rollup_cascade(
             F.sum(f"{c}_cnt").alias(f"{c}_cnt"),
             F.min(f"{c}_min").alias(f"{c}_min"),
             F.max(f"{c}_max").alias(f"{c}_max"),
-        ]
-        if first_last:
             # Mirror the tier-0 NaN guard: an all-NaN lower bucket carries
             # NULL first/last, and bucket_ts is never NULL, so an unguarded
             # min_by/max_by could pick that NULL over a sibling bucket's
             # real value. Ordering by a ts nulled-out alongside the value
             # keeps NaN rows invisible at every tier.
-            aggs += [
-                F.min_by(
-                    f"{c}_first",
-                    F.when(
-                        F.col(f"{c}_first").isNotNull(), F.col("bucket_ts")
-                    ),
-                ).alias(f"{c}_first"),
-                F.max_by(
-                    f"{c}_last",
-                    F.when(
-                        F.col(f"{c}_last").isNotNull(), F.col("bucket_ts")
-                    ),
-                ).alias(f"{c}_last"),
-            ]
+            F.min_by(
+                f"{c}_first",
+                F.when(F.col(f"{c}_first").isNotNull(), F.col("bucket_ts")),
+            ).alias(f"{c}_first"),
+            F.max_by(
+                f"{c}_last",
+                F.when(F.col(f"{c}_last").isNotNull(), F.col("bucket_ts")),
+            ).alias(f"{c}_last"),
+        ]
     return lower.groupBy("conv_id", b).agg(*aggs)
 
 
@@ -208,23 +172,20 @@ def finalize(df: DataFrame, value_cols: tuple[str, ...] = METRICS) -> DataFrame:
             f"{c}_sum", F.col(f"{c}_sum").cast("double") / MICRO
         )
         for suffix in ("min", "max", "first", "last"):
-            if f"{c}_{suffix}" in df.columns:  # first_last=False tiers
-                out = out.withColumn(
-                    f"{c}_{suffix}", F.col(f"{c}_{suffix}").cast("float")
-                )
+            out = out.withColumn(
+                f"{c}_{suffix}", F.col(f"{c}_{suffix}").cast("float")
+            )
     return out
 
 
 def rollup_tiers(
     silver: DataFrame,
     value_cols: tuple[str, ...] = METRICS,
-    ts_col: str = "ts",
-    first_last: bool = True,
 ) -> dict[str, DataFrame]:
-    """The full cascade: the rollup_from_raw -> rollup_cascade chain the
-    CLI runs tier by tier, behind rollup_from_raw's one exchange, all
-    three tiers pipelined in one stage. Returns raw-state tier
-    DataFrames (finalize() for serving).
+    """The one cascade (the CLI writes it tier by tier): rollup_from_raw
+    -> rollup_cascade -> rollup_cascade behind rollup_from_raw's one
+    exchange, all three tiers pipelined in one stage. Returns raw-state
+    tier DataFrames (finalize() for serving).
 
     Cluster note: partitioning by conversation holds at any executor
     count and any tier — this is the 100 TB plan shape (one narrow-row
@@ -233,7 +194,7 @@ def rollup_tiers(
     per task stays bounded by the same keys-per-task argument as the
     shuffle-partition sizing rule (session.py).
     """
-    hourly = rollup_from_raw(silver, "hourly", value_cols, ts_col, first_last)
-    daily = rollup_cascade(hourly, "daily", value_cols, first_last)
-    monthly = rollup_cascade(daily, "monthly", value_cols, first_last)
+    hourly = rollup_from_raw(silver, "hourly", value_cols)
+    daily = rollup_cascade(hourly, "daily", value_cols)
+    monthly = rollup_cascade(daily, "monthly", value_cols)
     return {"hourly": hourly, "daily": daily, "monthly": monthly}

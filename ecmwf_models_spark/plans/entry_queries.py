@@ -137,65 +137,6 @@ def _oracle_rollup(trunc: str) -> str:
     """
 
 
-def q_rollup_hourly_stream(spark, sf_dir):
-    """S9+A1 flagship physical path: sequential sorted-run rollup
-    (operators/rollup_stream.py stream_rollup) — zero wide shuffle over
-    the fact rows once they are O1-sorted; only <=2 boundary runs per
-    input split are re-merged. Values are the SAME finalize-ready
-    states as rollup_hourly; first/last use the composite
-    (ts, event_id) order (rollup_from_raw(order_cols=...)), so exact-ts
-    ties resolve to the stable-order winner, matching the ordered
-    aggregates in the DuckDB twin below."""
-    from ..operators.rollup import finalize
-    from ..operators.rollup_stream import stream_rollup
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        "ts",
-        F.col("event_id").alias("turn_idx"),
-        "value",
-    )
-    # establish the O1 silver invariant the operator requires: each conv
-    # in one partition, rows (ts, turn_idx)-sorted within it (the events
-    # shim stands in for reshuffle's already-sorted cell files)
-    sorted_ev = ev.repartitionByRange(8, "conv_id").sortWithinPartitions(
-        "conv_id", "ts", "turn_idx"
-    )
-    fin = finalize(
-        stream_rollup(sorted_ev, "hourly", value_cols=("value",)),
-        value_cols=("value",),
-    )
-    return fin.select(
-        F.col("conv_id").alias("user_id"),
-        _fmt("bucket_ts").alias("bucket_ts"),
-        F.col("n_turns").alias("n_events"),
-        F.col("value_sum"),
-        F.col("value_avg").cast("double").alias("value_avg"),
-        F.col("value_min").cast("double").alias("value_min"),
-        F.col("value_max").cast("double").alias("value_max"),
-        F.col("value_first").cast("double").alias("value_first"),
-        F.col("value_last").cast("double").alias("value_last"),
-    )
-
-
-_MICRO_SQL = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
-ORACLE_ROLLUP_STREAM = f"""
-SELECT CAST(user_id AS VARCHAR) AS user_id,
-       strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket_ts,
-       count(*) AS n_events,
-       CAST(sum({_MICRO_SQL}) AS DOUBLE) / 1000000 AS value_sum,
-       CAST(CAST(CAST(sum({_MICRO_SQL}) AS DOUBLE) / 1000000
-                 / count({_MICRO_SQL}) AS REAL) AS DOUBLE) AS value_avg,
-       CAST(CAST(min(value) AS REAL) AS DOUBLE) AS value_min,
-       CAST(CAST(max(value) AS REAL) AS DOUBLE) AS value_max,
-       CAST(CAST(first(value ORDER BY ts, event_id) AS REAL) AS DOUBLE)
-           AS value_first,
-       CAST(CAST(last(value ORDER BY ts, event_id) AS REAL) AS DOUBLE)
-           AS value_last
-FROM events GROUP BY 1, 2
-"""
-
-
 def q_bucket_6h(spark, sf_dir):
     """A2: assignment to the regular 6-hourly grid
     (operators/bucket.py bucket_col) — global per-bucket counts."""
@@ -2560,7 +2501,6 @@ ORDER BY cos_sim DESC, b.vec_id LIMIT 10
 
 QUERIES = {
     "rollup_hourly": q_rollup_hourly,
-    "rollup_hourly_stream": q_rollup_hourly_stream,
     "rollup_daily_from_hourly": q_rollup_daily_from_hourly,
     "rollup_monthly_from_daily": q_rollup_monthly_from_daily,
     "bucket_6h": q_bucket_6h,
@@ -2620,7 +2560,6 @@ QUERIES = {
 
 ORACLES = {
     "rollup_hourly": _oracle_rollup("hour"),
-    "rollup_hourly_stream": ORACLE_ROLLUP_STREAM,
     "rollup_daily_from_hourly": _oracle_rollup("day"),
     "rollup_monthly_from_daily": _oracle_rollup("month"),
     "bucket_6h": ORACLE_BUCKET_6H,

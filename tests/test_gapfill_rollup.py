@@ -201,6 +201,8 @@ def test_nan_metric_excluded_from_all_carried_stats(spark):
     from ecmwf_models_spark.operators.rollup import finalize, rollup_from_raw
 
     rows = [
+        # NULL on the bucket's FIRST timestamp: must not become first
+        ("c1", dt.datetime(2024, 1, 1, 0, 1), None, 1.0),
         ("c1", dt.datetime(2024, 1, 1, 0, 5), 2.0, 1.0),
         ("c1", dt.datetime(2024, 1, 1, 0, 35), 4.0, 0.0),
         # NaN on the bucket's LAST timestamp: poisons max and max_by
@@ -211,11 +213,27 @@ def test_nan_metric_excluded_from_all_carried_stats(spark):
         rows, "conv_id string, ts timestamp, text_len double, tool_call double"
     )
     r = finalize(rollup_from_raw(silver, "hourly")).collect()[0]
+    assert r["n_turns"] == 4
     assert r["text_len_min"] == 2.0
     assert r["text_len_max"] == 4.0 and not math.isnan(r["text_len_max"])
     assert r["text_len_first"] == 2.0
     assert r["text_len_last"] == 4.0 and not math.isnan(r["text_len_last"])
     assert r["text_len_cnt"] == 2 and r["text_len_sum"] == 6.0
+
+
+def test_to_micro_rounds_half_up_at_boundaries(spark):
+    """Sums carry floor(x*1e6 + 0.5): halves round UP, also negative
+    ones (-0.5 micro -> 0, not -1), the same int64 the DuckDB oracle
+    computes."""
+    vals = [0.0000005, -0.0000005, 1.9999995, 123.4567894999]
+    rows = [
+        ("c", dt.datetime(2024, 3, 1, 0, i), v) for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, ts timestamp, m double")
+    r = rollup_from_raw(df, "hourly", value_cols=("m",)).collect()[0]
+    # 1 + 0 + 2_000_000 + 123_456_789
+    assert r["m_sum"] == 125_456_790
+    assert r["m_cnt"] == 4
 
 
 def test_all_nan_hour_invisible_to_cascade_first_last(spark):

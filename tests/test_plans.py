@@ -14,6 +14,7 @@ import contextlib
 import io
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
@@ -194,3 +195,45 @@ def test_rollup_tiers_single_exchange(bronze):
     assert plan.count("HashAggregate") == 6, plan  # partial+final x 3
     assert "ObjectHashAggregate" not in plan, plan
     assert "SortAggregate" not in plan, plan
+
+
+def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
+    """`cli rollup` hands each tier writer rollup_tiers' frame, so a tier
+    subset still cascades through the in-flight lower tiers behind the
+    one exchange; an unknown tier name exits before any write."""
+    from ecmwf_models_spark import cli
+    from ecmwf_models_spark.grid import with_cell_id
+    from ecmwf_models_spark.lineage import ResumableTierWriter
+    from ecmwf_models_spark.operators.rollup import finalize, rollup_tiers
+
+    spark = bronze.sparkSession
+    path = str(tmp_path / "silver")
+    write_silver(reshuffle(bronze, n_cells=16), path)
+    written = {}
+
+    def capture(self, df):
+        written[self.tier] = df
+        return 0
+
+    monkeypatch.setattr(cli, "_spark", lambda args: spark)
+    monkeypatch.setattr(ResumableTierWriter, "run", capture)
+
+    def rollup(tiers):
+        cli.main(["rollup", "--silver", path, "--out",
+                  str(tmp_path / "tiers"), "--n-cells", "16",
+                  "--tiers", tiers])
+
+    rollup("daily")
+    assert list(written) == ["daily"]
+    want = rollup_tiers(spark.read.parquet(path))["daily"]
+    want = with_cell_id(finalize(want), 16)
+    got, want = (
+        re.sub(r"#\d+|plan_id=\d+", "", plan_of(df, "simple"))
+        for df in (written["daily"], want)
+    )
+    assert got == want, got
+    assert got.count("Exchange") == 1, got
+    written.clear()
+    with pytest.raises(SystemExit):
+        rollup("hourly,bogus")
+    assert written == {}

@@ -8,9 +8,14 @@ download / update_img / reshuffle / update_ts) mapped to the engine:
     python -m ecmwf_models_spark.cli read      --silver DIR --conv-id ID
     python -m ecmwf_models_spark.cli update-img --bronze DIR --out DIR
     python -m ecmwf_models_spark.cli remap     --field DIR --out DIR --method con2 --n-src 64 --n-dst 24
-    python -m ecmwf_models_spark.cli ann-index --embeddings DIR --out DIR
+    python -m ecmwf_models_spark.cli ann-index --embeddings DIR --out DIR [--method cp|ivf]
     python -m ecmwf_models_spark.cli ann-query --index DIR --query 0.1,0.2,... --k 10
     python -m ecmwf_models_spark.cli bench     [--sf-dir DIR --cpus N]
+
+Commands over a written table take the settings that fix its layout from
+the table's `_settings` (lineage.write_run_settings): `rollup`, `extend`
+and `read` the silver's n_cells, `ann-query` the index's method and
+table count. A table without them is refused.
 
 On a real cluster each subcommand is the driver program for
 `spark-submit --py-files ecmwf_models_spark.zip`.
@@ -26,6 +31,22 @@ def _spark(args):
     from .session import get_spark
 
     return get_spark("cli", cores=args.cpus)
+
+
+def _run_settings(spark, path: str, required: list[str]) -> dict:
+    """The settings recorded in <path>/_settings by the command that wrote
+    `path`; exits non-zero when any of `required` is missing."""
+    from .lineage import read_run_settings
+
+    stored = read_run_settings(spark, f"{path}/_settings")
+    missing = [k for k in required if k not in stored]
+    if missing:
+        raise SystemExit(f"{path}/_settings records no {missing}")
+    return stored
+
+
+def _silver_n_cells(spark, silver: str) -> int:
+    return int(_run_settings(spark, silver, ["n_cells"])["n_cells"])
 
 
 def cmd_ingest(args):
@@ -62,8 +83,8 @@ def cmd_reshuffle(args):
         salt_segment_hours=args.salt_segment_hours,
     )
     write_silver(silver, args.out)
-    # the overview.yml parameter block: extend/read resume with THESE
-    # kwargs unless explicitly overridden (reference reshuffle.py:280-295)
+    # the overview.yml parameter block: rollup/extend/read route with
+    # THIS grid (reference reshuffle.py:280-295)
     write_run_settings(
         spark,
         f"{args.out}/_settings",
@@ -85,6 +106,7 @@ def cmd_rollup(args):
     if unknown:
         raise SystemExit(f"rollup: unknown tiers {unknown}; choose from {TIERS}")
     spark = _spark(args)
+    n_cells = _silver_n_cells(spark, args.silver)
     frames = rollup_tiers(spark.read.parquet(args.silver))
     for tier in TIERS:
         if tier not in tiers:
@@ -95,7 +117,7 @@ def cmd_rollup(args):
             f"{args.out}/_lineage",
             tier=tier,
         )
-        n = w.run(with_cell_id(finalize(frames[tier]), args.n_cells))
+        n = w.run(with_cell_id(finalize(frames[tier]), n_cells))
         print(f"tier {tier}: {n} cells committed")
 
 
@@ -103,22 +125,18 @@ def cmd_extend(args):
     from .incremental import extend_silver
 
     spark = _spark(args)
+    n_cells = _silver_n_cells(spark, args.silver)
     new_bronze = spark.read.parquet(args.bronze)
-    cells = extend_silver(spark, args.silver, new_bronze, n_cells=args.n_cells)
+    cells = extend_silver(spark, args.silver, new_bronze, n_cells=n_cells)
     print(f"extended {len(cells)} cells: {sorted(cells)[:20]}")
 
 
 def cmd_read(args):
-    from .lineage import read_run_settings
     from .operators.pointread import TsReader
 
     spark = _spark(args)
-    n_cells = args.n_cells
-    if n_cells is None:
-        stored = read_run_settings(spark, f"{args.silver}/_settings")
-        n_cells = int(stored.get("n_cells", 64))
-    r = TsReader(spark, args.silver, n_cells=n_cells)
-    pdf = r.read(args.conv_id)
+    n_cells = _silver_n_cells(spark, args.silver)
+    pdf = TsReader(spark, args.silver, n_cells=n_cells).read(args.conv_id)
     print(pdf.to_string())
 
 
@@ -212,14 +230,16 @@ def cmd_remap(args):
 
 def cmd_ann_index(args):
     """Materialize an ANN index: embeddings written partitioned by the
-    probe key (lsh_bucket, ivf_cell, or per-table cp_bucket trees) so
-    queries become directory-level partition pruning. IVF persists its
-    quantizer under _quantizer."""
+    probe key (per-table cp_bucket trees, or ivf_cell) so queries become
+    directory-level partition pruning. IVF persists its quantizer under
+    _quantizer. The method (and cp's table count) go to <out>/_settings,
+    so ann-query probes the index as it was built."""
     from .functions import similarity as S
+    from .lineage import write_run_settings
 
     spark = _spark(args)
     emb = spark.read.parquet(args.embeddings)
-    if args.method in ("lsh", "cp"):
+    if args.method == "cp":
         dim = args.dim
         if not dim:
             first = emb.select(args.vec_col).first()
@@ -229,21 +249,18 @@ def cmd_ann_index(args):
                     "provide data"
                 )
             dim = len(first[0])
-        if args.method == "cp":
-            S.write_cp_index(
-                emb, args.out, dim, n_tables=args.n_tables,
-                id_col=args.id_col, vec_col=args.vec_col,
-            )
-            print(
-                f"ann-index: {args.out} (cp, dim={dim}, "
-                f"tables={args.n_tables})"
-            )
-            return
-        S.write_ann_index(
-            emb, args.out, dim, n_planes=args.n_planes,
-            vec_col=args.vec_col,
+        S.write_cp_index(
+            emb, args.out, dim, n_tables=args.n_tables,
+            id_col=args.id_col, vec_col=args.vec_col,
         )
-        print(f"ann-index: {args.out} (dim={dim}, planes={args.n_planes})")
+        write_run_settings(
+            spark, f"{args.out}/_settings",
+            {"method": "cp", "n_tables": args.n_tables},
+        )
+        print(
+            f"ann-index: {args.out} (cp, dim={dim}, "
+            f"tables={args.n_tables})"
+        )
     else:
         if emb.select(args.vec_col).first() is None:
             raise SystemExit("ann-index: embeddings table is empty")
@@ -255,6 +272,7 @@ def cmd_ann_index(args):
                 emb, cents, args.lloyd_iters, vec_col=args.vec_col
             )
         S.write_ivf_index(emb, args.out, cents, vec_col=args.vec_col)
+        write_run_settings(spark, f"{args.out}/_settings", {"method": "ivf"})
         print(
             f"ann-index: {args.out} (ivf, centroids={len(cents)}, "
             f"lloyd_iters={args.lloyd_iters})"
@@ -262,30 +280,20 @@ def cmd_ann_index(args):
 
 
 def cmd_ann_query(args):
-    """Query a materialized ANN index (cosine top-k; LSH multiprobe or
-    IVF n-probe)."""
+    """Query a materialized ANN index (cosine top-k; cp --m-probe or IVF
+    --n-probe), with the method and table count the index recorded."""
     from .functions import similarity as S
 
     spark = _spark(args)
     qv = [float(x) for x in args.query.split(",")]
-    if args.method == "lsh":
-        out = S.ann_topk_lsh_indexed(
-            spark,
-            args.index,
-            qv,
-            k=args.k,
-            n_planes=args.n_planes,
-            multiprobe_hamming=args.multiprobe,
-            id_col=args.id_col,
-            vec_col=args.vec_col,
-        )
-    elif args.method == "cp":
+    stored = _run_settings(spark, args.index, ["method"])
+    if stored["method"] == "cp":
         out = S.ann_topk_cp_indexed(
             spark,
             args.index,
             qv,
             k=args.k,
-            n_tables=args.n_tables,
+            n_tables=int(stored["n_tables"]),
             m_probe=args.m_probe,
             id_col=args.id_col,
             vec_col=args.vec_col,
@@ -346,26 +354,16 @@ def main(argv=None):
     s.add_argument("--silver", required=True)
     s.add_argument("--out", required=True)
     s.add_argument("--tiers", default="hourly,daily,monthly")
-    s.add_argument("--n-cells", type=int, default=64)
     s.set_defaults(fn=cmd_rollup)
 
     s = sub.add_parser("extend")
     s.add_argument("--silver", required=True)
     s.add_argument("--bronze", required=True)
-    s.add_argument(
-        "--n-cells", type=int, default=None,
-        help="default: the value persisted at reshuffle time "
-        "(<silver>/_settings); pass explicitly to override",
-    )
     s.set_defaults(fn=cmd_extend)
 
     s = sub.add_parser("read")
     s.add_argument("--silver", required=True)
     s.add_argument("--conv-id", required=True)
-    s.add_argument(
-        "--n-cells", type=int, default=None,
-        help="default: the value persisted at reshuffle time",
-    )
     s.set_defaults(fn=cmd_read)
 
     s = sub.add_parser("update-img")
@@ -402,10 +400,12 @@ def main(argv=None):
     s = sub.add_parser("ann-index")
     s.add_argument("--embeddings", required=True)
     s.add_argument("--out", required=True)
-    s.add_argument("--method", choices=("lsh", "ivf", "cp"), default="lsh")
+    s.add_argument(
+        "--method", choices=("cp", "ivf"), default="cp",
+        help="cp (default): near-random corpora; ivf: clustered corpora",
+    )
     s.add_argument("--dim", type=int, default=None,
-                   help="lsh/cp: default probed from the first row")
-    s.add_argument("--n-planes", type=int, default=8)
+                   help="cp: default probed from the first row")
     s.add_argument("--n-tables", type=int, default=12)
     s.add_argument("--n-centroids", type=int, default=16)
     s.add_argument("--lloyd-iters", type=int, default=0)
@@ -416,13 +416,9 @@ def main(argv=None):
     s = sub.add_parser("ann-query")
     s.add_argument("--index", required=True)
     s.add_argument("--query", required=True, help="comma-separated floats")
-    s.add_argument("--method", choices=("lsh", "ivf", "cp"), default="lsh")
     s.add_argument("--k", type=int, default=10)
-    s.add_argument("--n-planes", type=int, default=8)
-    s.add_argument("--n-tables", type=int, default=12)
-    s.add_argument("--multiprobe", type=int, default=1)
-    s.add_argument("--n-probe", type=int, default=4)
-    s.add_argument("--m-probe", type=int, default=4)
+    s.add_argument("--n-probe", type=int, default=4, help="ivf")
+    s.add_argument("--m-probe", type=int, default=4, help="cp")
     s.add_argument("--id-col", default="vec_id")
     s.add_argument("--vec-col", default="embedding")
     s.set_defaults(fn=cmd_ann_query)

@@ -360,7 +360,7 @@ def image_features(media: DataFrame, resize_to: tuple[int, int] = (4, 4)) -> Dat
 
 def video_frame_features(media: DataFrame, every_k: int = 2) -> DataFrame:
     """Decode -> sample -> per-frame features for video rows: one row per
-    SAMPLED frame (same stride as frame_sample) with the frame's mean
+    SAMPLED frame (frames 0, every_k, 2*every_k, ...) with the frame's mean
     R/G/B. The DECODE is real (functions/gif.py: full LZW, compositing,
     transparency); channel means are exact integer sums divided once,
     bit-reproducible in any engine — what lets the SQL oracle
@@ -406,23 +406,6 @@ def video_frame_features(media: DataFrame, every_k: int = 2) -> DataFrame:
             yield pd.concat(frames_out, ignore_index=True)
 
     return media.mapInPandas(_proc, schema=out_schema)
-
-
-def frame_sample(media: DataFrame, every_k: int = 2) -> DataFrame:
-    """Video frame sampling plumbing: one row per sampled frame index.
-    Pure built-ins (sequence + explode); video_frame_features carries
-    the real per-frame decode."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0), F.col("n_frames") - 1, F.lit(every_k)
-                )
-            ).alias("frame_idx"),
-        )
-    )
 
 
 def audio_features(media: DataFrame, win_ms: int = 25) -> DataFrame:
@@ -479,15 +462,3 @@ def audio_features(media: DataFrame, win_ms: int = 25) -> DataFrame:
             yield pd.concat(frames, ignore_index=True)
 
     return media.mapInPandas(_proc, schema=out_schema)
-
-
-def audio_window_plumbing(media: DataFrame, win_ms: int = 25) -> DataFrame:
-    """Audio windowing metadata (window count per clip from sample_rate) —
-    pure built-in arithmetic; audio_features carries the real decode."""
-    return media.where(F.col("kind") == "audio").select(
-        "media_id",
-        "sample_rate",
-        F.floor(
-            F.col("sample_rate") * F.lit(win_ms) / F.lit(1000.0)
-        ).cast("int").alias("samples_per_window"),
-    )

@@ -62,17 +62,19 @@ def round3(c: Column) -> Column:
 
 
 def is_sorted_within(
-    df: DataFrame, part_cols: list[str], order_col: str
+    df: DataFrame, part_cols: list[str], order_cols: list[str], value_col: str
 ) -> DataFrame:
-    """Per-group monotonicity check (is_sorted, utils.py:419-421):
-    one row per group with sorted:boolean, via lag + bool_and."""
-    w = Window.partitionBy(*part_cols).orderBy(order_col)
+    """Per-group monotonicity check (is_sorted, utils.py:419-421): within
+    each part_cols group, in order_cols sequence order, does value_col
+    never decrease? One row per group with sorted:boolean, via lag +
+    bool_and."""
+    w = Window.partitionBy(*part_cols).orderBy(*order_cols)
     return (
-        df.withColumn("_prev", F.lag(order_col).over(w))
+        df.withColumn("_prev", F.lag(value_col).over(w))
         .groupBy(*part_cols)
         .agg(
             F.bool_and(
-                F.col("_prev").isNull() | (F.col(order_col) >= F.col("_prev"))
+                F.col("_prev").isNull() | (F.col(value_col) >= F.col("_prev"))
             ).alias("sorted")
         )
     )

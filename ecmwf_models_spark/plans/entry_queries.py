@@ -398,17 +398,10 @@ FROM events GROUP BY 1
 def q_sortedness_check(spark, sf_dir):
     """O1 ordering invariant check (functions/scalar.py is_sorted_within):
     is event_id monotone when ordered by ts, per user?"""
+    from ..functions.scalar import is_sorted_within
+
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("_prev", F.lag("event_id").over(w))
-        .groupBy("user_id")
-        .agg(
-            F.bool_and(
-                F.col("_prev").isNull() | (F.col("event_id") >= F.col("_prev"))
-            ).alias("sorted")
-        )
-    )
+    return is_sorted_within(ev, ["user_id"], ["ts", "event_id"], "event_id")
 
 
 ORACLE_SORTED = """
@@ -702,29 +695,6 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10
 """
 
 
-def q_embedding_norms(spark, sf_dir):
-    """Vector math via higher-order functions: per-label avg L2 norm."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    n = F.count(F.lit(1))
-    return emb.groupBy("label").agg(
-        R6(F.sum(SIM.norm(F.col("embedding")).cast("decimal(38,18)"))
-           .cast("double") / n).alias("avg_norm"),
-        n.alias("n_vecs"),
-    )
-
-
-ORACLE_EMB_NORMS = """
-SELECT label,
-       round({s} / count(*), 6) AS avg_norm,
-       count(*) AS n_vecs
-FROM embeddings GROUP BY 1
-""".format(
-    s=_dsum("sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))")
-)
-
-
 # ---------------------------------------- portable-hash dedup (oracled)
 
 def q_minhash_lsh_pairs(spark, sf_dir):
@@ -803,13 +773,6 @@ SELECT doc_id_a, doc_id_b, jaccard FROM (
 """
 
 
-def q_simhash_docs(spark, sf_dir):
-    """SimHash fingerprints, portable md5 60-bit variant (one aggregation,
-    no per-bit explode; production default is 64-bit xxhash64)."""
-    docs = _t(spark, sf_dir, "documents")
-    return TXT.simhash(docs, n_bits=60, portable=True)
-
-
 _SH_BIT_SUMS = ",\n         ".join(
     f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
     for b in range(60)
@@ -817,24 +780,6 @@ _SH_BIT_SUMS = ",\n         ".join(
 _SH_ASSEMBLE = "\n         + ".join(
     f"CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(60)
 )
-
-ORACLE_SIMHASH = f"""
-WITH tok AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5('0:' || tok), 1, 15))::BIGINT AS h
-  FROM tok
-), s AS (
-  SELECT doc_id,
-         {_SH_BIT_SUMS}
-  FROM h GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST({_SH_ASSEMBLE} AS BIGINT) AS simhash
-FROM s
-"""
-
 
 def q_simhash_pairs(spark, sf_dir):
     """SimHash near-dup PAIRS: quarter-width pigeonhole blocking (for
@@ -1571,53 +1516,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-# ------------------------------------------- multimodal plumbing (oracle)
-
-def q_media_plumbing(spark, sf_dir):
-    """Multimodal plumbing arithmetic, oracled: video frame sampling
-    (sequence+explode row grain) and audio windowing (samples/window from
-    sample_rate) over the deterministic synthetic media table
-    (functions/multimodal.py frame_sample / audio_window_plumbing). The
-    binary decode itself stays a declared stub — this grades everything
-    around it that IS pure arithmetic."""
-    from ..functions.multimodal import (
-        audio_window_plumbing,
-        frame_sample,
-        gen_media,
-    )
-
-    m = gen_media(spark, n=90)
-    frames = frame_sample(m, every_k=2).select(
-        "media_id",
-        F.lit("video").alias("kind"),
-        F.col("frame_idx").cast("long").alias("v"),
-    )
-    audio = audio_window_plumbing(m, win_ms=25).select(
-        "media_id",
-        F.lit("audio").alias("kind"),
-        F.col("samples_per_window").cast("long").alias("v"),
-    )
-    return frames.union(audio)
-
-
-ORACLE_MEDIA_PLUMBING = """
-WITH m AS (
-  SELECT g AS media_id,
-         ['image', 'audio', 'video'][(g % 3) + 1] AS kind,
-         16000 AS sample_rate,
-         (g % 8) + 1 AS n_frames
-  FROM generate_series(0, 89) t(g)
-)
-SELECT media_id, 'video' AS kind, CAST(u.f AS BIGINT) AS v
-FROM m, unnest(range(0, n_frames, 2)) AS u(f)
-WHERE kind = 'video'
-UNION ALL
-SELECT media_id, 'audio' AS kind,
-       CAST(floor(sample_rate * 25 / 1000.0) AS BIGINT) AS v
-FROM m WHERE kind = 'audio'
-"""
-
-
 # ------------------------------------------- landmask derivation (A3/P5)
 
 def q_landmask_derive(spark, sf_dir):
@@ -1707,53 +1605,6 @@ FROM req LEFT JOIN aliases ON requested = alias
 # -------------------------------------------- non-SQL-expressible (rows only)
 
 
-def q_ann_topk_lsh(spark, sf_dir):
-    """LSH-bucketed approximate top-k: bucket ids from deterministic
-    hyperplanes (inlined into the DuckDB oracle as literals, so the FULL
-    approximate pipeline — bucketing, hamming<=2 multiprobe, cosine
-    ranking — reproduces bit-for-bit)."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qvec = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
-    return SIM.ann_topk_lsh(emb, qvec, k=10, n_planes=6, multiprobe_hamming=2)
-
-
-def _oracle_ann_lsh(n_planes: int = 6, dim: int = 64) -> str:
-    """Inline the SAME deterministic hyperplanes (similarity._hyperplane)
-    as SQL literals; bucket membership and multiprobe are then pure
-    arithmetic DuckDB reproduces exactly (multiprobe hamming<=2 ==
-    bit_count(xor(bucket, query_bucket)) <= 2)."""
-    from ..functions.similarity import _hyperplane
-
-    planes = [_hyperplane(dim, i) for i in range(n_planes)]
-    plane_lits = ",\n    ".join(
-        "[" + ", ".join(repr(x) for x in p) + "]" for p in planes
-    )
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(e, pl[{i + 1}]) > 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i in range(n_planes)
-    )
-    return f"""
-WITH p AS (SELECT [
-    {plane_lits}
-] AS pl),
-b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e, {bucket} AS bucket
-  FROM embeddings, p
-),
-q AS (SELECT e AS qv, bucket AS qb FROM b WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_dot_product(e, qv)
-             / (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(qv, qv))),
-             6) AS cos_sim
-FROM b, q
-WHERE bit_count(xor(bucket::BIGINT, qb::BIGINT)) <= 2
-ORDER BY cos_sim DESC, vec_id LIMIT 10
-"""
-
-
 def q_ann_topk_ivf(spark, sf_dir):
     """IVF-Flat approximate top-k (functions/similarity.py ann_topk_ivf):
     deterministic seed centroids, zero-shuffle map-side assignment,
@@ -1822,8 +1673,9 @@ def q_embedding_neardup(spark, sf_dir):
 def _oracle_neardup(
     n_planes: int = 4, dim: int = 64, thr: float = 0.35
 ) -> str:
-    """Same inlined-hyperplane trick as _oracle_ann_lsh: bucket ids and
-    the blocked self-join are then exact arithmetic in DuckDB."""
+    """Inline the SAME deterministic hyperplanes (similarity._hyperplane)
+    as SQL literals: bucket ids and the blocked self-join are then exact
+    arithmetic in DuckDB."""
     from ..functions.similarity import _hyperplane
 
     planes = [_hyperplane(dim, i) for i in range(n_planes)]
@@ -2354,73 +2206,7 @@ FROM s GROUP BY conv_id, sess
 """
 
 
-# ------------------------------------------- multi-table ANN (round 5)
-
-
-def q_ann_topk_lsh_mt(spark, sf_dir):
-    """Multi-table hyperplane LSH top-k (functions/similarity.py
-    ann_topk_lsh n_tables>1): three independent 6-plane families
-    (table t = planes [6t, 6t+6)), per-table multiprobe hamming<=1,
-    candidates UNIONED across tables — same per-table scan fraction as
-    one table, recall 1-(1-p)^3 instead of p. The oracle inlines all 18
-    hyperplanes as literals and reproduces the union filter exactly."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qvec = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
-    return SIM.ann_topk_lsh(
-        emb, qvec, k=10, n_planes=6, multiprobe_hamming=1, n_tables=3
-    )
-
-
-def _oracle_ann_lsh_mt(
-    n_planes: int = 6, n_tables: int = 3, dim: int = 64, hamming: int = 1
-) -> str:
-    """_oracle_ann_lsh extended to L tables: per-table bucket columns from
-    the SAME deterministic plane families, candidate iff ANY table's
-    hamming distance is within the multiprobe radius."""
-    from ..functions.similarity import _hyperplane
-
-    planes = [
-        _hyperplane(dim, t * n_planes + i)
-        for t in range(n_tables)
-        for i in range(n_planes)
-    ]
-    plane_lits = ",\n    ".join(
-        "[" + ", ".join(repr(x) for x in p) + "]" for p in planes
-    )
-    buckets = ",\n         ".join(
-        " + ".join(
-            f"(CASE WHEN list_dot_product(e, pl[{t * n_planes + i + 1}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i in range(n_planes)
-        )
-        + f" AS bucket{t}"
-        for t in range(n_tables)
-    )
-    qb = ", ".join(f"bucket{t} AS qb{t}" for t in range(n_tables))
-    conds = " OR ".join(
-        f"bit_count(xor(b.bucket{t}::BIGINT, q.qb{t}::BIGINT)) <= {hamming}"
-        for t in range(n_tables)
-    )
-    return f"""
-WITH p AS (SELECT [
-    {plane_lits}
-] AS pl),
-b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e,
-         {buckets}
-  FROM embeddings, p
-),
-q AS (SELECT e AS qv, {qb} FROM b WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_dot_product(e, qv)
-             / (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(qv, qv))),
-             6) AS cos_sim
-FROM b, q
-WHERE {conds}
-ORDER BY cos_sim DESC, vec_id LIMIT 10
-"""
+# ------------------------------------------- cross-polytope multi-table ANN
 
 
 def q_ann_topk_cp(spark, sf_dir):
@@ -2428,9 +2214,8 @@ def q_ann_topk_cp(spark, sf_dir):
     ann_topk_cp): bucket = signed argmax coordinate of a deterministic
     pseudo-random rotation per table, query-directed probing (the
     m_probe signed axes with the largest rotated-query projections).
-    The stronger angular hash family behind the round-5 recall fix —
-    measured 0.89 recall@10 at 29% scan on sf0.1 (BENCH/ann_recall.json)
-    where hyperplane multiprobe-2 got 0.60 at 34%. Gate config is a
+    The ANN family for near-random corpora — measured 0.89 recall@10 at
+    29% scan on sf0.1 (BENCH/ann_recall.json). Gate config is a
     small 2-table/3-probe instance; the oracle inlines the rotation
     columns as literals and reproduces bucketing, probing and ranking
     value-exactly."""
@@ -2509,7 +2294,6 @@ QUERIES = {
     "gapfill_missing_buckets": q_gapfill_missing_buckets,
     "point_read": q_point_read,
     "semijoin_active": q_semijoin_active,
-    "antijoin_orphans": q_antijoin_orphans,
     "minmax_bounds": q_minmax_bounds,
     "version_coalesce": q_version_coalesce,
     "cell_assignment": q_cell_assignment,
@@ -2523,9 +2307,7 @@ QUERIES = {
     "fingerprint_docs": q_fingerprint_docs,
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
     "ann_topk": q_ann_topk,
-    "embedding_norms": q_embedding_norms,
     "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "simhash_docs": q_simhash_docs,
     "lut_resolve": q_lut_resolve,
     "landmask_derive": q_landmask_derive,
     "remap_weighted": q_remap_weighted,
@@ -2535,7 +2317,6 @@ QUERIES = {
     "remap_idw": q_remap_idw,
     "remap_laf": q_remap_laf,
     "remap_bicubic": q_remap_bicubic,
-    "media_plumbing": q_media_plumbing,
     "scalar_roundtrip": q_scalar_roundtrip,
     "float_axes": q_float_axes,
     "mask_and_fill": q_mask_and_fill,
@@ -2544,7 +2325,6 @@ QUERIES = {
     "nearest_gpi": q_nearest_gpi,
     "grid_bbox": q_grid_bbox,
     "simhash_pairs": q_simhash_pairs,
-    "ann_topk_lsh": q_ann_topk_lsh,
     "embedding_neardup": q_embedding_neardup,
     "ann_topk_ivf": q_ann_topk_ivf,
     "image_decode_features": q_image_decode_features,
@@ -2554,8 +2334,8 @@ QUERIES = {
     "sessionize_gaps": q_sessionize_gaps,
     "remap_con_2d": q_remap_con_2d,
     "remap_con2_2d": q_remap_con2_2d,
-    "ann_topk_lsh_mt": q_ann_topk_lsh_mt,
     "ann_topk_cp": q_ann_topk_cp,
+    "antijoin_orphans": q_antijoin_orphans,
 }
 
 ORACLES = {
@@ -2568,7 +2348,6 @@ ORACLES = {
     "gapfill_missing_buckets": ORACLE_GAPFILL,
     "point_read": ORACLE_POINT_READ,
     "semijoin_active": ORACLE_SEMIJOIN,
-    "antijoin_orphans": ORACLE_ANTIJOIN,
     "minmax_bounds": ORACLE_MINMAX,
     "version_coalesce": ORACLE_COALESCE,
     "cell_assignment": ORACLE_CELL,
@@ -2582,9 +2361,7 @@ ORACLES = {
     "fingerprint_docs": ORACLE_FINGERPRINT,
     "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD,
     "ann_topk": ORACLE_ANN_TOPK,
-    "embedding_norms": ORACLE_EMB_NORMS,
     "minhash_lsh_pairs": ORACLE_MINHASH,
-    "simhash_docs": ORACLE_SIMHASH,
     "lut_resolve": _oracle_lut_resolve(),
     "landmask_derive": ORACLE_LANDMASK,
     "remap_weighted": _oracle_remap(),
@@ -2594,7 +2371,6 @@ ORACLES = {
     "remap_idw": ORACLE_REMAP_IDW,
     "remap_laf": ORACLE_REMAP_LAF,
     "remap_bicubic": ORACLE_REMAP_BICUBIC,
-    "media_plumbing": ORACLE_MEDIA_PLUMBING,
     "scalar_roundtrip": ORACLE_SCALAR,
     "float_axes": ORACLE_FLOAT_AXES,
     "mask_and_fill": ORACLE_MASK_FILL,
@@ -2603,7 +2379,6 @@ ORACLES = {
     "nearest_gpi": _oracle_nearest(),
     "grid_bbox": ORACLE_GRID_BBOX,
     "simhash_pairs": ORACLE_SIMHASH_PAIRS,
-    "ann_topk_lsh": _oracle_ann_lsh(),
     "embedding_neardup": _oracle_neardup(),
     "ann_topk_ivf": ORACLE_ANN_IVF,
     "image_decode_features": ORACLE_IMAGE_DECODE,
@@ -2613,6 +2388,6 @@ ORACLES = {
     "sessionize_gaps": ORACLE_SESSIONIZE,
     "remap_con_2d": _oracle_remap_con_2d(),
     "remap_con2_2d": _oracle_remap_con2_2d(),
-    "ann_topk_lsh_mt": _oracle_ann_lsh_mt(),
     "ann_topk_cp": _oracle_ann_cp(),
+    "antijoin_orphans": ORACLE_ANTIJOIN,
 }

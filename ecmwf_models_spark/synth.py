@@ -148,3 +148,27 @@ def gen_conv_dim(
             != 0
         ).alias("is_active"),
     )
+
+
+def gen_clustered_embeddings(spark: SparkSession) -> DataFrame:
+    """(vec_id int, embedding array<double>): 400 vectors of dim 16 in 16
+    angular clusters (vec_id % 16), each a fixed cos-pattern centre plus
+    a small sin perturbation — the clustered corpus on which IVF is the
+    ANN family of choice (the sf embeddings tables are near-random)."""
+    dim, n_clusters = 16, 16
+    df = spark.range(400).select(
+        F.col("id").cast("int").alias("vec_id"),
+        (F.col("id") % n_clusters).alias("c"),
+    )
+    center = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: F.cos(F.col("c") * 2.39996 + d * 0.73),
+    )
+    perturb = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: F.sin(F.col("vec_id") * 1.17 + d * 2.01) * 0.05,
+    )
+    return df.select(
+        "vec_id",
+        F.zip_with(center, perturb, lambda a, b: a + b).alias("embedding"),
+    )

@@ -4,11 +4,13 @@ precedent). Drives cli.main() in-process against the shared session."""
 
 from __future__ import annotations
 
-import numpy as np
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark import cli
+from ecmwf_models_spark.functions import similarity as S
 
 
 @pytest.fixture()
@@ -89,29 +91,36 @@ def test_cli_remap_bilinear_2d(spark, tmp_path, argv_runner):
     assert got.loc[1, "value_remap"] == pytest.approx(2.0 * 2.25 + 3.0 * 0.75)
 
 
+def _query_arg(qv) -> str:
+    # --query= form: a vector starting with a negative component would
+    # otherwise parse as an option flag
+    return "--query=" + ",".join(str(float(x)) for x in qv)
+
+
 def test_cli_ann_index_and_query(spark, tmp_path, argv_runner, sf_dir, capsys):
+    """The default round trip: ann-index builds a cross-polytope index
+    and ann-query probes it with the method and table count the index
+    recorded in its _settings; an index without them is refused."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     src = str(tmp_path / "emb")
     emb.write.parquet(src)
     idx = str(tmp_path / "annidx")
     argv_runner("ann-index", "--embeddings", src, "--out", idx)
-    # partition dirs by bucket exist
     files = spark.read.parquet(idx)
-    assert "lsh_bucket" in files.columns
+    assert {"cp_table", "cp_bucket"} <= set(files.columns)
 
     qv = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    # --query= form: a vector starting with a negative component would
-    # otherwise parse as an option flag
-    argv_runner(
-        "ann-query", "--index", idx,
-        "--query=" + ",".join(str(float(x)) for x in qv), "--k", "5",
-    )
+    capsys.readouterr()
+    argv_runner("ann-query", "--index", idx, _query_arg(qv), "--k", "5")
     out = capsys.readouterr().out
     # the query vector itself is always its own nearest neighbour
     lines = [l for l in out.splitlines() if l.strip()]
-    assert any(l.split()[1] == "0" for l in lines[1:]), out
-    assert "1.0" in out
-    assert np.isfinite(len(lines))
+    vec_id, cos_sim = lines[1].split()[1:]
+    assert (vec_id, float(cos_sim)) == ("0", 1.0), out
+
+    shutil.rmtree(f"{idx}/_settings")
+    with pytest.raises(SystemExit, match="method"):
+        argv_runner("ann-query", "--index", idx, _query_arg(qv))
 
 
 def test_cli_ann_index_and_query_ivf(
@@ -119,7 +128,8 @@ def test_cli_ann_index_and_query_ivf(
 ):
     """--method ivf round-trip: the materialized IVF index (data
     partitioned by ivf_cell + persisted _quantizer) built and queried
-    entirely through the CLI."""
+    entirely through the CLI answers like ann_topk_ivf with the
+    persisted quantizer."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     src = str(tmp_path / "emb")
     emb.write.parquet(src)
@@ -135,16 +145,16 @@ def test_cli_ann_index_and_query_ivf(
     assert quant.count() == 8
 
     qv = emb.where(F.col("vec_id") == 0).first()["embedding"]
+    capsys.readouterr()
     argv_runner(
-        "ann-query", "--index", idx, "--method", "ivf",
-        "--query=" + ",".join(str(float(x)) for x in qv),
+        "ann-query", "--index", idx, _query_arg(qv),
         "--k", "5", "--n-probe", "3",
     )
-    out = capsys.readouterr().out
-    lines = [l for l in out.splitlines() if l.strip()]
-    # the query vector itself is always its own nearest neighbour
-    assert any(l.split()[1] == "0" for l in lines[1:]), out
-    assert "1.0" in out
+    want = S.ann_topk_ivf(
+        emb, list(qv), k=5, n_probe=3,
+        centroids=S.load_ivf_quantizer(spark, idx),
+    )
+    assert capsys.readouterr().out == want.toPandas().to_string() + "\n"
 
 
 def test_cli_ann_index_and_query_cp(
@@ -152,7 +162,8 @@ def test_cli_ann_index_and_query_cp(
 ):
     """--method cp round-trip: the materialized cross-polytope index
     (one directory tree per table, partitioned by (cp_table, cp_bucket))
-    built and queried entirely through the CLI."""
+    built with 4 tables is queried through all 4 — the query gives no
+    table count — and answers exactly like ann_topk_cp."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     src = str(tmp_path / "emb")
     emb.write.parquet(src)
@@ -161,17 +172,12 @@ def test_cli_ann_index_and_query_cp(
         "ann-index", "--embeddings", src, "--out", idx,
         "--method", "cp", "--n-tables", "4",
     )
-    files = spark.read.parquet(idx)
-    assert {"cp_table", "cp_bucket"} <= set(files.columns)
 
     qv = emb.where(F.col("vec_id") == 0).first()["embedding"]
+    capsys.readouterr()
     argv_runner(
-        "ann-query", "--index", idx, "--method", "cp",
-        "--query=" + ",".join(str(float(x)) for x in qv),
-        "--k", "5", "--n-tables", "4", "--m-probe", "3",
+        "ann-query", "--index", idx, _query_arg(qv),
+        "--k", "5", "--m-probe", "3",
     )
-    out = capsys.readouterr().out
-    lines = [l for l in out.splitlines() if l.strip()]
-    # the query vector itself is always its own nearest neighbour
-    assert any(l.split()[1] == "0" for l in lines[1:]), out
-    assert "1.0" in out
+    want = S.ann_topk_cp(emb, list(qv), k=5, n_tables=4, m_probe=3)
+    assert capsys.readouterr().out == want.toPandas().to_string() + "\n"

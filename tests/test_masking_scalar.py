@@ -130,30 +130,14 @@ def test_fname_parse_roundtrip(spark):
 
 
 def test_is_sorted_within(spark):
+    """v checked in pos order per k: group a decreases (10 then 5)."""
     df = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("a", 3), ("b", 2), ("b", 1)], ["k", "v"]
-    )
-    # order by v within k: trivially sorted; check the inverse case via a
-    # secondary column
-    df2 = spark.createDataFrame(
         [("a", 1, 10), ("a", 2, 5), ("b", 1, 1), ("b", 2, 2)],
         ["k", "pos", "v"],
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("k").orderBy("pos")
-    checked = (
-        df2.withColumn("_prev", F.lag("v").over(w))
-        .groupBy("k")
-        .agg(
-            F.bool_and(
-                F.col("_prev").isNull() | (F.col("v") >= F.col("_prev"))
-            ).alias("sorted")
-        )
-    )
+    checked = S.is_sorted_within(df, ["k"], ["pos"], "v")
     out = {r["k"]: r["sorted"] for r in checked.collect()}
     assert out["a"] is False and out["b"] is True
-    _ = df
 
 
 def test_nearest_join_matches_bruteforce(spark):

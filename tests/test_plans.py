@@ -203,12 +203,16 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
     one exchange; an unknown tier name exits before any write."""
     from ecmwf_models_spark import cli
     from ecmwf_models_spark.grid import with_cell_id
-    from ecmwf_models_spark.lineage import ResumableTierWriter
+    from ecmwf_models_spark.lineage import (
+        ResumableTierWriter,
+        write_run_settings,
+    )
     from ecmwf_models_spark.operators.rollup import finalize, rollup_tiers
 
     spark = bronze.sparkSession
     path = str(tmp_path / "silver")
     write_silver(reshuffle(bronze, n_cells=16), path)
+    write_run_settings(spark, f"{path}/_settings", {"n_cells": 16})
     written = {}
 
     def capture(self, df):
@@ -220,8 +224,7 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
 
     def rollup(tiers):
         cli.main(["rollup", "--silver", path, "--out",
-                  str(tmp_path / "tiers"), "--n-cells", "16",
-                  "--tiers", tiers])
+                  str(tmp_path / "tiers"), "--tiers", tiers])
 
     rollup("daily")
     assert list(written) == ["daily"]
@@ -237,3 +240,21 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
     with pytest.raises(SystemExit):
         rollup("hourly,bogus")
     assert written == {}
+
+
+def test_cli_rollup_refuses_silver_without_settings(
+    bronze, tmp_path, monkeypatch
+):
+    """The cell grid belongs to the silver: without the n_cells that
+    reshuffle records in <silver>/_settings, `cli rollup` exits before
+    it writes any tier."""
+    from ecmwf_models_spark import cli
+
+    spark = bronze.sparkSession
+    path = str(tmp_path / "silver")
+    write_silver(reshuffle(bronze, n_cells=16), path)
+    monkeypatch.setattr(cli, "_spark", lambda args: spark)
+    out = tmp_path / "tiers"
+    with pytest.raises(SystemExit, match="n_cells"):
+        cli.main(["rollup", "--silver", path, "--out", str(out)])
+    assert not out.exists()

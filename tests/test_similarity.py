@@ -1,5 +1,5 @@
-"""Embedding similarity: brute-force vs LSH-approximate, near-dup pairs,
-multimodal plumbing."""
+"""Embedding similarity: brute-force vs approximate top-k, materialized
+ANN indexes, near-dup pairs, multimodal image features."""
 
 import numpy as np
 import pytest
@@ -34,17 +34,6 @@ def test_bruteforce_topk_matches_numpy(emb, query_vec):
     assert list(got["vec_id"]) == expected_ids
     assert got["cos_sim"].iloc[0] == pytest.approx(1.0, abs=1e-6)
     assert got["vec_id"].iloc[0] == 0
-
-
-def test_ann_lsh_recall(emb, query_vec):
-    exact = set(S.topk_cosine(emb, query_vec, k=10).toPandas()["vec_id"])
-    approx = S.ann_topk_lsh(
-        emb, query_vec, k=10, n_planes=6, multiprobe_hamming=2
-    ).toPandas()
-    got = set(approx["vec_id"])
-    recall = len(exact & got) / 10
-    assert recall >= 0.5, f"recall {recall}"
-    assert 0 in got  # the query itself always survives multiprobe
 
 
 def test_ann_ivf_recall_and_partition(emb, query_vec):
@@ -101,49 +90,6 @@ def test_multimodal_image_features(spark):
     a = feats.sort_values("media_id").reset_index(drop=True)
     b = again.sort_values("media_id").reset_index(drop=True)
     assert (a["mean_lum"].values == b["mean_lum"].values).all()
-
-
-def test_frame_sample_and_audio(spark):
-    media = M.gen_media(spark, n=30)
-    frames = M.frame_sample(media, every_k=2)
-    pdf = frames.toPandas()
-    assert (pdf["frame_idx"] % 2 == 0).all()
-    aud = M.audio_window_plumbing(media, win_ms=25).toPandas()
-    assert (aud["samples_per_window"] == 400).all()  # 16 kHz * 25 ms
-
-
-def test_ann_index_prunes_partitions_and_matches(spark, tmp_path, sf_dir):
-    """The materialized ANN index: (a) probe reads show PartitionFilters
-    on lsh_bucket (directory pruning, not a full-scan filter), (b) the
-    indexed query returns exactly the in-plan ann_topk_lsh result."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    qvec = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
-    path = str(tmp_path / "ann_index")
-    S.write_ann_index(emb, path, dim=len(qvec), n_planes=6)
-
-    indexed = S.ann_topk_lsh_indexed(
-        spark, path, qvec, k=10, n_planes=6, multiprobe_hamming=2
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        indexed.explain("formatted")
-    plan = buf.getvalue()
-    pf = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "lsh_bucket" in pf, plan
-
-    inplan = S.ann_topk_lsh(
-        emb, qvec, k=10, n_planes=6, multiprobe_hamming=2
-    ).collect()
-    assert [tuple(r) for r in indexed.collect()] == [
-        tuple(r) for r in inplan
-    ]
 
 
 def test_ivf_index_prunes_partitions_and_matches(spark, tmp_path, sf_dir):

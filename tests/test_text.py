@@ -238,20 +238,28 @@ def test_lsh_bucket_cap_drops_oversized_buckets(spark):
     assert capped.count() == 0
 
 
-def test_simhash_portable_matches_bit_rule(spark):
-    """60-bit portable simhash: recompute one doc's hash in python."""
+def test_simhash_portable_matches_bit_rule(docs):
+    """60-bit portable simhash: recompute every doc's hash in python
+    (md5 token hash, +1/-1 bit sums, positive sums set the bit)."""
     import hashlib
+    import re
 
-    text = "alpha beta alpha gamma"
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    got = X.simhash(df, n_bits=60, portable=True).first()["simhash"]
-    toks = ["alpha", "beta", "alpha", "gamma"]
-    sums = [0] * 60
-    for t in toks:
-        h = int(hashlib.md5(f"0:{t}".encode()).hexdigest()[:15], 16)
-        for b in range(60):
-            sums[b] += 1 if (h >> b) & 1 else -1
-    want = sum(1 << b for b in range(60) if sums[b] > 0)
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in X.simhash(docs, n_bits=60, portable=True).collect()
+    }
+    want = {}
+    for r in docs.select("doc_id", "text").collect():
+        toks = re.findall("[a-z0-9]+", r["text"].lower())
+        if not toks:
+            continue
+        sums = [0] * 60
+        for t in toks:
+            h = int(hashlib.md5(f"0:{t}".encode()).hexdigest()[:15], 16)
+            for b in range(60):
+                sums[b] += 1 if (h >> b) & 1 else -1
+        want[r["doc_id"]] = sum(1 << b for b in range(60) if sums[b] > 0)
+    assert len(want) > 1
     assert got == want
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .grid import DEFAULT_N_CELLS, with_cell_id
+from .grid import with_cell_id
 from .operators.dedup import latest_final_wins
 from .operators.reshuffle import reshuffle
 
@@ -47,12 +47,18 @@ def extend_silver(
     n_cells=None the value persisted at reshuffle time
     (<silver>/_settings) is used, so callers cannot accidentally extend
     with a mismatched cell grid; passing n_cells explicitly overrides.
+    A silver that records no n_cells raises ValueError: its grid is not
+    guessed.
     """
     from .lineage import read_run_settings
 
     if n_cells is None:
         stored = read_run_settings(spark, f"{silver_path}/_settings")
-        n_cells = int(stored.get("n_cells", DEFAULT_N_CELLS))
+        if "n_cells" not in stored:
+            raise ValueError(
+                f"{silver_path}/_settings records no n_cells; pass n_cells"
+            )
+        n_cells = int(stored["n_cells"])
     # a turn's cell depends only on its conv_id, so the batch's cells
     # need no transpose (no range sample, no shuffle of the batch)
     affected = [

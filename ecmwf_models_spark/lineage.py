@@ -12,11 +12,22 @@ lineage table:
 and a writer protocol that makes retention-tier materialization resumable
 MID-TIER: every cell directory is written atomically (task temp + rename is
 Spark's own commit protocol at partition-dir grain via dynamic partition
-overwrite), then the cell's lineage row is appended. On rerun, committed
+overwrite), then the cells' lineage rows are committed. On rerun, committed
 cells are skipped (their ids filter the input) — exactly-once at cell
 grain without a transactional table format (SURVEY 7 plan B).
 
-Checksums are order-insensitive (sum of xxhash64 over rows) so they are
+The bookkeeping tables (`_lineage`, `_settings`, `_meta`) are plain parquet
+directories holding one small file per commit, as overview.yml is one small
+file per run. The driver builds each file with pyarrow and publishes it
+through the JVM's Hadoop FileSystem: written as `.<name>.tmp`, then renamed
+to `part-<ns>-<uuid>.parquet`. Readers list the directory and read each
+file on the driver, skipping `_`/`.` names as Spark does, so neither a
+commit nor a lookup launches a Spark job, and `spark.read.parquet` still
+reads the table for an audit. The rename is atomic on local FS and HDFS.
+On S3 it is a copy then a delete, not atomic: a commit there rests on the
+store showing a whole object or none.
+
+Checksums are order-insensitive (bit_xor of xxhash64 over rows) so they are
 stable under any task placement/parallelism.
 """
 
@@ -25,8 +36,11 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -53,37 +67,89 @@ def is_path_not_found(e: AnalysisException) -> bool:
     return (get_cls() or "") == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e)
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Attempt the read; map PATH_NOT_FOUND to an empty frame. Existence is
-    decided by Spark's own filesystem resolution (works for HDFS/S3/local
-    alike) — os.path.exists is local-FS-only and would silently treat a
-    remote table as absent, re-deriving defaults the persisted run-kwargs
-    contract exists to prevent."""
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path` — the filesystem Spark itself
+    resolves it with (local, HDFS, S3 alike)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _commit_file(spark: SparkSession, path: str, schema, rows: list) -> None:
+    """Append `rows` to the table at `path` as one new parquet file:
+    written under a hidden temp name, then renamed into view."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, d = _fs_path(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{time.time_ns()}-{uuid.uuid4().hex}.parquet"
+    tmp = Path(d, f".{name}.tmp")
+    out = fs.create(tmp, False)
     try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        # ONLY absence maps to empty; any other analysis failure (broken
-        # permissions, conflicting metadata) must surface, or callers
-        # would silently re-derive defaults — the exact failure the
-        # persisted run-kwargs contract exists to prevent
-        if is_path_not_found(e):
-            return spark.createDataFrame([], schema)
-        raise
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(d, name)):
+        raise OSError(f"could not rename {tmp.toString()} to {name}")
+
+
+def _committed_rows(spark: SparkSession, path: str, schema) -> list[dict]:
+    """Every row of the table at `path`, read on the driver file by file;
+    [] when the directory does not exist. Also reads directories Spark
+    wrote (part files beside _SUCCESS and .crc files)."""
+    fs, d = _fs_path(spark, path)
+    if not fs.exists(d):
+        return []
+    tables = []
+    for st in fs.listStatus(d):
+        name = st.getPath().getName()
+        if st.isDirectory() or name.startswith(("_", ".")):
+            continue
+        inp = fs.open(st.getPath())
+        try:
+            data = inp.readAllBytes()
+        finally:
+            inp.close()
+        tables.append(
+            pq.read_table(pa.BufferReader(data), columns=schema.names).cast(
+                to_arrow_schema(schema)
+            )
+        )
+    return pa.concat_tables(tables).to_pylist() if tables else []
+
+
+def _latest(rows: list[dict], key) -> dict:
+    """key(row) -> value of the row with the latest committed_at."""
+    return {
+        key(r): r["value"] for r in sorted(rows, key=lambda r: r["committed_at"])
+    }
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    return _read_or_empty(spark, path, LINEAGE_SCHEMA)
+    """The lineage table as a Spark frame, for audits; empty when the
+    table does not exist. Existence is decided by Spark's own filesystem
+    resolution (HDFS/S3/local alike)."""
+    try:
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+    except AnalysisException as e:
+        # ONLY absence maps to empty; any other analysis failure (broken
+        # permissions, conflicting metadata) must surface
+        if is_path_not_found(e):
+            return spark.createDataFrame([], LINEAGE_SCHEMA)
+        raise
 
 
 def committed_cells(spark: SparkSession, path: str, tier: str) -> list[int]:
-    rows = (
-        read_lineage(spark, path)
-        .where((F.col("tier") == tier) & (F.col("status") == "committed"))
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )  # bounded: one row per committed cell
-    return [r[0] for r in rows]
+    return sorted(
+        {
+            r["cell_id"]
+            for r in _committed_rows(spark, path, LINEAGE_SCHEMA)
+            if r["tier"] == tier and r["status"] == "committed"
+        }
+    )
 
 
 def cell_stats(df: DataFrame) -> DataFrame:
@@ -120,20 +186,14 @@ def write_run_settings(
     job_id = job_id or uuid.uuid4().hex[:12]
     now = time.time()
     rows = [(k, str(v), job_id, now) for k, v in settings.items() if v is not None]
-    spark.createDataFrame(rows, SETTINGS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    _commit_file(spark, path, SETTINGS_SCHEMA, rows)
 
 
 def read_run_settings(spark: SparkSession, path: str) -> dict:
     """Latest persisted value per key (as strings; callers cast)."""
-    df = _read_or_empty(spark, path, SETTINGS_SCHEMA)
-    rows = (
-        df.groupBy("key")
-        .agg(F.max_by("value", "committed_at").alias("value"))
-        .collect()
-    )  # bounded: a handful of kwargs
-    return {r["key"]: r["value"] for r in rows}
+    return _latest(
+        _committed_rows(spark, path, SETTINGS_SCHEMA), lambda r: r["key"]
+    )
 
 
 ATTRS_SCHEMA = T.StructType(
@@ -153,31 +213,29 @@ def write_table_attrs(
     table — the reference carries these dicts from source to every output
     file (interface.py:185,496-502; era5/reshuffle.py:206-207 hands them
     to Img2Ts). Underscore-prefixed dir so data scans skip it;
-    append-only, latest committed_at wins (same protocol as _settings)."""
+    append-only, latest committed_at wins (same protocol as _settings).
+    Writes nothing when the stored attrs already hold every value."""
+    stored = read_table_attrs(spark, path)
     now = time.time()
     rows = [
         (var, k, str(v), now)
         for var, kv in attrs.items()
         for k, v in kv.items()
     ]
-    if not rows:
+    if all(stored.get(var, {}).get(k) == v for var, k, v, _ in rows):
         return
-    spark.createDataFrame(rows, ATTRS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    _commit_file(spark, path, ATTRS_SCHEMA, rows)
 
 
 def read_table_attrs(spark: SparkSession, path: str) -> dict[str, dict[str, str]]:
     """Latest attrs per (var, key); {} when no sidecar exists."""
-    df = _read_or_empty(spark, path, ATTRS_SCHEMA)
-    rows = (
-        df.groupBy("var", "key")
-        .agg(F.max_by("value", "committed_at").alias("value"))
-        .collect()
-    )  # bounded: a few attrs per variable
     out: dict[str, dict[str, str]] = {}
-    for r in rows:
-        out.setdefault(r["var"], {})[r["key"]] = r["value"]
+    latest = _latest(
+        _committed_rows(spark, path, ATTRS_SCHEMA),
+        lambda r: (r["var"], r["key"]),
+    )
+    for (var, k), v in latest.items():
+        out.setdefault(var, {})[k] = v
     return out
 
 
@@ -188,11 +246,10 @@ class ResumableTierWriter:
         w = ResumableTierWriter(spark, out_dir, lineage_dir, tier="daily")
         w.run(df_with_cell_id)          # writes only uncommitted cells
 
-    run() evaluates its input twice: cell_stats of the pending cells
-    (which cells, and each one's lineage row), then the write. It does
-    not persist: on the three CLI tiers (18k turns, 16 cells, local[4])
-    a MEMORY_AND_DISK persist cost 28-30 CPU-s, against 9.6 s for three
-    unpersisted passes and 8.4 s for these two.
+    run() passes over its input once, in the write, and then audits what
+    was written: each cell's lineage row (row_count, checksum) comes from
+    the cell directories on disk, which are small next to the rollup that
+    produced them.
     """
 
     def __init__(
@@ -211,23 +268,36 @@ class ResumableTierWriter:
         self.snapshot_id = snapshot_id
         self.job_id = job_id or uuid.uuid4().hex[:12]
 
-    def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
-        """Materialize uncommitted cells; returns number of cells written.
+    def _uncommitted_dirs(self, done: list[int]) -> list:
+        """Hadoop Paths of the cell_id=* directories with no committed
+        lineage row."""
+        fs, out = _fs_path(self.spark, self.out_dir)
+        if not fs.exists(out):
+            return []
+        done = set(done)
+        found = []
+        for st in fs.listStatus(out):
+            key, _, cell = st.getPath().getName().partition("=")
+            if st.isDirectory() and key == "cell_id" and int(cell) not in done:
+                found.append(st.getPath())
+        return found
 
-        fail_after_cells simulates a mid-tier crash for the resume test: it
-        restricts this run to the first k pending cells (written AND
-        committed), then raises — the next run() must complete the rest and
-        produce a byte-identical tier.
+    def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
+        """Materialize uncommitted cells; returns number of cells committed.
+
+        fail_after_cells simulates a crash between the cell write and the
+        lineage commit for the resume test: every pending cell is written,
+        the first k get their lineage rows, then it raises — the next run()
+        must rewrite the rest and produce a byte-identical tier.
         """
         done = committed_cells(self.spark, self.lineage_dir, self.tier)
+        # a cell directory without a committed lineage row is an earlier
+        # crash's leftover, not a tier cell: the write below replaces the
+        # ones still pending, this drops the rest
+        fs, _ = _fs_path(self.spark, self.out_dir)
+        for path in self._uncommitted_dirs(done):
+            fs.delete(path, True)
         pend = df.where(~F.col("cell_id").isin(done)) if done else df
-        stats = sorted(cell_stats(pend).collect(), key=lambda r: r["cell_id"])
-        if not stats:
-            return 0
-        crash = fail_after_cells is not None and fail_after_cells < len(stats)
-        todo = stats[:fail_after_cells] if crash else stats
-        if crash:
-            pend = pend.where(F.col("cell_id").isin([r[0] for r in todo]))
         # dynamic partition overwrite: each cell dir replaced atomically,
         # untouched cells preserved — write-temp-then-rename at cell grain.
         (
@@ -236,6 +306,18 @@ class ResumableTierWriter:
             .partitionBy("cell_id")
             .parquet(self.out_dir)
         )
+        written = [p.toString() for p in self._uncommitted_dirs(done)]
+        if not written:
+            return 0
+        # the input's schema, so no job infers one from the files
+        audit = (
+            self.spark.read.schema(df.schema)
+            .option("basePath", self.out_dir)
+            .parquet(*written)
+        )
+        stats = sorted(cell_stats(audit).collect(), key=lambda r: r["cell_id"])
+        crash = fail_after_cells is not None and fail_after_cells < len(stats)
+        todo = stats[:fail_after_cells] if crash else stats
         now = time.time()
         rows = [
             (
@@ -250,11 +332,8 @@ class ResumableTierWriter:
             )
             for r in todo
         ]
-        self.spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.lineage_dir)
-        # propagate per-variable attrs into the tier (latest-wins append;
-        # a resumed run re-appending identical rows is harmless)
+        _commit_file(self.spark, self.lineage_dir, LINEAGE_SCHEMA, rows)
+        # propagate per-variable attrs into the tier (written once per table)
         from .functions.lut import attrs_for
 
         write_table_attrs(
@@ -267,20 +346,27 @@ class ResumableTierWriter:
         return len(todo)
 
     def verify(self, df: DataFrame) -> bool:
-        """Recompute per-cell stats from the written tier and compare to the
-        lineage table (write-audit)."""
-        written = self.spark.read.parquet(self.out_dir)
-        # align column order with what run() hashed
-        written = written.select(*df.columns)
-        actual = cell_stats(written)
-        expected = read_lineage(self.spark, self.lineage_dir).where(
+        """Write-audit: the input `df`, the committed lineage rows and the
+        written tier must hold the same cells with the same (row_count,
+        checksum). run() takes the lineage from the written cells, so only
+        the input's stats, recomputed here, catch a write that dropped or
+        changed rows."""
+        written = self.spark.read.parquet(self.out_dir).select(*df.columns)
+        committed = read_lineage(self.spark, self.lineage_dir).where(
             (F.col("tier") == self.tier) & (F.col("status") == "committed")
         )
+
+        def stats(d: DataFrame, name: str) -> DataFrame:
+            return d.select("cell_id", F.struct("row_count", "checksum").alias(name))
+
         bad = (
-            actual.join(expected, "cell_id")
+            stats(cell_stats(df), "want")
+            .join(stats(committed, "lineage"), "cell_id", "full_outer")
+            .join(stats(cell_stats(written), "got"), "cell_id", "full_outer")
             .where(
-                (actual["row_count"] != expected["row_count"])
-                | (actual["checksum"] != expected["checksum"])
+                F.col("want").isNull()
+                | ~F.col("lineage").eqNullSafe(F.col("want"))
+                | ~F.col("got").eqNullSafe(F.col("want"))
             )
             .count()
         )

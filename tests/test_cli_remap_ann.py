@@ -91,16 +91,41 @@ def test_cli_remap_bilinear_2d(spark, tmp_path, argv_runner):
     assert got.loc[1, "value_remap"] == pytest.approx(2.0 * 2.25 + 3.0 * 0.75)
 
 
+@pytest.fixture()
+def jvm_log(spark):
+    """Everything the JVM logs while the test runs, as one string (a
+    log4j writer appender on the root logger)."""
+    jvm = spark._jvm
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    text = jvm.java.io.StringWriter()
+    app = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
+        jvm.org.apache.logging.log4j.core.layout.PatternLayout.createDefaultLayout(),
+        None, text, "test-capture", False, True,
+    )
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    yield text.toString
+    root.removeAppender("test-capture")
+    ctx.updateLoggers()
+    app.stop()
+
+
 def _query_arg(qv) -> str:
     # --query= form: a vector starting with a negative component would
     # otherwise parse as an option flag
     return "--query=" + ",".join(str(float(x)) for x in qv)
 
 
-def test_cli_ann_index_and_query(spark, tmp_path, argv_runner, sf_dir, capsys):
+def test_cli_ann_index_and_query(
+    spark, tmp_path, argv_runner, sf_dir, capsys, jvm_log
+):
     """The default round trip: ann-index builds a cross-polytope index
     and ann-query probes it with the method and table count the index
-    recorded in its _settings; an index without them is refused."""
+    recorded in its _settings; an index without them is refused. Reading
+    _settings logs no warning (Spark flags an underscore input path as
+    hidden; the settings are read on the driver, not by Spark)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     src = str(tmp_path / "emb")
     emb.write.parquet(src)
@@ -117,6 +142,7 @@ def test_cli_ann_index_and_query(spark, tmp_path, argv_runner, sf_dir, capsys):
     lines = [l for l in out.splitlines() if l.strip()]
     vec_id, cos_sim = lines[1].split()[1:]
     assert (vec_id, float(cos_sim)) == ("0", 1.0), out
+    assert "All paths were ignored" not in jvm_log()
 
     shutil.rmtree(f"{idx}/_settings")
     with pytest.raises(SystemExit, match="method"):

@@ -6,6 +6,7 @@ contain both points)."""
 import glob
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark.incremental import extend_silver, stored_end
@@ -114,6 +115,21 @@ def test_extend_uses_persisted_run_kwargs(tmp_path, spark):
     # a second settings write with a newer value wins (latest committed_at)
     write_run_settings(spark, f"{path}/_settings", {"n_cells": 16})
     assert read_run_settings(spark, f"{path}/_settings") == {"n_cells": "16"}
+
+
+def test_extend_without_settings_refuses_to_guess_grid(tmp_path, spark):
+    """extend_silver(n_cells=None) on a silver with no _settings raises
+    rather than extending with a default grid, and leaves it unchanged."""
+    initial = gen_transcripts(spark, n_conv=20, days=2, turns_per_conv=6)
+    path = str(tmp_path / "silver_nokw")
+    write_silver(reshuffle(initial, n_cells=8, num_partitions=4), path)
+    before = sorted(glob.glob(f"{path}/cell_id=*/*.parquet"))
+    later = gen_transcripts(
+        spark, n_conv=20, days=3, turns_per_conv=9
+    ).where(F.col("turn_idx") >= 6)
+    with pytest.raises(ValueError, match="n_cells"):
+        extend_silver(spark, path, later)
+    assert sorted(glob.glob(f"{path}/cell_id=*/*.parquet")) == before
 
 
 def test_extend_affected_cells_match_reshuffle(tmp_path, spark):

@@ -2,11 +2,24 @@
 the graft's generalization of overview.yml-driven idempotent extension
 (reference era5/reshuffle.py:251,254-308)."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark import lineage
 from ecmwf_models_spark.grid import with_cell_id
-from ecmwf_models_spark.lineage import ResumableTierWriter, read_lineage
+from ecmwf_models_spark.lineage import (
+    LINEAGE_SCHEMA,
+    SETTINGS_SCHEMA,
+    ResumableTierWriter,
+    committed_cells,
+    read_lineage,
+    read_run_settings,
+    read_table_attrs,
+    write_run_settings,
+    write_table_attrs,
+)
 from ecmwf_models_spark.operators.reshuffle import reshuffle
 from ecmwf_models_spark.operators.rollup import finalize, rollup_from_raw
 
@@ -66,12 +79,12 @@ def test_crash_and_resume_identical(tmp_path, spark, daily_with_cells):
     assert w2.verify(df)
 
 
-def test_run_evaluates_input_twice(tmp_path, spark, daily_with_cells):
-    """run() passes over its input twice — cell_stats, then the write —
-    for a fresh run and over only the pending cells for a resumed one.
-    A Python UDF filter in the input counts the rows each run evaluates;
-    as a filter it cannot be pruned from a pass that reads only cell_id,
-    and the committed-cell filter is evaluated below it."""
+def test_run_evaluates_input_once(tmp_path, spark, daily_with_cells):
+    """run() passes over its input once — the write — for a fresh run,
+    a crashed one (which writes every pending cell) and, over only the
+    pending cells, a resumed one; the lineage rows come from the written
+    cells. A Python UDF filter in the input counts the rows each run
+    evaluates; the committed-cell filter is evaluated below it."""
     rows_per_cell = {
         r["cell_id"]: r["count"]
         for r in daily_with_cells.groupBy("cell_id").count().collect()
@@ -97,19 +110,129 @@ def test_run_evaluates_input_twice(tmp_path, spark, daily_with_cells):
 
     acc, df = counted()
     assert writer("fresh").run(df) == 16
-    assert acc.value == 2 * n
+    assert acc.value == n
 
-    # crashed run: stats over all 16 cells, write of the first 5
+    # crashed run: writes all 16 cells, commits the first 5
     acc, df = counted()
     with pytest.raises(RuntimeError, match="simulated crash"):
         writer("out").run(df, fail_after_cells=5)
-    assert acc.value == n + first5
+    assert acc.value == n
 
     acc, df = counted()
     w = writer("out")
     assert w.run(df) == 11
-    assert acc.value == 2 * (n - first5)
+    assert acc.value == n - first5
     assert w.verify(df)
+    # the tier's attrs were written once, by the crashed run
+    assert len(glob.glob(str(tmp_path / "out" / "_meta" / "part-*"))) == 1
+
+
+def test_uncommitted_cell_dir_is_dropped(tmp_path, spark, daily_with_cells):
+    """A cell directory with no committed lineage row is an earlier
+    crash's leftover: run() deletes it even when the input has no rows
+    for that cell, and commits no lineage row for it."""
+    out, lin = tmp_path / "o", str(tmp_path / "lin")
+    daily_with_cells.limit(1).withColumn("cell_id", F.lit(99)).write.partitionBy(
+        "cell_id"
+    ).parquet(str(out))
+    stray = out / "cell_id=99"
+    assert stray.exists()
+    w = ResumableTierWriter(spark, str(out), lin, tier="daily")
+    assert w.run(daily_with_cells) == 16
+    assert not stray.exists()
+    assert 99 not in committed_cells(spark, lin, "daily")
+    assert w.verify(daily_with_cells)
+
+
+def test_verify_catches_written_cells_unlike_input(
+    tmp_path, spark, daily_with_cells
+):
+    """verify() fails when the tier on disk differs from the input: a
+    write that dropped a row (lineage and cells agree with each other,
+    not with the input), and a cell changed after its lineage commit."""
+    df = daily_with_cells
+    # the write lost one row of cell 3
+    drop = df.where("cell_id = 3").orderBy("conv_id", "bucket_ts").limit(1)
+    short = df.exceptAll(drop)
+    w = ResumableTierWriter(
+        spark, str(tmp_path / "short"), str(tmp_path / "short_lin"), tier="daily"
+    )
+    assert w.run(short) == 16
+    assert w.verify(short)
+    assert not w.verify(df)
+
+    # one committed cell rewritten afterwards
+    out = str(tmp_path / "o")
+    w = ResumableTierWriter(spark, out, str(tmp_path / "lin"), tier="daily")
+    assert w.run(df) == 16
+    assert w.verify(df)
+    (
+        df.where("cell_id = 5")
+        .withColumn("n_turns", F.col("n_turns") + 1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell_id")
+        .parquet(out)
+    )
+    assert not w.verify(df)
+
+
+def test_bookkeeping_launches_no_spark_job(tmp_path, spark):
+    """Lineage lookups and settings/attrs commits and reads run on the
+    driver: no Spark job, under a job group that would collect one."""
+    sc = spark.sparkContext
+    sc.setJobGroup("bookkeeping", "driver-side lineage files")
+    try:
+        assert committed_cells(spark, str(tmp_path / "lin"), "daily") == []
+        write_run_settings(spark, str(tmp_path / "_settings"), {"n_cells": 8})
+        assert read_run_settings(spark, str(tmp_path / "_settings")) == {
+            "n_cells": "8"
+        }
+        write_table_attrs(spark, str(tmp_path / "_meta"), {"v": {"units": "m"}})
+        assert read_table_attrs(spark, str(tmp_path / "_meta")) == {
+            "v": {"units": "m"}
+        }
+        assert sc.statusTracker().getJobIdsForGroup("bookkeeping") == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_bookkeeping_reads_tables_spark_wrote(tmp_path, spark):
+    """_lineage and _settings directories written by a Spark job (part
+    files, _SUCCESS, .crc) read back as they did through Spark, also with
+    driver-committed files beside them; a temp file an interrupted commit
+    left behind is not a commit."""
+    lin, st = str(tmp_path / "_lineage"), str(tmp_path / "_settings")
+    spark.createDataFrame(
+        [("job", "daily", c, "", 10, c, "committed", 1.0) for c in range(3)],
+        LINEAGE_SCHEMA,
+    ).coalesce(1).write.parquet(lin)
+    (tmp_path / "_lineage" / ".part-1-x.parquet.tmp").write_bytes(b"PAR1")
+    spark.createDataFrame(
+        [("n_cells", "8", "j", 1.0), ("salt", "6", "j", 1.0)], SETTINGS_SCHEMA
+    ).write.parquet(st)
+    assert sorted(committed_cells(spark, lin, "daily")) == [0, 1, 2]
+    assert committed_cells(spark, lin, "hourly") == []
+    assert read_run_settings(spark, st) == {"n_cells": "8", "salt": "6"}
+    write_run_settings(spark, st, {"n_cells": 16})
+    assert read_run_settings(spark, st) == {"n_cells": "16", "salt": "6"}
+
+
+def test_spark_reads_driver_committed_lineage(tmp_path, spark, daily_with_cells):
+    """spark.read.parquet(_lineage) — the audit path — sees exactly the
+    rows the driver-side read returns."""
+    out, lin = str(tmp_path / "o"), str(tmp_path / "_lineage")
+    ResumableTierWriter(spark, out, lin, tier="daily").run(daily_with_cells)
+    ResumableTierWriter(spark, out + "h", lin, tier="hourly").run(
+        daily_with_cells.where("cell_id < 4")
+    )
+    cols = LINEAGE_SCHEMA.names
+    got = sorted(tuple(r) for r in spark.read.parquet(lin).select(*cols).collect())
+    want = sorted(
+        tuple(r[c] for c in cols)
+        for r in lineage._committed_rows(spark, lin, LINEAGE_SCHEMA)
+    )
+    assert got == want and len(got) == 16 + 4
 
 
 def test_lineage_rows_complete(tmp_path, spark, daily_with_cells):
@@ -131,7 +254,6 @@ def test_attrs_propagate_reshuffle_rollup_read(tmp_path, spark, bronze):
     reshuffle -> tier write -> point read — the reference's attribute
     propagation contract (interface.py:185,496-502,
     era5/reshuffle.py:206-207)."""
-    from ecmwf_models_spark.lineage import read_table_attrs
     from ecmwf_models_spark.operators.pointread import TsReader
     from ecmwf_models_spark.operators.reshuffle import write_silver
 

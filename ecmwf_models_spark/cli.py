@@ -4,18 +4,24 @@ download / update_img / reshuffle / update_ts) mapped to the engine:
     python -m ecmwf_models_spark.cli ingest    --out DIR [--n-conv N ...]
     python -m ecmwf_models_spark.cli reshuffle --bronze DIR --out DIR
     python -m ecmwf_models_spark.cli rollup    --silver DIR --out DIR --tiers hourly,daily,monthly
+    python -m ecmwf_models_spark.cli audit     --silver DIR --out DIR
     python -m ecmwf_models_spark.cli extend    --silver DIR --bronze DIR
     python -m ecmwf_models_spark.cli read      --silver DIR --conv-id ID
-    python -m ecmwf_models_spark.cli update-img --bronze DIR --out DIR
+    python -m ecmwf_models_spark.cli update-img --bronze DIR --silver DIR --out DIR
     python -m ecmwf_models_spark.cli remap     --field DIR --out DIR --method con2 --n-src 64 --n-dst 24
     python -m ecmwf_models_spark.cli ann-index --embeddings DIR --out DIR [--method cp|ivf]
     python -m ecmwf_models_spark.cli ann-query --index DIR --query 0.1,0.2,... --k 10
     python -m ecmwf_models_spark.cli bench     [--sf-dir DIR --cpus N]
 
 Commands over a written table take the settings that fix its layout from
-the table's `_settings` (lineage.write_run_settings): `rollup`, `extend`
-and `read` the silver's n_cells, `ann-query` the index's method and
-table count. A table without them is refused.
+the table's `_settings` (lineage.write_run_settings): `rollup`, `audit`,
+`extend`, `read` and `update-img` the silver's n_cells, `ann-query` the
+index's method and table count. A table without them is refused.
+
+`rollup` re-rolls only the tier cells whose silver cell changed since
+their commit, so `extend` (or `update-img`, which extends and re-rolls)
+followed by `rollup` never serves a stale tier; `audit` checks each tier
+against a fresh rollup of the silver.
 
 On a real cluster each subcommand is the driver program for
 `spark-submit --py-files ecmwf_models_spark.zip`.
@@ -96,29 +102,73 @@ def cmd_reshuffle(args):
     print(f"silver written to {args.out}")
 
 
-def cmd_rollup(args):
+def rollup_silver(spark, silver: str, out: str, tiers=None) -> dict[str, int]:
+    """The body of `rollup` and of `update-img` after its stream: roll the
+    silver's pending cells up into <out>/<tier> through the lineage
+    writer; returns the cells committed per tier. The silver is filtered
+    to the cells some tier has pending (partition pruning) before the one
+    rollup_tiers cascade, so a re-roll after an extend reads only the
+    extended cells."""
+    from pyspark.sql import functions as F
+
     from .grid import with_cell_id
-    from .lineage import ResumableTierWriter
+    from .lineage import ResumableTierWriter, cell_generations, pending_cells
     from .operators.rollup import TIERS, finalize, rollup_tiers
+
+    tiers = tiers or TIERS
+    n_cells = _silver_n_cells(spark, silver)
+    lineage = f"{out}/_lineage"
+    src = spark.read.parquet(silver)
+    gens = cell_generations(src)
+    pending = sorted(
+        {c for t in tiers for c in pending_cells(spark, lineage, t, gens)}
+    )
+    frames = rollup_tiers(src.where(F.col("cell_id").isin(pending)))
+    done = {}
+    for tier in TIERS:
+        if tier not in tiers:
+            continue
+        w = ResumableTierWriter(spark, f"{out}/{tier}", lineage, tier=tier)
+        done[tier] = w.run(with_cell_id(finalize(frames[tier]), n_cells))
+        print(f"tier {tier}: {done[tier]} cells committed")
+    return done
+
+
+def cmd_rollup(args):
+    from .operators.rollup import TIERS
 
     tiers = args.tiers.split(",")
     unknown = sorted(set(tiers) - set(TIERS))
     if unknown:
         raise SystemExit(f"rollup: unknown tiers {unknown}; choose from {TIERS}")
+    rollup_silver(_spark(args), args.silver, args.out, tiers)
+
+
+def cmd_audit(args):
+    """ResumableTierWriter.verify of every tier in --out that has lineage
+    rows, against the tier rebuilt from --silver the way `rollup` builds
+    it; exits non-zero when any tier differs (e.g. a tier not re-rolled
+    after an extend) or when --out holds no committed tier."""
+    from .grid import with_cell_id
+    from .lineage import ResumableTierWriter, committed_cells
+    from .operators.rollup import TIERS, finalize, rollup_tiers
+
     spark = _spark(args)
     n_cells = _silver_n_cells(spark, args.silver)
+    lineage = f"{args.out}/_lineage"
+    tiers = [t for t in TIERS if committed_cells(spark, lineage, t)]
+    if not tiers:
+        raise SystemExit(f"audit: {lineage} records no committed tier")
     frames = rollup_tiers(spark.read.parquet(args.silver))
-    for tier in TIERS:
-        if tier not in tiers:
-            continue
-        w = ResumableTierWriter(
-            spark,
-            f"{args.out}/{tier}",
-            f"{args.out}/_lineage",
-            tier=tier,
-        )
-        n = w.run(with_cell_id(finalize(frames[tier]), n_cells))
-        print(f"tier {tier}: {n} cells committed")
+    bad = []
+    for tier in tiers:
+        w = ResumableTierWriter(spark, f"{args.out}/{tier}", lineage, tier=tier)
+        ok = w.verify(with_cell_id(finalize(frames[tier]), n_cells))
+        print(f"audit {tier}: {'ok' if ok else 'MISMATCH'}")
+        if not ok:
+            bad.append(tier)
+    if bad:
+        raise SystemExit(f"audit: tiers {bad} differ from {args.silver}")
 
 
 def cmd_extend(args):
@@ -143,35 +193,23 @@ def cmd_read(args):
 def cmd_update_img(args):
     """Streaming ingest pass — the reference's first-class `era5 update`
     image-extension command (reference cli.py:271-310 update_images):
-    process every bronze file not yet in the checkpoint into the hourly
-    stream rollup, then stop (Trigger.AvailableNow). Rerunning after new
-    files land processes only the delta."""
+    upsert every bronze file not yet in the checkpoint into the silver
+    (Trigger.AvailableNow, one extend_silver per micro-batch), then
+    re-roll the changed cells of every tier into --out as `rollup` does.
+    Rerunning after new files land processes only the delta."""
     from .streaming.ingest import run_available_now
 
     spark = _spark(args)
-    run_available_now(
+    # refuse a silver without _settings before the stream reads a file
+    _silver_n_cells(spark, args.silver)
+    cells = run_available_now(
         spark,
         input_dir=args.bronze,
-        out_dir=args.out,
-        checkpoint_dir=args.checkpoint or f"{args.out}/_checkpoint",
-        watermark=args.watermark,
+        silver_path=args.silver,
+        checkpoint_dir=args.checkpoint or f"{args.silver}/_checkpoint",
     )
-    from pyspark.errors import AnalysisException
-
-    from .lineage import is_path_not_found
-
-    try:
-        n = spark.read.parquet(args.out).count()
-    except AnalysisException as e:
-        # zero committed batches (empty bronze dir / all data late):
-        # the sink holds only _spark_metadata — a successful no-op, not
-        # an error (the reference's update_img on no new files). ONLY
-        # absence maps to 0; a genuinely unreadable/corrupt sink must
-        # surface, not masquerade as success.
-        if not is_path_not_found(e):
-            raise
-        n = 0
-    print(f"update-img: hourly stream table at {args.out} has {n} rows")
+    print(f"update-img: extended {len(cells)} cells of {args.silver}")
+    rollup_silver(spark, args.silver, args.out)
 
 
 def _parse_grid(spec: str):
@@ -356,6 +394,11 @@ def main(argv=None):
     s.add_argument("--tiers", default="hourly,daily,monthly")
     s.set_defaults(fn=cmd_rollup)
 
+    s = sub.add_parser("audit")
+    s.add_argument("--silver", required=True)
+    s.add_argument("--out", required=True)
+    s.set_defaults(fn=cmd_audit)
+
     s = sub.add_parser("extend")
     s.add_argument("--silver", required=True)
     s.add_argument("--bronze", required=True)
@@ -368,12 +411,12 @@ def main(argv=None):
 
     s = sub.add_parser("update-img")
     s.add_argument("--bronze", required=True, help="bronze file-stream dir")
-    s.add_argument("--out", required=True)
+    s.add_argument("--silver", required=True, help="written by reshuffle")
+    s.add_argument("--out", required=True, help="tiers dir, as rollup's")
     s.add_argument(
         "--checkpoint", default=None,
-        help="default: <out>/_checkpoint (resume state, plays overview.yml)",
+        help="default: <silver>/_checkpoint (resume state, plays overview.yml)",
     )
-    s.add_argument("--watermark", default="2 hours")
     s.set_defaults(fn=cmd_update_img)
 
     s = sub.add_parser("remap")

@@ -8,10 +8,12 @@ Semantics preserved here:
     silver table itself (agg max(ts)), the overview.yml role;
   * appended rows MERGE into existing per-conv series keeping the
     (conv_id, ts) ordering invariant (the CHANGELOG.rst:9-12 regression);
-  * only AFFECTED cells/buckets are recomputed downstream — at 100 TB a
-    daily extend touches a handful of bucket partitions, never the full
-    table: we compute the affected (cell_id) set from the new batch and
-    dynamically overwrite just those partitions.
+  * only AFFECTED cells are rewritten — at 100 TB a daily extend touches
+    a handful of cell partitions, never the full table: we compute the
+    affected (cell_id) set from the new batch and dynamically overwrite
+    just those partitions. The rewrite gives those cells a new generation
+    (lineage.cell_generations), so the next `rollup` re-rolls exactly
+    these tier cells (lineage.ResumableTierWriter) and no other.
 """
 
 from __future__ import annotations

@@ -12,9 +12,18 @@ lineage table:
 and a writer protocol that makes retention-tier materialization resumable
 MID-TIER: every cell directory is written atomically (task temp + rename is
 Spark's own commit protocol at partition-dir grain via dynamic partition
-overwrite), then the cells' lineage rows are committed. On rerun, committed
-cells are skipped (their ids filter the input) — exactly-once at cell
-grain without a transactional table format (SURVEY 7 plan B).
+overwrite), then the cells' lineage rows are committed. On rerun, cells
+committed from their current input are skipped (their ids filter the
+input) — exactly-once at cell grain without a transactional table format
+(SURVEY 7 plan B).
+
+A row's snapshot_id is the generation of the silver cell the tier cell
+was rolled up from (`cell_generations`): a digest of the part-file names
+in the cell's directory. Every silver write (write_silver, extend_silver)
+replaces a cell directory whole, and Spark names the files after the
+write job's UUID, so a generation changes exactly when its cell was
+rewritten. A tier cell whose latest commit carries another generation is
+stale and is re-rolled; the others are served as they are.
 
 The bookkeeping tables (`_lineage`, `_settings`, `_meta`) are plain parquet
 directories holding one small file per commit, as overview.yml is one small
@@ -33,6 +42,7 @@ stable under any task placement/parallelism.
 
 from __future__ import annotations
 
+import hashlib
 import time
 import uuid
 
@@ -121,10 +131,10 @@ def _committed_rows(spark: SparkSession, path: str, schema) -> list[dict]:
     return pa.concat_tables(tables).to_pylist() if tables else []
 
 
-def _latest(rows: list[dict], key) -> dict:
-    """key(row) -> value of the row with the latest committed_at."""
+def _latest(rows: list[dict], key, value: str = "value") -> dict:
+    """key(row) -> row[value] of the row with the latest committed_at."""
     return {
-        key(r): r["value"] for r in sorted(rows, key=lambda r: r["committed_at"])
+        key(r): r[value] for r in sorted(rows, key=lambda r: r["committed_at"])
     }
 
 
@@ -142,14 +152,48 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
         raise
 
 
+def committed_generations(
+    spark: SparkSession, path: str, tier: str
+) -> dict[int, str]:
+    """cell_id -> snapshot_id of the latest committed lineage row of
+    `tier`, read on the driver."""
+    rows = [
+        r
+        for r in _committed_rows(spark, path, LINEAGE_SCHEMA)
+        if r["tier"] == tier and r["status"] == "committed"
+    ]
+    return _latest(rows, lambda r: r["cell_id"], "snapshot_id")
+
+
 def committed_cells(spark: SparkSession, path: str, tier: str) -> list[int]:
-    return sorted(
-        {
-            r["cell_id"]
-            for r in _committed_rows(spark, path, LINEAGE_SCHEMA)
-            if r["tier"] == tier and r["status"] == "committed"
-        }
-    )
+    return sorted(committed_generations(spark, path, tier))
+
+
+def cell_generations(df: DataFrame) -> dict[int, str]:
+    """cell_id -> generation of each cell_id=<c> directory `df`'s plan
+    reads: a digest of the part-file names in it. df.inputFiles() is the
+    relation's file listing, already made when `df` was read, so this
+    launches no Spark job. {} for an input read from no cell directory
+    (an in-memory frame): its cells carry no generation."""
+    names: dict[int, list[str]] = {}
+    for f in df.inputFiles():
+        parent, _, name = f.rpartition("/")
+        key, _, cell = parent.rpartition("/")[2].partition("=")
+        if key == "cell_id":
+            names.setdefault(int(cell), []).append(name)
+    return {
+        c: hashlib.sha1("\n".join(sorted(v)).encode()).hexdigest()[:16]
+        for c, v in names.items()
+    }
+
+
+def pending_cells(
+    spark: SparkSession, path: str, tier: str, generations: dict[int, str]
+) -> list[int]:
+    """The cells of `generations` that `tier` has no commit of at that
+    generation: never rolled up, or rolled up from an older silver."""
+    done = committed_generations(spark, path, tier)
+    return sorted(c for c, g in generations.items() if done.get(c) != g)
 
 
 def cell_stats(df: DataFrame) -> DataFrame:
@@ -244,12 +288,15 @@ class ResumableTierWriter:
 
     Usage:
         w = ResumableTierWriter(spark, out_dir, lineage_dir, tier="daily")
-        w.run(df_with_cell_id)          # writes only uncommitted cells
+        w.run(df_with_cell_id)          # writes only pending cells
 
-    run() passes over its input once, in the write, and then audits what
-    was written: each cell's lineage row (row_count, checksum) comes from
-    the cell directories on disk, which are small next to the rollup that
-    produced them.
+    A cell is pending when it has no committed lineage row, or when its
+    latest one carries another generation than the input's cell
+    (`cell_generations`): run() after an extend re-rolls exactly the
+    extended cells. run() passes over its input once, in the write, and
+    then audits what was written: each cell's lineage row (row_count,
+    checksum) comes from the cell directories on disk, which are small
+    next to the rollup that produced them.
     """
 
     def __init__(
@@ -258,44 +305,46 @@ class ResumableTierWriter:
         out_dir: str,
         lineage_dir: str,
         tier: str,
-        snapshot_id: str = "",
         job_id: str | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.lineage_dir = lineage_dir
         self.tier = tier
-        self.snapshot_id = snapshot_id
         self.job_id = job_id or uuid.uuid4().hex[:12]
 
-    def _uncommitted_dirs(self, done: list[int]) -> list:
-        """Hadoop Paths of the cell_id=* directories with no committed
-        lineage row."""
+    def _cell_dirs(self, skip) -> list:
+        """Hadoop Paths of the cell_id=* directories whose cell is not in
+        `skip`."""
         fs, out = _fs_path(self.spark, self.out_dir)
         if not fs.exists(out):
             return []
-        done = set(done)
+        skip = set(skip)
         found = []
         for st in fs.listStatus(out):
             key, _, cell = st.getPath().getName().partition("=")
-            if st.isDirectory() and key == "cell_id" and int(cell) not in done:
+            if st.isDirectory() and key == "cell_id" and int(cell) not in skip:
                 found.append(st.getPath())
         return found
 
     def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
-        """Materialize uncommitted cells; returns number of cells committed.
+        """Materialize pending cells; returns number of cells committed.
 
         fail_after_cells simulates a crash between the cell write and the
         lineage commit for the resume test: every pending cell is written,
         the first k get their lineage rows, then it raises — the next run()
         must rewrite the rest and produce a byte-identical tier.
         """
-        done = committed_cells(self.spark, self.lineage_dir, self.tier)
-        # a cell directory without a committed lineage row is an earlier
+        gens = cell_generations(df)
+        committed = committed_generations(self.spark, self.lineage_dir, self.tier)
+        # a committed cell the input reads no files of keeps its commit
+        done = [c for c, g in committed.items() if gens.get(c, g) == g]
+        # a cell directory without any committed lineage row is an earlier
         # crash's leftover, not a tier cell: the write below replaces the
-        # ones still pending, this drops the rest
+        # ones still pending, this drops the rest. A stale cell keeps
+        # serving its last commit until the write replaces it.
         fs, _ = _fs_path(self.spark, self.out_dir)
-        for path in self._uncommitted_dirs(done):
+        for path in self._cell_dirs(committed):
             fs.delete(path, True)
         pend = df.where(~F.col("cell_id").isin(done)) if done else df
         # dynamic partition overwrite: each cell dir replaced atomically,
@@ -306,7 +355,7 @@ class ResumableTierWriter:
             .partitionBy("cell_id")
             .parquet(self.out_dir)
         )
-        written = [p.toString() for p in self._uncommitted_dirs(done)]
+        written = [p.toString() for p in self._cell_dirs(done)]
         if not written:
             return 0
         # the input's schema, so no job infers one from the files
@@ -324,7 +373,7 @@ class ResumableTierWriter:
                 self.job_id,
                 self.tier,
                 int(r["cell_id"]),
-                self.snapshot_id,
+                gens.get(r["cell_id"], ""),
                 int(r["row_count"]),
                 int(r["checksum"]),
                 "committed",
@@ -346,14 +395,22 @@ class ResumableTierWriter:
         return len(todo)
 
     def verify(self, df: DataFrame) -> bool:
-        """Write-audit: the input `df`, the committed lineage rows and the
-        written tier must hold the same cells with the same (row_count,
-        checksum). run() takes the lineage from the written cells, so only
-        the input's stats, recomputed here, catch a write that dropped or
-        changed rows."""
+        """Write-audit: the input `df`, the latest committed lineage row of
+        each cell and the written tier must hold the same cells with the
+        same (row_count, checksum). run() takes the lineage from the
+        written cells, so only the input's stats, recomputed here, catch a
+        write that dropped or changed rows — or a tier rolled up from an
+        older silver than `df`'s."""
         written = self.spark.read.parquet(self.out_dir).select(*df.columns)
-        committed = read_lineage(self.spark, self.lineage_dir).where(
-            (F.col("tier") == self.tier) & (F.col("status") == "committed")
+        latest = (
+            read_lineage(self.spark, self.lineage_dir)
+            .where((F.col("tier") == self.tier) & (F.col("status") == "committed"))
+            .groupBy("cell_id")
+            .agg(
+                F.max_by(F.struct("row_count", "checksum"), "committed_at").alias(
+                    "lineage"
+                )
+            )
         )
 
         def stats(d: DataFrame, name: str) -> DataFrame:
@@ -361,7 +418,7 @@ class ResumableTierWriter:
 
         bad = (
             stats(cell_stats(df), "want")
-            .join(stats(committed, "lineage"), "cell_id", "full_outer")
+            .join(latest, "cell_id", "full_outer")
             .join(stats(cell_stats(written), "got"), "cell_id", "full_outer")
             .where(
                 F.col("want").isNull()

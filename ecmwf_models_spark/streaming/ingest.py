@@ -1,21 +1,22 @@
-"""Structured Streaming ingest — the streaming generalization of the
-reference's incremental append (update_img/update_ts,
-reference era5/download.py:511-557, era5/reshuffle.py:254-308).
+"""Structured Streaming ingest — the streaming form of the reference's
+incremental append (update_img/update_ts, reference
+era5/download.py:511-557, era5/reshuffle.py:254-308).
 
 The reference polls for new files and extends; Structured Streaming's file
 source with Trigger.AvailableNow is exactly that contract (process all new
 files since the checkpoint, then stop), with the checkpoint directory
-playing overview.yml. Late preliminary data (ERA5-T revisions,
-reference I4) maps to a watermark + latest-wins dedup on replay.
-
-Pipeline: readStream(files) -> ts_bucket -> windowed hourly aggregate with
-watermark -> parquet sink. At scale this is the continuous-rollup tier;
-the batch cascade (operators/rollup.py) consumes its output.
+playing overview.yml. Streaming is used for file discovery and the
+checkpoint only: each micro-batch is upserted into the silver by
+incremental.extend_silver (latest-final-wins on (conv_id, turn_idx)), so a
+replayed batch is harmless, and late or revised turns land in their cell
+whatever their ts (reference I4). The tiers are then re-rolled from the
+changed silver cells (cli rollup_silver), so there is one hourly
+aggregate: operators/rollup.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -24,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..incremental import extend_silver
 
 BRONZE_SCHEMA = StructType(
     [
@@ -47,50 +50,27 @@ def stream_bronze(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def hourly_stream_rollup(bronze_stream: DataFrame, watermark: str = "2 hours"):
-    """Watermarked tumbling-window hourly aggregate of the turn metrics.
-    Watermark bounds state for late data; output mode append emits a
-    window once the watermark passes it."""
-    enriched = bronze_stream.where(~F.col("is_prelim")).withColumn(
-        "text_len", F.length("text").cast("float")
-    )
-    return (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("conv_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("text_len").cast("double")).alias("text_len_sum"),
-            F.min("text_len").alias("text_len_min"),
-            F.max("text_len").alias("text_len_max"),
-        )
-        .select(
-            F.col("win.start").alias("bucket_ts"),
-            "conv_id",
-            "n_turns",
-            "text_len_sum",
-            "text_len_min",
-            "text_len_max",
-        )
-    )
-
-
 def run_available_now(
     spark: SparkSession,
     input_dir: str,
-    out_dir: str,
+    silver_path: str,
     checkpoint_dir: str,
-    watermark: str = "2 hours",
-) -> None:
-    """One availableNow pass: process every file not yet in the checkpoint,
-    append results, stop — the update_ts contract. Rerunning after new
-    files land processes only the delta (resume-from-checkpoint)."""
-    agg = hourly_stream_rollup(stream_bronze(spark, input_dir), watermark)
+) -> list[int]:
+    """One availableNow pass: upsert every file not yet in the checkpoint
+    into the silver at `silver_path`, then stop — the update_ts contract.
+    Rerunning after new files land processes only the delta
+    (resume-from-checkpoint). Returns the silver cells extended."""
+    cells: set[int] = set()
+
+    def upsert(batch: DataFrame, _batch_id: int) -> None:
+        cells.update(extend_silver(batch.sparkSession, silver_path, batch))
+
     q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
+        stream_bronze(spark, input_dir)
+        .writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return sorted(cells)

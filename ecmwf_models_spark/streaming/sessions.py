@@ -135,15 +135,17 @@ def make_sessionizer(gap_hours: float = 6.0):
 def sessionize_stream(bronze_stream, gap_hours: float = 6.0):
     """bronze turn stream -> closed-session stream (append mode).
 
-    Preliminary rows are dropped up front (same final-over-preliminary
-    invariant as hourly_stream_rollup and the batch reshuffle): a prelim
-    duplicate of an already-seen turn would otherwise inflate
-    n_turns/text_len_sum with sentinel PRELIM text.
+    Preliminary rows are dropped up front (final-over-preliminary, as in
+    the batch reshuffle's dedup): a prelim duplicate of an already-seen
+    turn would otherwise inflate n_turns/text_len_sum with sentinel
+    PRELIM text.
 
     Ordering: gap detection sorts within the batch, and the state guard
     below never moves last_us backward, so a late batch can extend but
-    never corrupt an open session. True event-time lateness handling
-    (reordering across sessions) belongs to the watermarked rollup path."""
+    never corrupt an open session. A late turn counts toward the session
+    open when it arrives; an emitted session is never revised. The tiers
+    take late turns through the silver upsert and re-roll
+    (streaming/ingest.py), not through this operator."""
     from pyspark.sql.streaming.state import GroupStateTimeout
     import pyspark.sql.functions as F
 

@@ -155,3 +155,43 @@ def test_extend_affected_cells_match_reshuffle(tmp_path, spark):
     expected = cells(reshuffle(batch, n_cells=64))
     assert expected - final_cells  # the PRELIM-only convs add cells
     assert set(extend_silver(spark, path, batch, n_cells=64)) == expected
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="silver keeps neither is_prelim nor ingest_ts, so extend_silver "
+    "ranks a stored turn as final with ingest_ts = ts: a prelim turn "
+    "re-delivered as a later prelim keeps the stored text, where a "
+    "reshuffle of both deliveries keeps the later one",
+)
+def test_extend_prelim_redelivery_matches_reshuffle(tmp_path, spark):
+    """A turn first delivered preliminary ("A"), then re-delivered in an
+    extend as a later preliminary ("B"): the extended silver should hold
+    what a reshuffle of both deliveries holds, "B"."""
+    initial = gen_transcripts(spark, n_conv=10, days=2, turns_per_conv=6)
+    turn = initial.where(
+        (F.col("conv_id") == "conv-000002") & (F.col("turn_idx") == 5)
+        & ~F.col("is_prelim")
+    ).withColumns({"turn_idx": F.lit(6), "is_prelim": F.lit(True)})
+    a = turn.withColumn("text", F.lit("A"))
+    b = turn.withColumns(
+        {
+            "text": F.lit("B"),
+            "ingest_ts": F.col("ingest_ts") + F.expr("INTERVAL 1 HOUR"),
+        }
+    )
+    path = str(tmp_path / "silver_p")
+    write_silver(reshuffle(initial.unionByName(a), n_cells=8), path)
+    extend_silver(spark, path, b, n_cells=8)
+
+    def text(df):
+        return [
+            r[0]
+            for r in df.where("conv_id='conv-000002' and turn_idx=6")
+            .select("text")
+            .collect()
+        ]
+
+    want = text(reshuffle(initial.unionByName(a).unionByName(b), n_cells=8))
+    assert want == ["B"]
+    assert text(spark.read.parquet(path)) == want

@@ -236,14 +236,14 @@ def test_spark_reads_driver_committed_lineage(tmp_path, spark, daily_with_cells)
 
 
 def test_lineage_rows_complete(tmp_path, spark, daily_with_cells):
+    """One row per cell; an in-memory input reads no silver cell
+    directory, so its rows carry no generation (snapshot_id "")."""
     out, lin = str(tmp_path / "o2"), str(tmp_path / "l2")
-    w = ResumableTierWriter(
-        spark, out, lin, tier="daily", snapshot_id="snap-001"
-    )
+    w = ResumableTierWriter(spark, out, lin, tier="daily")
     w.run(daily_with_cells)
     lrows = read_lineage(spark, lin)
     assert lrows.count() == 16
-    assert lrows.where(F.col("snapshot_id") != "snap-001").count() == 0
+    assert lrows.where(F.col("snapshot_id") != "").count() == 0
     assert lrows.where(F.col("row_count") <= 0).count() == 0
     total = lrows.agg(F.sum("row_count")).first()[0]
     assert total == daily_with_cells.count()

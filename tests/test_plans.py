@@ -198,9 +198,11 @@ def test_rollup_tiers_single_exchange(bronze):
 
 
 def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
-    """`cli rollup` hands each tier writer rollup_tiers' frame, so a tier
-    subset still cascades through the in-flight lower tiers behind the
-    one exchange; an unknown tier name exits before any write."""
+    """`cli rollup` hands each tier writer rollup_tiers' frame over the
+    silver's pending cells (all 16 for a fresh tiers dir, pruned by
+    partition), so a tier subset still cascades through the in-flight
+    lower tiers behind the one exchange; an unknown tier name exits
+    before any write."""
     from ecmwf_models_spark import cli
     from ecmwf_models_spark.grid import with_cell_id
     from ecmwf_models_spark.lineage import (
@@ -228,7 +230,8 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
 
     rollup("daily")
     assert list(written) == ["daily"]
-    want = rollup_tiers(spark.read.parquet(path))["daily"]
+    pending = F.col("cell_id").isin(list(range(16)))
+    want = rollup_tiers(spark.read.parquet(path).where(pending))["daily"]
     want = with_cell_id(finalize(want), 16)
     got, want = (
         re.sub(r"#\d+|plan_id=\d+", "", plan_of(df, "simple"))
@@ -236,6 +239,7 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
     )
     assert got == want, got
     assert got.count("Exchange") == 1, got
+    assert "PartitionFilters: [cell_id INSET 0, 1, 10," in got, got
     written.clear()
     with pytest.raises(SystemExit):
         rollup("hourly,bogus")

@@ -1,70 +1,56 @@
-"""Structured Streaming ingest: availableNow incremental passes match the
-batch rollup, and the checkpoint makes rerun process only the delta.
-
-Event-time discipline: batches are split by ts (batch 2 strictly later),
-and a final sentinel row advances the watermark past every real window so
-append mode flushes them all."""
+"""Structured Streaming ingest: availableNow passes upsert each new bronze
+file into the silver, the silver then equals a reshuffle of all the
+bronze, and the checkpoint makes a rerun process only the delta."""
 
 import glob
 
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark.grid import with_cell_id
+from ecmwf_models_spark.lineage import write_run_settings
+from ecmwf_models_spark.operators.reshuffle import (
+    SILVER_COLS,
+    reshuffle,
+    write_silver,
+)
 from ecmwf_models_spark.streaming.ingest import run_available_now
 from ecmwf_models_spark.synth import gen_transcripts
 
 CUTOFF = "2010-01-02 00:00:00"
 
 
+def _same_rows(a, b) -> bool:
+    a, b = a.select(*SILVER_COLS), b.select(*SILVER_COLS)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 def test_available_now_incremental(tmp_path, spark):
     src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
+    silver = str(tmp_path / "silver")
     ckpt = str(tmp_path / "ckpt")
 
     full = gen_transcripts(spark, n_conv=30, days=2, turns_per_conv=8)
     batch1 = full.where(F.col("ts") < CUTOFF)
     batch2 = full.where(F.col("ts") >= CUTOFF)
-    sentinel = (
-        full.limit(1)
-        .withColumn("conv_id", F.lit("__sentinel__"))
-        .withColumn("ts", F.to_timestamp(F.lit("2010-02-01 00:00:00")))
-    )
 
     batch1.write.mode("append").parquet(src)
-    run_available_now(spark, src, out, ckpt, watermark="0 seconds")
-    n1 = spark.read.parquet(out).count()
-    assert n1 > 0
-    files_after_1 = set(glob.glob(out + "/*.parquet"))
+    write_silver(reshuffle(batch1, n_cells=8), silver)
+    write_run_settings(spark, f"{silver}/_settings", {"n_cells": 8})
 
+    # the first pass replays batch1 into the silver made from it: the
+    # upsert leaves the rows as they were
+    assert run_available_now(spark, src, silver, ckpt)
+    assert _same_rows(spark.read.parquet(silver), reshuffle(batch1, n_cells=8))
+
+    # the second pass upserts batch2 alone: the cells of its convs
     batch2.write.mode("append").parquet(src)
-    run_available_now(spark, src, out, ckpt, watermark="0 seconds")
-
-    # third pass: sentinel flushes the tail windows
-    sentinel.write.mode("append").parquet(src)
-    run_available_now(spark, src, out, ckpt, watermark="0 seconds")
-
-    streamed = (
-        spark.read.parquet(out)
-        .where(F.col("conv_id") != "__sentinel__")
+    cells = sorted(
+        r[0] for r in with_cell_id(batch2, 8).select("cell_id").distinct().collect()
     )
-    # each window emitted exactly once (no late data by construction)
-    assert (
-        streamed.groupBy("bucket_ts", "conv_id").count().where("count>1").count()
-        == 0
-    )
+    assert run_available_now(spark, src, silver, ckpt) == cells
+    assert _same_rows(spark.read.parquet(silver), reshuffle(full, n_cells=8))
 
-    batch_truth = (
-        full.where(~F.col("is_prelim"))
-        .withColumn("text_len", F.length("text").cast("float"))
-        .groupBy(F.date_trunc("hour", "ts").alias("bucket_ts"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("text_len").cast("double")).alias("text_len_sum"),
-        )
-    )
-    a = streamed.select("bucket_ts", "conv_id", "n_turns", "text_len_sum")
-    b = batch_truth.select("bucket_ts", "conv_id", "n_turns", "text_len_sum")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-    # second pass really appended new output (processed only the delta)
-    assert len(set(glob.glob(out + "/*.parquet")) - files_after_1) > 0
+    # no new file: nothing is extended, no silver file rewritten
+    files = sorted(glob.glob(silver + "/cell_id=*/*.parquet"))
+    assert run_available_now(spark, src, silver, ckpt) == []
+    assert sorted(glob.glob(silver + "/cell_id=*/*.parquet")) == files

@@ -69,26 +69,11 @@ def _engine_queries(spark, sf_dir):
         # shuffle, no per-group overhead (pack_cells is the baseline)
         return codec.pack_cells_stream(_silver())
 
-    def minhash_lsh_pairs_fast():
-        # PRODUCTION MinHash path: xxhash64 (JVM codegen, no md5 strings).
-        # The oracled `minhash_lsh_pairs` entry runs portable=True (md5)
-        # solely for DuckDB bit-parity. Measured at sf0.1 the two are
-        # within ~5%: since the Kirsch-Mitzenmacher single-hash rewrite,
-        # the shingle explode + profile groupBy dominate, not hashing —
-        # both entries stay in the bench so that remains visible.
-        from ecmwf_models_spark.functions import text as TXT
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return TXT.minhash_dedup_pairs(
-            docs, num_hashes=32, bands=8, threshold=0.5, portable=False
-        )
-
     return {
         "eng_reshuffle": eng_reshuffle,
         "eng_rollup_cascade": eng_rollup_cascade,
         "eng_gapfill": eng_gapfill,
         "eng_pack": eng_pack,
-        "minhash_lsh_pairs_fast": minhash_lsh_pairs_fast,
     }, bronze
 
 

@@ -194,8 +194,9 @@ def cmd_update_img(args):
     """Streaming ingest pass — the reference's first-class `era5 update`
     image-extension command (reference cli.py:271-310 update_images):
     upsert every bronze file not yet in the checkpoint into the silver
-    (Trigger.AvailableNow, one extend_silver per micro-batch), then
-    re-roll the changed cells of every tier into --out as `rollup` does.
+    (Trigger.AvailableNow, one micro-batch and one extend_silver per
+    pass), then re-roll the changed cells of every tier into --out as
+    `rollup` does.
     Rerunning after new files land processes only the delta."""
     from .streaming.ingest import run_available_now
 

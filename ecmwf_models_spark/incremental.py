@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .grid import with_cell_id
-from .operators.dedup import latest_final_wins
 from .operators.reshuffle import reshuffle
 
 
@@ -39,10 +38,11 @@ def extend_silver(
     """Merge a new bronze batch into the silver table.
 
     Re-reshuffles ONLY the cells touched by the batch: existing rows of
-    those cells are unioned with the new rows, de-duplicated
-    (latest-final-wins upsert on (conv_id, turn_idx) — the ERA5-T revision
-    policy as upsert), re-sorted, and the cell partitions dynamically
-    overwritten. Returns the affected cell ids.
+    those cells are unioned with the new rows, and `reshuffle`
+    de-duplicates them (latest-final-wins upsert on (conv_id, turn_idx) —
+    the ERA5-T revision policy as upsert; the rule and its tie-breaks are
+    the full recompute's), re-sorts them, and the cell partitions are
+    dynamically overwritten. Returns the affected cell ids.
 
     Run-kwargs contract (reference era5/reshuffle.py:280-295: extend_ts
     reads its parameters from overview.yml, explicit kwargs win): with
@@ -52,15 +52,10 @@ def extend_silver(
     A silver that records no n_cells raises ValueError: its grid is not
     guessed.
     """
-    from .lineage import read_run_settings
+    from .lineage import stored_n_cells
 
     if n_cells is None:
-        stored = read_run_settings(spark, f"{silver_path}/_settings")
-        if "n_cells" not in stored:
-            raise ValueError(
-                f"{silver_path}/_settings records no n_cells; pass n_cells"
-            )
-        n_cells = int(stored["n_cells"])
+        n_cells = stored_n_cells(spark, silver_path)
     # a turn's cell depends only on its conv_id, so the batch's cells
     # need no transpose (no range sample, no shuffle of the batch)
     affected = [
@@ -83,7 +78,7 @@ def extend_silver(
     ).withColumns(
         {"is_prelim": F.lit(False), "ingest_ts": F.col("ts")}
     ).unionByName(
-        latest_final_wins(new_bronze).select(
+        new_bronze.select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts",
             "is_prelim", "ingest_ts",
         )

@@ -138,31 +138,30 @@ def _latest(rows: list[dict], key, value: str = "value") -> dict:
     }
 
 
-def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    """The lineage table as a Spark frame, for audits; empty when the
-    table does not exist. Existence is decided by Spark's own filesystem
-    resolution (HDFS/S3/local alike)."""
-    try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        # ONLY absence maps to empty; any other analysis failure (broken
-        # permissions, conflicting metadata) must surface
-        if is_path_not_found(e):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
-        raise
+def _latest_commits(
+    spark: SparkSession, path: str, tier: str
+) -> dict[int, dict]:
+    """cell_id -> the latest committed lineage row of `tier`, read on the
+    driver."""
+    rows = sorted(
+        (
+            r
+            for r in _committed_rows(spark, path, LINEAGE_SCHEMA)
+            if r["tier"] == tier and r["status"] == "committed"
+        ),
+        key=lambda r: r["committed_at"],
+    )
+    return {r["cell_id"]: r for r in rows}
 
 
 def committed_generations(
     spark: SparkSession, path: str, tier: str
 ) -> dict[int, str]:
     """cell_id -> snapshot_id of the latest committed lineage row of
-    `tier`, read on the driver."""
-    rows = [
-        r
-        for r in _committed_rows(spark, path, LINEAGE_SCHEMA)
-        if r["tier"] == tier and r["status"] == "committed"
-    ]
-    return _latest(rows, lambda r: r["cell_id"], "snapshot_id")
+    `tier`."""
+    return {
+        c: r["snapshot_id"] for c, r in _latest_commits(spark, path, tier).items()
+    }
 
 
 def committed_cells(spark: SparkSession, path: str, tier: str) -> list[int]:
@@ -238,6 +237,18 @@ def read_run_settings(spark: SparkSession, path: str) -> dict:
     return _latest(
         _committed_rows(spark, path, SETTINGS_SCHEMA), lambda r: r["key"]
     )
+
+
+def stored_n_cells(spark: SparkSession, silver_path: str) -> int:
+    """The n_cells the silver at `silver_path` was written with, from its
+    _settings. A silver that records none raises ValueError: its grid is
+    not guessed, since a wrong n_cells routes convs to the wrong cells."""
+    stored = read_run_settings(spark, f"{silver_path}/_settings")
+    if "n_cells" not in stored:
+        raise ValueError(
+            f"{silver_path}/_settings records no n_cells; pass n_cells"
+        )
+    return int(stored["n_cells"])
 
 
 ATTRS_SCHEMA = T.StructType(
@@ -400,31 +411,20 @@ class ResumableTierWriter:
         same (row_count, checksum). run() takes the lineage from the
         written cells, so only the input's stats, recomputed here, catch a
         write that dropped or changed rows — or a tier rolled up from an
-        older silver than `df`'s."""
+        older silver than `df`'s. The three per-cell dicts are compared on
+        the driver; the lineage is read there too, not by Spark."""
+
+        def stats(d: DataFrame) -> dict:
+            return {
+                r["cell_id"]: (r["row_count"], r["checksum"])
+                for r in cell_stats(d).collect()
+            }
+
         written = self.spark.read.parquet(self.out_dir).select(*df.columns)
-        latest = (
-            read_lineage(self.spark, self.lineage_dir)
-            .where((F.col("tier") == self.tier) & (F.col("status") == "committed"))
-            .groupBy("cell_id")
-            .agg(
-                F.max_by(F.struct("row_count", "checksum"), "committed_at").alias(
-                    "lineage"
-                )
-            )
-        )
-
-        def stats(d: DataFrame, name: str) -> DataFrame:
-            return d.select("cell_id", F.struct("row_count", "checksum").alias(name))
-
-        bad = (
-            stats(cell_stats(df), "want")
-            .join(latest, "cell_id", "full_outer")
-            .join(stats(cell_stats(written), "got"), "cell_id", "full_outer")
-            .where(
-                F.col("want").isNull()
-                | ~F.col("lineage").eqNullSafe(F.col("want"))
-                | ~F.col("got").eqNullSafe(F.col("want"))
-            )
-            .count()
-        )
-        return bad == 0
+        lineage = {
+            c: (r["row_count"], r["checksum"])
+            for c, r in _latest_commits(
+                self.spark, self.lineage_dir, self.tier
+            ).items()
+        }
+        return stats(df) == lineage == stats(written)

@@ -26,8 +26,7 @@ import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..grid import DEFAULT_N_CELLS
-from ..lineage import is_path_not_found, read_table_attrs
+from ..lineage import is_path_not_found, read_table_attrs, stored_n_cells
 
 # seed of Spark's xxhash64 (XxHash64 in catalyst hash.scala)
 _XXHASH64_SEED = 42
@@ -56,13 +55,18 @@ def cell_id_for(spark: SparkSession, conv_id: str, n_cells: int) -> int:
 
 
 class TsReader:
-    """ERATs analogue over the cell-partitioned silver table."""
+    """ERATs analogue over the cell-partitioned silver table.
+
+    n_cells=None takes the grid from <silver>/_settings, as extend_silver
+    does, and raises ValueError when the silver records none: a reader
+    routing with another grid than the write's would return empty frames
+    for most convs."""
 
     def __init__(
         self,
         spark: SparkSession,
         silver_path: str,
-        n_cells: int = DEFAULT_N_CELLS,
+        n_cells: int | None = None,
         read_bulk: bool = False,
         parameters: list[str] | None = None,
         offsets: dict[str, float] | None = None,
@@ -70,6 +74,9 @@ class TsReader:
     ):
         self.spark = spark
         self.silver_path = silver_path
+        self.n_cells = (
+            stored_n_cells(spark, silver_path) if n_cells is None else n_cells
+        )
         # table schema (cell_id included, as a partition column); each read
         # scans one cell directory with it, so no read infers a schema
         self.schema = spark.read.parquet(silver_path).schema
@@ -77,7 +84,6 @@ class TsReader:
         # the reference reads these back onto the returned dataset
         # (interface.py:185; GriddedNcOrthoMultiTs variable attrs)
         self.attrs = read_table_attrs(spark, f"{silver_path}/_meta")
-        self.n_cells = n_cells
         self.read_bulk = read_bulk
         self.parameters = parameters
         self.offsets = offsets or {}

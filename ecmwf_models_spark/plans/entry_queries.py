@@ -695,17 +695,15 @@ ORDER BY cos_sim DESC, vec_id LIMIT 10
 """
 
 
-# ---------------------------------------- portable-hash dedup (oracled)
+# ---------------------------------------------- md5-hash dedup (oracled)
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash-LSH near-dup pipeline, portable md5 hashes so the ENTIRE
+    """MinHash-LSH near-dup pipeline (functions/text.py
+    minhash_dedup_pairs): its hashes are md5-derived, so the ENTIRE
     pipeline (signature -> banding -> candidates -> verify) reproduces
-    bit-for-bit in DuckDB (functions/text.py minhash_dedup_pairs;
-    production path swaps in xxhash64 via portable=False)."""
+    bit-for-bit in DuckDB."""
     docs = _t(spark, sf_dir, "documents")
-    return TXT.minhash_dedup_pairs(
-        docs, num_hashes=32, bands=8, threshold=0.5, portable=True
-    )
+    return TXT.minhash_dedup_pairs(docs, num_hashes=32, bands=8, threshold=0.5)
 
 
 _MH_SETS_CTE = """
@@ -787,7 +785,7 @@ def q_simhash_pairs(spark, sf_dir):
     negatives) + full Hamming verify. The oracle brute-forces all pairs,
     so this also PROVES the blocking loses nothing."""
     docs = _t(spark, sf_dir, "documents")
-    return TXT.simhash_near_pairs(docs, max_hamming=3, portable=True)
+    return TXT.simhash_near_pairs(docs, max_hamming=3)
 
 
 ORACLE_SIMHASH_PAIRS = f"""
@@ -2158,13 +2156,11 @@ GROUP BY 1
 # ------------------------------------------------- sessionization (batch)
 
 def q_sessionize_gaps(spark, sf_dir):
-    """Gap-based sessionization through the PRODUCTION batch twin of the
-    stateful streaming sessionizer (streaming/sessions.py
-    sessionize_batch; tests/test_sessionize.py proves stateful == batch
-    on the same input). events shimmed to the transcript schema
-    (user_id -> conv_id, event_type as the text payload so length() is
-    engine-portable)."""
-    from ..streaming.sessions import sessionize_batch
+    """Gap-based sessionization through the production sessionizer
+    (operators/sessions.py sessionize_batch). events shimmed to the
+    transcript schema (user_id -> conv_id, event_type as the text payload
+    so length() is engine-portable)."""
+    from ..operators.sessions import sessionize_batch
 
     ev = _t(spark, sf_dir, "events").select(
         F.col("user_id").alias("conv_id"),

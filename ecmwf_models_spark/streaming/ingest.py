@@ -6,12 +6,12 @@ The reference polls for new files and extends; Structured Streaming's file
 source with Trigger.AvailableNow is exactly that contract (process all new
 files since the checkpoint, then stop), with the checkpoint directory
 playing overview.yml. Streaming is used for file discovery and the
-checkpoint only: each micro-batch is upserted into the silver by
-incremental.extend_silver (latest-final-wins on (conv_id, turn_idx)), so a
-replayed batch is harmless, and late or revised turns land in their cell
-whatever their ts (reference I4). The tiers are then re-rolled from the
-changed silver cells (cli rollup_silver), so there is one hourly
-aggregate: operators/rollup.py.
+checkpoint only: each pass's single micro-batch is upserted into the
+silver by incremental.extend_silver (latest-final-wins on (conv_id,
+turn_idx)), so a replayed batch is harmless, and late or revised turns
+land in their cell whatever their ts (reference I4). The tiers are then
+re-rolled from the changed silver cells (cli rollup_silver), so there is
+one hourly aggregate: operators/rollup.py.
 """
 
 from __future__ import annotations
@@ -43,11 +43,10 @@ BRONZE_SCHEMA = StructType(
 
 
 def stream_bronze(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(BRONZE_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
+    """The bronze file stream. No maxFilesPerTrigger: an availableNow pass
+    takes every new file in one micro-batch, so each touched silver cell
+    is rewritten once per pass, not once per batch of files."""
+    return spark.readStream.schema(BRONZE_SCHEMA).parquet(input_dir)
 
 
 def run_available_now(

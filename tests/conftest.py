@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ecmwf_models_spark import cli  # noqa: E402
 from ecmwf_models_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -31,3 +32,35 @@ def bronze(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def argv_runner(spark, monkeypatch):
+    # cli._spark would build its own session; reuse the test one
+    monkeypatch.setattr(cli, "_spark", lambda args: spark)
+
+    def run(*argv):
+        cli.main(list(argv))
+
+    return run
+
+
+@pytest.fixture()
+def jvm_log(spark):
+    """Everything the JVM logs while the test runs, as one string (a
+    log4j writer appender on the root logger)."""
+    jvm = spark._jvm
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    text = jvm.java.io.StringWriter()
+    app = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
+        jvm.org.apache.logging.log4j.core.layout.PatternLayout.createDefaultLayout(),
+        None, text, "test-capture", False, True,
+    )
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    yield text.toString
+    root.removeAppender("test-capture")
+    ctx.updateLoggers()
+    app.stop()

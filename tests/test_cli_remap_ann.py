@@ -9,19 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from ecmwf_models_spark import cli
 from ecmwf_models_spark.functions import similarity as S
-
-
-@pytest.fixture()
-def argv_runner(spark, monkeypatch):
-    # cli._spark would build its own session; reuse the test one
-    monkeypatch.setattr(cli, "_spark", lambda args: spark)
-
-    def run(*argv):
-        cli.main(list(argv))
-
-    return run
 
 
 def test_cli_remap_con_and_con2(spark, tmp_path, argv_runner):
@@ -89,27 +77,6 @@ def test_cli_remap_bilinear_2d(spark, tmp_path, argv_runner):
     )
     assert got.loc[0, "value_remap"] == pytest.approx(2.0 * 0.5 + 3.0 * 1.5)
     assert got.loc[1, "value_remap"] == pytest.approx(2.0 * 2.25 + 3.0 * 0.75)
-
-
-@pytest.fixture()
-def jvm_log(spark):
-    """Everything the JVM logs while the test runs, as one string (a
-    log4j writer appender on the root logger)."""
-    jvm = spark._jvm
-    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
-    root = ctx.getConfiguration().getRootLogger()
-    text = jvm.java.io.StringWriter()
-    app = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
-        jvm.org.apache.logging.log4j.core.layout.PatternLayout.createDefaultLayout(),
-        None, text, "test-capture", False, True,
-    )
-    app.start()
-    root.addAppender(app, None, None)
-    ctx.updateLoggers()
-    yield text.toString
-    root.removeAppender("test-capture")
-    ctx.updateLoggers()
-    app.stop()
 
 
 def _query_arg(qv) -> str:

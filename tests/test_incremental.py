@@ -157,6 +157,44 @@ def test_extend_affected_cells_match_reshuffle(tmp_path, spark):
     assert set(extend_silver(spark, path, batch, n_cells=64)) == expected
 
 
+def test_extend_batch_duplicates_dedup_as_reshuffle(tmp_path, spark):
+    """A batch holding a new turn twice, (is_prelim NULL, ingest 09:00, "A")
+    and (final, ingest 10:00, "B"): extend_silver resolves it by
+    reshuffle's rule (NULL is_prelim counts as final, so the later ingest
+    wins) and the silver equals a reshuffle of all the bronze, "B"."""
+    initial = gen_transcripts(spark, n_conv=10, days=2, turns_per_conv=6)
+    path = str(tmp_path / "silver_d")
+    write_silver(reshuffle(initial, n_cells=8), path)
+    turn = initial.where(
+        (F.col("conv_id") == "conv-000002") & (F.col("turn_idx") == 5)
+        & ~F.col("is_prelim")
+    ).withColumns(
+        {"turn_idx": F.lit(6), "ts": F.col("ts") + F.expr("INTERVAL 1 HOUR")}
+    )
+    batch = turn.withColumns(
+        {
+            "text": F.lit("A"),
+            "is_prelim": F.lit(None).cast("boolean"),
+            "ingest_ts": F.lit("2010-01-05 09:00:00").cast("timestamp"),
+        }
+    ).unionByName(
+        turn.withColumns(
+            {
+                "text": F.lit("B"),
+                "ingest_ts": F.lit("2010-01-05 10:00:00").cast("timestamp"),
+            }
+        )
+    )
+    extend_silver(spark, path, batch, n_cells=8)
+
+    got = spark.read.parquet(path)
+    want = reshuffle(initial.unionByName(batch), n_cells=8).select(*got.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    new = got.where("conv_id='conv-000002' and turn_idx=6").select("text")
+    assert [r[0] for r in new.collect()] == ["B"]
+
+
 @pytest.mark.xfail(
     strict=True,
     reason="silver keeps neither is_prelim nor ingest_ts, so extend_silver "

@@ -14,7 +14,6 @@ from ecmwf_models_spark.lineage import (
     SETTINGS_SCHEMA,
     ResumableTierWriter,
     committed_cells,
-    read_lineage,
     read_run_settings,
     read_table_attrs,
     write_run_settings,
@@ -60,8 +59,8 @@ def test_crash_and_resume_identical(tmp_path, spark, daily_with_cells):
     w1 = ResumableTierWriter(spark, out, lin, tier="daily")
     with pytest.raises(RuntimeError, match="simulated crash"):
         w1.run(df, fail_after_cells=5)
-    committed = read_lineage(spark, lin).where("status='committed'").count()
-    assert committed == 5
+    lrows = lineage._committed_rows(spark, lin, LINEAGE_SCHEMA)
+    assert sum(r["status"] == "committed" for r in lrows) == 5
 
     # resume with a NEW job: only the remaining 11 cells are processed
     w2 = ResumableTierWriter(spark, out, lin, tier="daily")
@@ -241,12 +240,11 @@ def test_lineage_rows_complete(tmp_path, spark, daily_with_cells):
     out, lin = str(tmp_path / "o2"), str(tmp_path / "l2")
     w = ResumableTierWriter(spark, out, lin, tier="daily")
     w.run(daily_with_cells)
-    lrows = read_lineage(spark, lin)
-    assert lrows.count() == 16
-    assert lrows.where(F.col("snapshot_id") != "").count() == 0
-    assert lrows.where(F.col("row_count") <= 0).count() == 0
-    total = lrows.agg(F.sum("row_count")).first()[0]
-    assert total == daily_with_cells.count()
+    lrows = lineage._committed_rows(spark, lin, LINEAGE_SCHEMA)
+    assert len(lrows) == 16
+    assert all(r["snapshot_id"] == "" for r in lrows)
+    assert all(r["row_count"] > 0 for r in lrows)
+    assert sum(r["row_count"] for r in lrows) == daily_with_cells.count()
 
 
 def test_attrs_propagate_reshuffle_rollup_read(tmp_path, spark, bronze):

@@ -9,6 +9,7 @@ Spark job. A reader opened before `extend_silver` must see the extend.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pandas as pd
@@ -16,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark.incremental import extend_silver
-from ecmwf_models_spark.lineage import read_table_attrs
+from ecmwf_models_spark.lineage import read_table_attrs, write_run_settings
 from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.synth import gen_transcripts
@@ -35,6 +36,7 @@ RESCALED = dict(
 def silver16(tmp_path_factory, bronze):
     path = str(tmp_path_factory.mktemp("pointread") / "silver")
     write_silver(reshuffle(bronze, n_cells=16, num_partitions=8), path)
+    write_run_settings(bronze.sparkSession, f"{path}/_settings", {"n_cells": 16})
     return path
 
 
@@ -134,6 +136,22 @@ def test_reader_sees_extends_after_open(spark, tmp_path):
     assert (after["turn_idx"] >= 100).sum() == len(before)
     want = spark_read(spark, path, "conv-000003")
     pd.testing.assert_frame_equal(after, want)
+
+
+def test_reader_takes_n_cells_from_settings(spark, silver16, tmp_path):
+    """Without n_cells the reader routes with the grid in <silver>/_settings
+    (16 here, not grid.DEFAULT_N_CELLS); a silver that records none is
+    refused rather than read with a guessed grid."""
+    r = TsReader(spark, silver16)
+    assert r.n_cells == 16
+    for conv in CONVS[:3]:
+        got = r.read(conv)
+        assert len(got) > 0
+        pd.testing.assert_frame_equal(got, spark_read(spark, silver16, conv))
+    bare = str(tmp_path / "bare")
+    shutil.copytree(silver16, bare, ignore=shutil.ignore_patterns("_settings"))
+    with pytest.raises(ValueError, match="n_cells"):
+        TsReader(spark, bare)
 
 
 def test_read_is_one_job_and_routing_none(spark, silver16):

@@ -108,7 +108,13 @@ def _tier_frame(spark, silver: str, tier: str):
     return with_cell_id(finalize(rollup_tiers(spark.read.parquet(silver))[tier]), N)
 
 
-def test_reroll_after_extend_matches_fresh_rollup(tmp_path, spark, extended):
+def test_reroll_after_extend_matches_fresh_rollup(
+    tmp_path, spark, extended, argv_runner, capsys, jvm_log
+):
+    """The re-roll commits exactly the extended cells and gives the tiers a
+    fresh rollup gives. `cli audit` then passes; it reads the lineage on
+    the driver, so it logs no "All paths were ignored" warning for the
+    underscore-prefixed _lineage directory."""
     base, cells = extended
     silver, tiers = _copy(base, tmp_path / "w")
     before_files = _files(tiers)
@@ -141,6 +147,13 @@ def test_reroll_after_extend_matches_fresh_rollup(tmp_path, spark, extended):
     assert daily.verify(_tier_frame(spark, silver, "daily"))
 
     assert rollup_silver(spark, silver, tiers) == {t: 0 for t in TIERS}
+
+    capsys.readouterr()
+    argv_runner("audit", "--silver", silver, "--out", tiers)
+    out = capsys.readouterr().out
+    for t in TIERS:
+        assert f"audit {t}: ok" in out, out
+    assert "All paths were ignored" not in jvm_log()
 
 
 def test_crash_mid_reroll_resumes_to_same_tiers(tmp_path, spark, extended):

@@ -1,10 +1,7 @@
-"""Custom stateful streaming operator (applyInPandasWithState):
-conversation sessionization with cross-run state resume.
-
-A session closes when the next turn arrives > gap after the previous one.
-Batch 2 runs in a SEPARATE availableNow pass, so closing the sessions
-opened by batch 1 requires per-conv state restored from the checkpoint —
-the update_ts resume contract generalized to arbitrary state."""
+"""Gap-based conversation sessionization (operators/sessions.py): a
+session closes when the next turn comes more than the gap after the
+previous one. Over the silver, a re-delivered final counts once and a
+late turn joins the session its ts belongs to."""
 
 from __future__ import annotations
 
@@ -12,9 +9,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from ecmwf_models_spark.streaming.sessions import (
-    run_sessionize_available_now,
-)
+from ecmwf_models_spark.operators.reshuffle import reshuffle
+from ecmwf_models_spark.operators.sessions import sessionize_batch
 
 
 def _bronze_rows(spark, rows):
@@ -31,123 +27,44 @@ def T(s):
     return dt.datetime.fromisoformat(s)
 
 
-def test_sessionize_closes_across_runs(tmp_path, spark):
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # batch 1: conv A has two sessions' worth of turns (big gap inside the
-    # batch), conv B one open session
-    batch1 = _bronze_rows(spark, [
-        ("A", 0, "user", "aaaa", None, T("2010-01-01 00:00:00")),
-        ("A", 1, "assistant", "bbbbbb", None, T("2010-01-01 00:30:00")),
-        ("A", 2, "user", "cc", None, T("2010-01-02 10:00:00")),  # gap > 6h
-        ("B", 0, "user", "dddd", None, T("2010-01-01 05:00:00")),
-    ])
-    batch1.write.mode("append").parquet(src)
-    run_sessionize_available_now(spark, src, out, ckpt, gap_hours=6)
-
-    s1 = spark.read.parquet(out)
-    # only conv A's FIRST session can be closed so far
-    assert s1.count() == 1
-    r = s1.first()
-    assert r["conv_id"] == "A" and r["n_turns"] == 2
-    assert r["session_start"] == T("2010-01-01 00:00:00")
-    assert r["session_end"] == T("2010-01-01 00:30:00")
-    assert r["text_len_sum"] == 10.0  # 4 + 6
-
-    # batch 2 (separate run): late turns close A's second session and B's
-    batch2 = _bronze_rows(spark, [
-        ("A", 3, "user", "e", None, T("2010-01-03 00:00:00")),  # gap > 6h
-        ("B", 1, "user", "ff", None, T("2010-01-02 00:00:00")),  # gap > 6h
-    ])
-    batch2.write.mode("append").parquet(src)
-    run_sessionize_available_now(spark, src, out, ckpt, gap_hours=6)
-
-    s2 = spark.read.parquet(out).orderBy("conv_id", "session_start")
-    rows = s2.collect()
-    assert len(rows) == 3
-    a2 = [r for r in rows if r["conv_id"] == "A"][1]
-    assert a2["session_start"] == T("2010-01-02 10:00:00")
-    assert a2["session_end"] == T("2010-01-02 10:00:00")
-    assert a2["n_turns"] == 1 and a2["text_len_sum"] == 2.0
-    b1 = [r for r in rows if r["conv_id"] == "B"][0]
-    assert b1["n_turns"] == 1 and b1["session_end"] == T("2010-01-01 05:00:00")
+def _sessions(df):
+    return sorted(
+        (r["conv_id"], r["session_start"], r["session_end"], r["n_turns"],
+         r["text_len_sum"])
+        for r in sessionize_batch(df, gap_hours=6).collect()
+    )
 
 
-def test_sessionize_multi_session_single_batch(tmp_path, spark):
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+def test_sessionize_multi_session_single_batch(spark):
     rows = [
         ("C", i, "user", "x" * (i + 1), None,
          T("2010-01-01 00:00:00") + dt.timedelta(hours=10 * i))
         for i in range(5)
-    ]  # every consecutive pair gapped by 10h > 6h -> 4 closed + 1 open
-    _bronze_rows(spark, rows).write.mode("append").parquet(src)
-    run_sessionize_available_now(spark, src, out, ckpt, gap_hours=6)
-    s = spark.read.parquet(out).orderBy("session_start").collect()
-    assert len(s) == 4
-    assert [r["n_turns"] for r in s] == [1, 1, 1, 1]
-    assert [r["text_len_sum"] for r in s] == [1.0, 2.0, 3.0, 4.0]
+    ]  # every consecutive pair gapped by 10h > 6h -> 5 sessions
+    s = _sessions(_bronze_rows(spark, rows))
+    assert len(s) == 5
+    assert [r[3] for r in s] == [1, 1, 1, 1, 1]
+    assert [r[4] for r in s] == [1.0, 2.0, 3.0, 4.0, 5.0]
+    assert all(r[1] == r[2] for r in s)
 
 
-def test_batch_twin_matches_stateful(tmp_path, spark):
-    """sessionize_batch (the oracle-able SQL-window form) agrees with the
-    stateful streaming path on the same input: every CLOSED session is
-    identical, and the only extra batch rows are each conv's final
-    still-open session (streaming keeps those in state). Includes a
-    session SPANNING the two availableNow runs (conv C: one turn per
-    batch, within gap) — the resume case."""
-    from ecmwf_models_spark.streaming.sessions import sessionize_batch
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    batch1 = _bronze_rows(spark, [
+def test_sessionize_silver_counts_redelivery_once_and_late_in_place(spark):
+    """A re-delivered final of turn 1 and a late turn 3 (ts between turns
+    1 and 2, ingested last): over the silver, A's first session holds
+    turns 0, 1 (revised text) and 3, and its second only turn 2."""
+    first = _bronze_rows(spark, [
         ("A", 0, "user", "aaaa", None, T("2010-01-01 00:00:00")),
         ("A", 1, "assistant", "bbbbbb", None, T("2010-01-01 00:30:00")),
         ("A", 2, "user", "cc", None, T("2010-01-02 10:00:00")),
         ("B", 0, "user", "dddd", None, T("2010-01-01 05:00:00")),
-        ("C", 0, "user", "xx", None, T("2010-01-01 08:00:00")),
     ])
-    batch1.write.mode("append").parquet(src)
-    run_sessionize_available_now(spark, src, out, ckpt, gap_hours=6)
-    batch2 = _bronze_rows(spark, [
-        ("A", 3, "user", "e", None, T("2010-01-03 00:00:00")),
-        ("B", 1, "user", "ff", None, T("2010-01-02 00:00:00")),
-        # C continues its open session ACROSS the run boundary (gap 4h)
-        ("C", 1, "assistant", "yyy", None, T("2010-01-01 12:00:00")),
-        # then a gap closes it inside batch 2
-        ("C", 2, "user", "z", None, T("2010-01-02 12:00:00")),
-    ])
-    batch2.write.mode("append").parquet(src)
-    run_sessionize_available_now(spark, src, out, ckpt, gap_hours=6)
-
-    def rowset(df):
-        return {
-            (r["conv_id"], r["session_start"], r["session_end"],
-             r["n_turns"], r["text_len_sum"])
-            for r in df.collect()
-        }
-
-    stateful = rowset(spark.read.parquet(out))
-
-    all_turns = batch1.unionByName(batch2)
-    batch_sessions = sessionize_batch(all_turns, gap_hours=6)
-    full = rowset(batch_sessions)
-    # drop each conv's final (max-start) session: still open in streaming
-    from pyspark.sql import Window
-    w = Window.partitionBy("conv_id")
-    closed = rowset(
-        batch_sessions.withColumn(
-            "_last", F.max("session_start").over(w)
-        ).where(F.col("session_start") != F.col("_last")).drop("_last")
-    )
-
-    assert stateful == closed
-    # sanity: the cross-boundary session C[08:00..12:00] is in BOTH
-    assert ("C", T("2010-01-01 08:00:00"), T("2010-01-01 12:00:00"),
-            2, 5.0) in stateful
-    assert stateful < full  # batch additionally carries the open tails
+    later = _bronze_rows(spark, [
+        ("A", 1, "assistant", "REVISED", None, T("2010-01-01 00:30:00")),
+        ("A", 3, "user", "late", None, T("2010-01-01 02:00:00")),
+    ]).withColumn("ingest_ts", F.lit(T("2010-01-03 00:00:00")))
+    silver = reshuffle(first.unionByName(later), n_cells=4)
+    assert _sessions(silver) == [
+        ("A", T("2010-01-01 00:00:00"), T("2010-01-01 02:00:00"), 3, 15.0),
+        ("A", T("2010-01-02 10:00:00"), T("2010-01-02 10:00:00"), 1, 2.0),
+        ("B", T("2010-01-01 05:00:00"), T("2010-01-01 05:00:00"), 1, 4.0),
+    ]

@@ -93,7 +93,7 @@ def test_simhash_near_pairs(spark):
         ],
         ["doc_id", "text"],
     )
-    sh = {r["doc_id"]: r["simhash"] for r in X.simhash64(df).collect()}
+    sh = {r["doc_id"]: r["simhash"] for r in X.simhash(df).collect()}
     assert sh[1] != 0
     ham12 = bin(sh[1] ^ sh[2]).count("1")
     ham13 = bin(sh[1] ^ sh[3]).count("1")
@@ -238,15 +238,15 @@ def test_lsh_bucket_cap_drops_oversized_buckets(spark):
     assert capped.count() == 0
 
 
-def test_simhash_portable_matches_bit_rule(docs):
-    """60-bit portable simhash: recompute every doc's hash in python
-    (md5 token hash, +1/-1 bit sums, positive sums set the bit)."""
+def test_simhash_matches_bit_rule(docs):
+    """60-bit simhash: recompute every doc's hash in python (md5 token
+    hash, +1/-1 bit sums, positive sums set the bit)."""
     import hashlib
     import re
 
     got = {
         r["doc_id"]: r["simhash"]
-        for r in X.simhash(docs, n_bits=60, portable=True).collect()
+        for r in X.simhash(docs).collect()
     }
     want = {}
     for r in docs.select("doc_id", "text").collect():

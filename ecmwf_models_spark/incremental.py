@@ -52,7 +52,7 @@ def extend_silver(
     A silver that records no n_cells raises ValueError: its grid is not
     guessed.
     """
-    from .lineage import stored_n_cells
+    from .lineage import stored_n_cells, table_schema
 
     if n_cells is None:
         n_cells = stored_n_cells(spark, silver_path)
@@ -68,8 +68,11 @@ def extend_silver(
     if not affected:
         return []
 
-    existing = spark.read.parquet(silver_path).where(
-        F.col("cell_id").isin(affected)
+    # the footer schema, so no job infers one from the files
+    existing = (
+        spark.read.schema(table_schema(spark, silver_path))
+        .parquet(silver_path)
+        .where(F.col("cell_id").isin(affected))
     )
     # rebuild bronze-shaped rows from existing silver (it retains all bronze
     # columns except prelim metadata, which dedup already resolved)

@@ -32,7 +32,9 @@ through the JVM's Hadoop FileSystem: written as `.<name>.tmp`, then renamed
 to `part-<ns>-<uuid>.parquet`. Readers list the directory and read each
 file on the driver, skipping `_`/`.` names as Spark does, so neither a
 commit nor a lookup launches a Spark job, and `spark.read.parquet` still
-reads the table for an audit. The rename is atomic on local FS and HDFS.
+reads the table for an audit. Point reads (operators/pointread.py) and
+`table_schema` read silver files on the driver the same way
+(`parquet_file`), fetching only the byte ranges pyarrow asks for. The rename is atomic on local FS and HDFS.
 On S3 it is a copy then a delete, not atomic: a commit there rests on the
 store showing a whole object or none.
 
@@ -42,15 +44,18 @@ stable under any task placement/parallelism.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import hashlib
+import io
+import json
 import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -66,22 +71,128 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def is_path_not_found(e: AnalysisException) -> bool:
-    """True only for Spark's PATH_NOT_FOUND condition. Callers that want
-    'absent table == empty' must use this rather than catching every
-    AnalysisException — a corrupt/unreadable table must surface, not be
-    reported as a successful no-op."""
-    get_cls = getattr(
-        e, "getCondition", getattr(e, "getErrorClass", lambda: None)
-    )
-    return (get_cls() or "") == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e)
+@functools.lru_cache(maxsize=1)
+def _path_class(jvm):
+    """org.apache.hadoop.fs.Path of one JVM, resolved once: py4j resolves
+    a dotted class name with one round trip per name part."""
+    return jvm.org.apache.hadoop.fs.Path
 
 
 def _fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for `path` — the filesystem Spark itself
     resolves it with (local, HDFS, S3 alike)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _path_class(spark._jvm)(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def part_files(fs, d) -> list:
+    """FileStatus of each data file in the Hadoop directory `d`, skipping
+    `_`/`.` names (_SUCCESS, .crc, a commit's temp file) as Spark does;
+    [] when `d` does not exist."""
+    if not fs.exists(d):
+        return []
+    return [
+        st
+        for st in fs.listStatus(d)
+        if not st.isDirectory()
+        and not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+# bytes per py4j call: the JVM flushes a reply in 8 KiB writes on a
+# socket with Nagle's algorithm on, so a longer reply (base64, 4/3 of the
+# bytes) waits out the receiver's delayed ACK, ~40 ms
+_PY4J_CHUNK = 4096
+
+
+class _HadoopInput(io.RawIOBase):
+    """A seekable read-only file over a Hadoop input stream, for pyarrow.
+    Each read that misses the block fetched last is one positioned fetch
+    of just the bytes asked for (seek, then readNBytes through py4j in
+    _PY4J_CHUNK pieces). pyarrow reads a parquet footer as one tail block
+    (the whole file, when it is small), so the column chunks of a small
+    file come from that block. `fetched` counts the bytes fetched."""
+
+    def __init__(self, stream, size: int):
+        self._in, self._size, self._pos = stream, size, 0
+        self._at, self._block = 0, b""
+        self.fetched = 0
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
+        base = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos, io.SEEK_END: self._size}
+        self._pos = base[whence] + offset
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        end = self._size if n < 0 else min(self._pos + n, self._size)
+        if not self._at <= self._pos <= end <= self._at + len(self._block):
+            self._in.seek(self._pos)
+            parts = []
+            for at in range(self._pos, end, _PY4J_CHUNK):
+                parts.append(self._in.readNBytes(min(_PY4J_CHUNK, end - at)))
+            self._block = b"".join(parts)
+            self._at = self._pos
+            self.fetched += len(self._block)
+        out = self._block[self._pos - self._at : end - self._at]
+        self._pos = end
+        return out
+
+    def close(self) -> None:
+        if not self.closed:
+            self._in.close()
+        super().close()
+
+
+@contextlib.contextmanager
+def parquet_file(fs, status):
+    """pq.ParquetFile over the Hadoop file `status`, fetched range by
+    range: the footer first, then only the column chunks a read asks for.
+    INT96 timestamps (Spark's default) come back as microseconds."""
+    src = _HadoopInput(fs.open(status.getPath()), status.getLen())
+    try:
+        yield pq.ParquetFile(src, coerce_int96_timestamp_unit="us")
+    finally:
+        src.close()
+
+
+# the Spark schema a Spark write stores in every parquet footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema `spark.read.parquet(path)` gives a cell-partitioned
+    table, taken on the driver from one part file's footer: the Spark
+    schema the write stored there, every field nullable (as Spark reads
+    files), then the int `cell_id` partition column. No Spark job, where
+    schema inference is one (two above 32 cell directories). Raises
+    FileNotFoundError when no cell directory holds a part file."""
+    fs, root = _fs_path(spark, path)
+    for d in fs.listStatus(root) if fs.exists(root) else []:
+        if not (d.isDirectory() and d.getPath().getName().startswith("cell_id=")):
+            continue
+        for st in part_files(fs, d.getPath()):
+            with parquet_file(fs, st) as pf:
+                arrow = pf.schema_arrow
+            stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            data = (
+                T.StructType.fromJson(json.loads(stored))
+                if stored
+                else from_arrow_schema(arrow)
+            )
+            return T.StructType(
+                [T.StructField(f.name, f.dataType, True, f.metadata) for f in data]
+                + [T.StructField("cell_id", T.IntegerType(), True)]
+            )
+    raise FileNotFoundError(f"{path} holds no cell_id=* part file")
 
 
 def _commit_file(spark: SparkSession, path: str, schema, rows: list) -> None:
@@ -94,7 +205,7 @@ def _commit_file(spark: SparkSession, path: str, schema, rows: list) -> None:
     buf = pa.BufferOutputStream()
     pq.write_table(table, buf)
     fs, d = _fs_path(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = _path_class(spark._jvm)
     name = f"part-{time.time_ns()}-{uuid.uuid4().hex}.parquet"
     tmp = Path(d, f".{name}.tmp")
     out = fs.create(tmp, False)
@@ -111,23 +222,12 @@ def _committed_rows(spark: SparkSession, path: str, schema) -> list[dict]:
     [] when the directory does not exist. Also reads directories Spark
     wrote (part files beside _SUCCESS and .crc files)."""
     fs, d = _fs_path(spark, path)
-    if not fs.exists(d):
-        return []
     tables = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if st.isDirectory() or name.startswith(("_", ".")):
-            continue
-        inp = fs.open(st.getPath())
-        try:
-            data = inp.readAllBytes()
-        finally:
-            inp.close()
-        tables.append(
-            pq.read_table(pa.BufferReader(data), columns=schema.names).cast(
-                to_arrow_schema(schema)
+    for st in part_files(fs, d):
+        with parquet_file(fs, st) as pf:
+            tables.append(
+                pf.read(columns=schema.names).cast(to_arrow_schema(schema))
             )
-        )
     return pa.concat_tables(tables).to_pylist() if tables else []
 
 
@@ -180,10 +280,12 @@ def cell_generations(df: DataFrame) -> dict[int, str]:
         key, _, cell = parent.rpartition("/")[2].partition("=")
         if key == "cell_id":
             names.setdefault(int(cell), []).append(name)
-    return {
-        c: hashlib.sha1("\n".join(sorted(v)).encode()).hexdigest()[:16]
-        for c, v in names.items()
-    }
+    return {c: generation(v) for c, v in names.items()}
+
+
+def generation(names) -> str:
+    """The generation of a cell directory holding the part files `names`."""
+    return hashlib.sha1("\n".join(sorted(names)).encode()).hexdigest()[:16]
 
 
 def pending_cells(
@@ -369,12 +471,23 @@ class ResumableTierWriter:
         written = [p.toString() for p in self._cell_dirs(done)]
         if not written:
             return 0
-        # the input's schema, so no job infers one from the files
-        audit = (
-            self.spark.read.schema(df.schema)
-            .option("basePath", self.out_dir)
-            .parquet(*written)
-        )
+        # the input's schema, so no job infers one from the files; the
+        # written directories are listed on the driver, one listStatus
+        # each, as _cell_dirs just listed out_dir: Spark's partition
+        # discovery would list more than its threshold (32) of them in a
+        # Spark job
+        conf = self.spark.conf
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        threshold = conf.get(key)
+        conf.set(key, str(max(len(written), int(threshold))))
+        try:
+            audit = (
+                self.spark.read.schema(df.schema)
+                .option("basePath", self.out_dir)
+                .parquet(*written)
+            )
+        finally:
+            conf.set(key, threshold)
         stats = sorted(cell_stats(audit).collect(), key=lambda r: r["cell_id"])
         crash = fail_after_cells is not None and fail_after_cells < len(stats)
         todo = stats[:fail_after_cells] if crash else stats

@@ -5,16 +5,21 @@ Reference: ERATs.read(lon, lat) -> nearest gpi -> gpi2cell -> open one
 (reference interface.py:675-720, README.rst:66-81, docs/ts_read.rst:15-34).
 read_bulk caches the whole cell file (interface.py:705-711).
 
-Spark-first, one Spark job per read:
+A driver read, as the reference opens one file locally — no Spark job:
   * routing (gpi2cell) is a driver-side call of the same Catalyst XXH64
-    that `grid.cell_of` runs on the write path — no job;
-  * the scan lists only <silver>/cell_id=<cell>, on every read, with the
-    schema taken at open, so it is O(cell), never O(world), and a reader
-    opened before `extend_silver` sees the extended cells; the conv_id
-    filter is pushed into the parquet scan (row-group pruning);
-  * the conv's rows (tens) are ordered on the driver by (ts, turn_idx) —
-    a total order, since (conv_id, turn_idx) is unique in silver — so the
-    plan has no Exchange and no Sort.
+    that `grid.cell_of` runs on the write path;
+  * <silver>/cell_id=<cell> is listed at every read, through the Hadoop
+    FileSystem Spark resolves the path with, so a reader opened before
+    `extend_silver` sees the extended cells;
+  * of each part file, the footer is fetched first, then only the row
+    groups whose conv_id min/max can hold the conv: a cell file is sorted
+    by conv_id, so that is the conv's row groups, not the cell; pyarrow
+    filters them to the conv;
+  * the rows convert to pandas by Spark's own Arrow-to-pandas path and
+    are ordered by (ts, turn_idx) — a total order, since (conv_id, turn_idx)
+    is unique in silver.
+Opening a reader takes the table's schema from one part file's footer
+(`lineage.table_schema`), so it launches no job either.
 `offsets`/`scale_factors` (interface.py:694-714) map to an affine select.
 """
 
@@ -23,10 +28,20 @@ from __future__ import annotations
 import functools
 
 import pandas as pd
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession, types as T
+from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
 
-from ..lineage import is_path_not_found, read_table_attrs, stored_n_cells
+from ..lineage import (
+    _fs_path,
+    generation,
+    parquet_file,
+    part_files,
+    read_table_attrs,
+    stored_n_cells,
+    table_schema,
+)
 
 # seed of Spark's xxhash64 (XxHash64 in catalyst hash.scala)
 _XXHASH64_SEED = 42
@@ -54,6 +69,43 @@ def cell_id_for(spark: SparkSession, conv_id: str, n_cells: int) -> int:
     return hash_utf8(from_string(conv_id), _XXHASH64_SEED) % n_cells
 
 
+def conv_row_groups(meta, conv_id: str) -> list[int]:
+    """The row groups of a parquet file whose conv_id min/max can hold
+    `conv_id`; a row group without statistics is kept. Python's str order
+    is parquet's unsigned byte order of UTF-8."""
+    j = meta.schema.names.index("conv_id")
+    out = []
+    for i in range(meta.num_row_groups):
+        st = meta.row_group(i).column(j).statistics
+        if st is None or not st.has_min_max or st.min <= conv_id <= st.max:
+            out.append(i)
+    return out
+
+
+def _to_pandas(table: pa.Table, schema: T.StructType, timezone: str):
+    """Spark's Arrow-to-pandas conversion of a collected DataFrame
+    (pyspark.sql.pandas.conversion), over a table read on the driver: the
+    same Arrow options, then Spark's converter per field (timestamps naive
+    in the session zone)."""
+    if table.num_rows:
+        pdf = table.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    else:
+        pdf = pd.DataFrame(columns=schema.names)
+    return pd.concat(
+        [
+            _create_converter_to_pandas(
+                f.dataType,
+                f.nullable,
+                timezone=timezone,
+                struct_in_pandas="dict",
+                error_on_duplicated_field_names=False,
+            )(ser)
+            for (_, ser), f in zip(pdf.items(), schema.fields)
+        ],
+        axis="columns",
+    )
+
+
 class TsReader:
     """ERATs analogue over the cell-partitioned silver table.
 
@@ -77,9 +129,8 @@ class TsReader:
         self.n_cells = (
             stored_n_cells(spark, silver_path) if n_cells is None else n_cells
         )
-        # table schema (cell_id included, as a partition column); each read
-        # scans one cell directory with it, so no read infers a schema
-        self.schema = spark.read.parquet(silver_path).schema
+        # the table's schema (cell_id included, as a partition column)
+        self.schema = table_schema(spark, silver_path)
         # per-variable attrs written by write_silver / the tier writer —
         # the reference reads these back onto the returned dataset
         # (interface.py:185; GriddedNcOrthoMultiTs variable attrs)
@@ -88,46 +139,72 @@ class TsReader:
         self.parameters = parameters
         self.offsets = offsets or {}
         self.scale_factors = scale_factors or {}
-        self._cell_cache: dict[int, DataFrame] = {}
+        cols = self.schema.names
+        if parameters:
+            # turn_idx rides along for the order
+            extra = [] if "turn_idx" in parameters else ["turn_idx"]
+            cols = ["ts", *parameters, *extra]
+        # the columns read returns before rescaling, and those it reads
+        # from the files (cell_id is the directory; conv_id the filter)
+        self._out = T.StructType([self.schema[c] for c in cols])
+        file_cols = [c for c in cols if c != "cell_id"]
+        file_cols += [] if "conv_id" in file_cols else ["conv_id"]
+        self._file_schema = to_arrow_schema(
+            T.StructType([self.schema[c] for c in file_cols])
+        )
+        # read_bulk: cell -> (generation, the cell's rows)
+        self._cell_cache: dict[int, tuple[str, pa.Table]] = {}
 
-    def _cell_df(self, cell: int) -> DataFrame:
-        """One cell directory, listed now. A cell with no directory yet
-        holds no conv: an empty frame with the table's columns."""
-        if cell in self._cell_cache:
-            return self._cell_cache[cell]
-        try:
-            df = (
-                self.spark.read.schema(self.schema)
-                .option("basePath", self.silver_path)
-                .parquet(f"{self.silver_path}/cell_id={cell}")
-            )
-        except AnalysisException as e:
-            if not is_path_not_found(e):
-                raise
-            return self.spark.createDataFrame([], self.schema)
+    def _fetch(self, fs, files, conv_id: str | None) -> pa.Table:
+        """The rows of `files` in the row groups that can hold `conv_id`
+        (all of them for None), in the file columns."""
+        tables = [self._file_schema.empty_table()]
+        for st in files:
+            with parquet_file(fs, st) as pf:
+                rgs = (
+                    range(pf.num_row_groups)
+                    if conv_id is None
+                    else conv_row_groups(pf.metadata, conv_id)
+                )
+                t = pf.read_row_groups(
+                    rgs, columns=self._file_schema.names, use_threads=False
+                )
+            tables.append(t.cast(self._file_schema))
+        return pa.concat_tables(tables)
+
+    def _cell_rows(self, cell: int, conv_id: str) -> pa.Table:
+        """The conv's rows of cell directory `cell`, listed now. A cell with
+        no directory yet holds no conv."""
+        fs, d = _fs_path(self.spark, f"{self.silver_path}/cell_id={cell}")
+        files = part_files(fs, d)
         if self.read_bulk:
-            df = self._cell_cache[cell] = df.cache()
-        return df
-
-    def query(self, conv_id: str) -> DataFrame:
-        """The Spark plan `read` collects: one conv's rows of its cell,
-        projected and rescaled, unordered."""
-        df = self._cell_df(cell_id_for(self.spark, conv_id, self.n_cells))
-        df = df.where(F.col("conv_id") == conv_id)
-        cols = self.parameters
-        if cols:
-            # turn_idx rides along for the driver-side order
-            extra = [] if "turn_idx" in cols else ["turn_idx"]
-            df = df.select("ts", *cols, *extra)
-        for c, sf in self.scale_factors.items():
-            df = df.withColumn(c, F.col(c) * F.lit(sf))
-        for c, off in self.offsets.items():
-            df = df.withColumn(c, F.col(c) + F.lit(off))
-        return df
+            gen = generation(st.getPath().getName() for st in files)
+            cached = self._cell_cache.get(cell)
+            if cached is None or cached[0] != gen:
+                cached = (gen, self._fetch(fs, files, None))
+                self._cell_cache[cell] = cached
+            rows = cached[1]
+        else:
+            rows = self._fetch(fs, files, conv_id)
+        rows = rows.filter(pc.equal(rows["conv_id"], conv_id))
+        return rows.append_column(
+            "cell_id", pa.array([cell] * rows.num_rows, pa.int32())
+        )
 
     def read(self, conv_id: str) -> pd.DataFrame:
+        cell = cell_id_for(self.spark, conv_id, self.n_cells)
+        pdf = _to_pandas(
+            self._cell_rows(cell, conv_id).select(self._out.names),
+            self._out,
+            self.spark.conf.get("spark.sql.session.timeZone"),
+        )
+        # Spark's float * double is a double
+        for c, sf in self.scale_factors.items():
+            pdf[c] = pdf[c].astype("float64") * sf
+        for c, off in self.offsets.items():
+            pdf[c] = pdf[c].astype("float64") + off
         # Spark's ascending order puts nulls first
-        pdf = self.query(conv_id).toPandas().sort_values(
+        pdf = pdf.sort_values(
             ["ts", "turn_idx"], kind="stable", na_position="first"
         )
         if self.parameters and "turn_idx" not in self.parameters:
@@ -140,6 +217,4 @@ class TsReader:
         return pdf
 
     def close(self):
-        for df in self._cell_cache.values():
-            df.unpersist()
         self._cell_cache.clear()

@@ -282,3 +282,32 @@ def test_attrs_propagate_reshuffle_rollup_read(tmp_path, spark, bronze):
     assert pdf.attrs["var_attrs"]["text_len"]["units"] == "chars"
     # tier table readable by spark despite the _meta sidecar
     assert spark.read.parquet(str(tmp_path / "daily")).count() > 0
+
+
+def test_audit_lists_written_cells_on_the_driver(tmp_path, spark):
+    """run() reads the cells it wrote back for their lineage rows. Spark
+    lists more than 32 directories of a read in a Spark job of its own;
+    the audit's are listed on the driver, so a 64-cell tier launches no
+    more jobs than a 16-cell one."""
+    from ecmwf_models_spark.synth import gen_transcripts
+
+    bronze = gen_transcripts(spark, n_conv=400, days=2, turns_per_conv=4)
+    daily = finalize(rollup_from_raw(reshuffle(bronze, num_partitions=4), "daily"))
+    daily.cache().count()
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (16, 64):
+        name = f"daily{n}"
+        w = ResumableTierWriter(
+            spark, str(tmp_path / name), str(tmp_path / f"{name}_lin"),
+            tier="daily",
+        )
+        sc.setJobGroup(name, name)
+        try:
+            assert w.run(with_cell_id(daily, n)) == n
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(name))
+        assert w.verify(with_cell_id(daily, n))
+    assert jobs[64] <= jobs[16], jobs
+    daily.unpersist()

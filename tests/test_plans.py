@@ -3,7 +3,7 @@
 Correctness tests prove the operators work on small data; these prove the
 PLANS are the ones that survive 100x scale-up: the transpose is a single
 exchange, dedup rides the range partitioning without a second shuffle,
-point reads prune to one cell partition with pushed filters, dimension
+point reads fetch only their conv's row groups of one cell file, dimension
 joins broadcast, and scans prune columns. A regression here is a silent
 10-100x slowdown at cluster scale even though every value stays correct.
 """
@@ -11,12 +11,18 @@ joins broadcast, and scans prune columns. A regression here is a silent
 from __future__ import annotations
 
 import contextlib
+import glob
 import io
+import os
 import re
 
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark import lineage
+from ecmwf_models_spark.operators import pointread
 from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.operators.rollup import (
@@ -24,6 +30,7 @@ from ecmwf_models_spark.operators.rollup import (
     rollup_from_raw,
 )
 from ecmwf_models_spark.plans import entry_queries as EQ
+from ecmwf_models_spark.synth import gen_transcripts
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -78,19 +85,60 @@ def test_reshuffle_honours_num_partitions(bronze):
                      r"conv_id#\d+ ASC NULLS FIRST, 8\)", plan), plan
 
 
-def test_point_read_prunes_partition_and_pushes_filter(bronze, tmp_path):
-    """The ERATs.read analogue, as TsReader plans it: the scan lists only
-    the conv's cell directory (the gpi2cell file routing), the conv_id
-    filter lands in PushedFilters (row-group pruning), and there is no
-    Exchange and no Sort — the rows are ordered on the driver."""
+def test_point_read_fetches_only_the_convs_row_groups(
+    spark, tmp_path, monkeypatch
+):
+    """The ERATs.read analogue reads the conv's cell file on the driver:
+    its footer, then only the row groups whose conv_id min/max can hold
+    the conv. On a silver written with many small row groups per cell
+    file, each read equals the Spark query and fetches fewer row groups
+    and fewer bytes than the file holds."""
     path = str(tmp_path / "silver")
-    write_silver(reshuffle(bronze, n_cells=8), path)
-    spark = bronze.sparkSession
-    plan = plan_of(TsReader(spark, path, n_cells=8).query("conv-000001"))
-    cell = cell_id_for(spark, "conv-000001", 8)
-    assert f"/cell_id={cell}]" in plan, plan
-    assert "Exchange" not in plan and "Sort" not in plan, plan
-    assert "conv_id" in plan.split("PushedFilters:")[1].split("]")[0], plan
+    bronze = gen_transcripts(spark, n_conv=400, days=4, turns_per_conv=12)
+    (
+        reshuffle(bronze, n_cells=2)
+        .write.option("parquet.block.size", 4096)
+        .partitionBy("cell_id")
+        .parquet(path)
+    )
+    files = {}  # cell -> (bytes, row groups) of its one file
+    for f in glob.glob(f"{path}/cell_id=*/*.parquet"):
+        cell = int(f.split("cell_id=")[1].split("/")[0])
+        files[cell] = (os.path.getsize(f), pq.ParquetFile(f).num_row_groups)
+    # files larger than the footer's 64 KiB tail read
+    assert len(files) == 2 and all(
+        b > 2**16 and n > 10 for b, n in files.values()
+    ), files
+
+    fetched, groups = [], []
+
+    class Counting(lineage._HadoopInput):
+        def close(self):
+            fetched.append(self.fetched)
+            super().close()
+
+    def counted(meta, conv_id, select=pointread.conv_row_groups):
+        groups.append(select(meta, conv_id))
+        return groups[-1]
+
+    monkeypatch.setattr(lineage, "_HadoopInput", Counting)
+    monkeypatch.setattr(pointread, "conv_row_groups", counted)
+    r = TsReader(spark, path, n_cells=2)
+    for i in range(0, 400, 37):
+        conv = f"conv-{i:06d}"
+        fetched.clear()
+        got = r.read(conv)
+        want = (
+            spark.read.parquet(path)
+            .where(F.col("conv_id") == conv)
+            .orderBy("ts", "turn_idx")
+            .toPandas()
+            .set_index("ts")
+        )
+        pd.testing.assert_frame_equal(got, want)
+        size, n_groups = files[cell_id_for(spark, conv, 2)]
+        assert len(fetched) == 1 and fetched[0] < size, (conv, fetched, size)
+        assert 0 < len(groups[-1]) < n_groups, (conv, groups[-1])
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):

@@ -2,8 +2,10 @@
 
 `TsReader.read` must return exactly what the plain Spark query
 `where(conv_id).orderBy("ts", "turn_idx").toPandas().set_index("ts")`
-returns — same columns, dtypes, index and row order — while launching one
-Spark job. A reader opened before `extend_silver` must see the extend.
+returns — same columns, dtypes, index and row order, in any session time
+zone — while neither opening a reader nor reading launches a Spark job. A
+reader opened before `extend_silver` must see the extend, also with
+read_bulk's cached cells.
 """
 
 from __future__ import annotations
@@ -154,11 +156,88 @@ def test_reader_takes_n_cells_from_settings(spark, silver16, tmp_path):
         TsReader(spark, bare)
 
 
-def test_read_is_one_job_and_routing_none(spark, silver16):
-    r = TsReader(spark, silver16, n_cells=16)
-    _, route_jobs = jobs_of(spark, cell_id_for, spark, "conv-000007", 16)
-    assert route_jobs == 0
-    for conv in ("conv-000007", "conv-000000"):
-        pdf, read_jobs = jobs_of(spark, r.read, conv)
-        assert len(pdf) > 0
-        assert read_jobs == 1
+@pytest.fixture(scope="module")
+def silver64(tmp_path_factory, spark):
+    """A silver with a directory in each of its 64 cells: above the 32
+    paths Spark lists in a Spark job."""
+    path = str(tmp_path_factory.mktemp("pointread64") / "silver")
+    bronze = gen_transcripts(spark, n_conv=400, days=2, turns_per_conv=4)
+    write_silver(reshuffle(bronze, n_cells=64, num_partitions=4), path)
+    write_run_settings(spark, f"{path}/_settings", {"n_cells": 64})
+    assert len([d for d in os.listdir(path) if d.startswith("cell_id=")]) == 64
+    return path
+
+
+def test_open_and_read_launch_no_job(spark, silver16, silver64):
+    """Opening a reader (its schema from one part file's footer, the
+    same schema Spark infers), routing and reading launch no Spark job,
+    at 16 cells and at 64."""
+    for path, n in ((silver16, 16), (silver64, 64)):
+        r, open_jobs = jobs_of(spark, TsReader, spark, path)
+        assert open_jobs == 0
+        assert r.n_cells == n
+        assert r.schema == spark.read.parquet(path).schema
+        _, route_jobs = jobs_of(spark, cell_id_for, spark, "conv-000007", n)
+        assert route_jobs == 0
+        for conv in ("conv-000007", "conv-000000"):
+            pdf, read_jobs = jobs_of(spark, r.read, conv)
+            assert len(pdf) > 0
+            assert read_jobs == 0
+
+
+def test_read_matches_spark_query_in_session_time_zone(spark, silver16):
+    """Timestamps come back naive in spark.sql.session.timeZone, as
+    toPandas() gives them: the same frames as the Spark query under a
+    zone that is not UTC, and not the UTC ones."""
+    key = "spark.sql.session.timeZone"
+    utc = TsReader(spark, silver16).read("conv-000007")
+    zone = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        for opts in ({}, RESCALED):
+            r = TsReader(spark, silver16, **opts)
+            for conv in CONVS:
+                pd.testing.assert_frame_equal(
+                    r.read(conv), spark_read(spark, silver16, conv, **opts)
+                )
+        shifted = TsReader(spark, silver16).read("conv-000007")
+    finally:
+        spark.conf.set(key, zone)
+    assert (shifted.index != utc.index).all()
+    assert (shifted["ts_bucket"].values != utc["ts_bucket"].values).all()
+
+
+def test_read_bulk_serves_no_stale_cell(spark, tmp_path):
+    """read_bulk caches a cell's rows on the driver under the cell's
+    generation, its part-file names listed at every read: after an
+    extend_silver rewrites the cell, the next read returns the new turns.
+    So it does when the rewrite comes from another process, which Spark's
+    cache manager does not see: here an extend of a copy of the silver,
+    whose cell directory then replaces this one."""
+    initial = gen_transcripts(spark, n_conv=10, days=2, turns_per_conv=6)
+    conv = "conv-000003"
+    finals = initial.where(~F.col("is_prelim") & (F.col("conv_id") == conv))
+
+    def later(days):
+        return finals.withColumns({
+            "turn_idx": F.col("turn_idx") + 100 * days,
+            "ts": F.col("ts") + F.expr(f"INTERVAL {days} DAYS"),
+        })
+
+    path, copy = str(tmp_path / "silver"), str(tmp_path / "copy")
+    write_silver(reshuffle(initial, n_cells=8, num_partitions=4), path)
+    r = TsReader(spark, path, n_cells=8, read_bulk=True)
+    assert len(r.read(conv)) == 6
+    extend_silver(spark, path, later(3), n_cells=8)
+    got = r.read(conv)
+    assert len(got) == 12
+    pd.testing.assert_frame_equal(got, spark_read(spark, path, conv))
+
+    shutil.copytree(path, copy)
+    (cell,) = extend_silver(spark, copy, later(6), n_cells=8)
+    shutil.rmtree(f"{path}/cell_id={cell}")
+    shutil.copytree(f"{copy}/cell_id={cell}", f"{path}/cell_id={cell}")
+    got = r.read(conv)
+    assert len(got) == 18
+    pd.testing.assert_frame_equal(got, spark_read(spark, path, conv))
+    r.close()

@@ -23,6 +23,9 @@ their commit, so `extend` (or `update-img`, which extends and re-rolls)
 followed by `rollup` never serves a stale tier; `audit` checks each tier
 against a fresh rollup of the silver.
 
+`reshuffle` and each `update-img` pass record the bronze files they
+consumed in <silver>/_sources; `update-img` upserts only the others.
+
 On a real cluster each subcommand is the driver program for
 `spark-submit --py-files ecmwf_models_spark.zip`.
 """
@@ -78,7 +81,7 @@ def cmd_ingest(args):
 
 
 def cmd_reshuffle(args):
-    from .lineage import write_run_settings
+    from .lineage import commit_sources, write_run_settings
     from .operators.reshuffle import reshuffle, write_silver
 
     spark = _spark(args)
@@ -99,11 +102,13 @@ def cmd_reshuffle(args):
             "salt_segment_hours": args.salt_segment_hours,
         },
     )
+    # from the relation's listing: no Spark job
+    commit_sources(spark, args.out, bronze.inputFiles())
     print(f"silver written to {args.out}")
 
 
 def rollup_silver(spark, silver: str, out: str, tiers=None) -> dict[str, int]:
-    """The body of `rollup` and of `update-img` after its stream: roll the
+    """The body of `rollup` and of `update-img` after its upsert: roll the
     silver's pending cells up into <out>/<tier> through the lineage
     writer; returns the cells committed per tier. The silver is filtered
     to the cells some tier has pending (partition pruning) before the one
@@ -191,24 +196,16 @@ def cmd_read(args):
 
 
 def cmd_update_img(args):
-    """Streaming ingest pass — the reference's first-class `era5 update`
-    image-extension command (reference cli.py:271-310 update_images):
-    upsert every bronze file not yet in the checkpoint into the silver
-    (Trigger.AvailableNow, one micro-batch and one extend_silver per
-    pass), then re-roll the changed cells of every tier into --out as
-    `rollup` does.
-    Rerunning after new files land processes only the delta."""
-    from .streaming.ingest import run_available_now
+    """The reference's first-class `era5 update` image-extension command
+    (reference cli.py:271-310 update_images): upsert the bronze files
+    <silver>/_sources does not record (incremental.update_silver), then
+    re-roll the changed cells of every tier into --out as `rollup` does."""
+    from .incremental import update_silver
 
     spark = _spark(args)
-    # refuse a silver without _settings before the stream reads a file
+    # refuse a silver without _settings before a bronze file is read
     _silver_n_cells(spark, args.silver)
-    cells = run_available_now(
-        spark,
-        input_dir=args.bronze,
-        silver_path=args.silver,
-        checkpoint_dir=args.checkpoint or f"{args.silver}/_checkpoint",
-    )
+    cells = update_silver(spark, args.bronze, args.silver)
     print(f"update-img: extended {len(cells)} cells of {args.silver}")
     rollup_silver(spark, args.silver, args.out)
 
@@ -411,13 +408,9 @@ def main(argv=None):
     s.set_defaults(fn=cmd_read)
 
     s = sub.add_parser("update-img")
-    s.add_argument("--bronze", required=True, help="bronze file-stream dir")
+    s.add_argument("--bronze", required=True, help="growing bronze dir")
     s.add_argument("--silver", required=True, help="written by reshuffle")
     s.add_argument("--out", required=True, help="tiers dir, as rollup's")
-    s.add_argument(
-        "--checkpoint", default=None,
-        help="default: <silver>/_checkpoint (resume state, plays overview.yml)",
-    )
     s.set_defaults(fn=cmd_update_img)
 
     s = sub.add_parser("remap")

@@ -18,10 +18,26 @@ Semantics preserved here:
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .grid import with_cell_id
+from .lineage import (
+    commit_sources,
+    consumed_sources,
+    data_files,
+    read_listed,
+    stored_n_cells,
+    table_schema,
+)
 from .operators.reshuffle import reshuffle
+
+# synth.py's bronze columns
+BRONZE_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string,"
+    " ts timestamp, is_prelim boolean, ingest_ts timestamp"
+)
 
 
 def stored_end(spark: SparkSession, silver_path: str):
@@ -52,8 +68,6 @@ def extend_silver(
     A silver that records no n_cells raises ValueError: its grid is not
     guessed.
     """
-    from .lineage import stored_n_cells, table_schema
-
     if n_cells is None:
         n_cells = stored_n_cells(spark, silver_path)
     # a turn's cell depends only on its conv_id, so the batch's cells
@@ -94,3 +108,23 @@ def extend_silver(
         .parquet(silver_path)
     )
     return affected
+
+
+def update_silver(
+    spark: SparkSession, bronze_dir: str, silver_path: str
+) -> list[int]:
+    """One `update-img` pass (reference update_images, era5/download.py:
+    511-557): upsert the bronze files <silver>/_sources does not record
+    with one extend_silver, then record them. A file is new by name, not
+    by age. A crash before the record replays the files, harmless under
+    the latest-final-wins upsert. Returns the cells extended."""
+    done = consumed_sources(spark, silver_path)
+    new = [f for f in data_files(spark, bronze_dir) if f not in done]
+    if not new:
+        return []
+    # a URI escapes what a Hadoop path string holds literally (a space)
+    paths = [unquote(f) for f in new]
+    bronze = read_listed(spark, BRONZE_SCHEMA, paths, bronze_dir)
+    cells = extend_silver(spark, silver_path, bronze)
+    commit_sources(spark, silver_path, new)
+    return sorted(cells)

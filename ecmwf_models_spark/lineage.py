@@ -25,10 +25,11 @@ write job's UUID, so a generation changes exactly when its cell was
 rewritten. A tier cell whose latest commit carries another generation is
 stale and is re-rolled; the others are served as they are.
 
-The bookkeeping tables (`_lineage`, `_settings`, `_meta`) are plain parquet
-directories holding one small file per commit, as overview.yml is one small
-file per run. The driver builds each file with pyarrow and publishes it
-through the JVM's Hadoop FileSystem: written as `.<name>.tmp`, then renamed
+The bookkeeping tables (`_lineage`, `_settings`, `_meta`, and a silver's
+`_sources`, the bronze files it has consumed) are plain parquet directories
+holding one small file per commit, as overview.yml is one small file per
+run. The driver builds each file with pyarrow and publishes it through the
+JVM's Hadoop FileSystem: written as `.<name>.tmp`, then renamed
 to `part-<ns>-<uuid>.parquet`. Readers list the directory and read each
 file on the driver, skipping `_`/`.` names as Spark does, so neither a
 commit nor a lookup launches a Spark job, and `spark.read.parquet` still
@@ -85,18 +86,55 @@ def _fs_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
+def _hidden(name: str) -> bool:
+    """Spark's rule for the names a file source skips: `_`/`.` names
+    (_SUCCESS, .crc, a commit's temp file) other than key=value
+    directories, and files still being copied in."""
+    return name.startswith(".") or name.endswith("._COPYING_") or (
+        name.startswith("_") and "=" not in name
+    )
+
+
 def part_files(fs, d) -> list:
-    """FileStatus of each data file in the Hadoop directory `d`, skipping
-    `_`/`.` names (_SUCCESS, .crc, a commit's temp file) as Spark does;
-    [] when `d` does not exist."""
-    if not fs.exists(d):
-        return []
-    return [
-        st
-        for st in fs.listStatus(d)
-        if not st.isDirectory()
-        and not st.getPath().getName().startswith(("_", "."))
-    ]
+    """FileStatus of each data file under the Hadoop directory `d`, as
+    Spark's file index finds them: subdirectories (ds=<date>) included,
+    hidden names skipped; [] when `d` does not exist."""
+    found, todo = [], [d] if fs.exists(d) else []
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if _hidden(st.getPath().getName()):
+                continue
+            if st.isDirectory():
+                todo.append(st.getPath())
+            else:
+                found.append(st)
+    return found
+
+
+def data_files(spark: SparkSession, path: str) -> list[str]:
+    """The part_files under `path`, spelled as DataFrame.inputFiles()
+    spells them: Path.toUri()."""
+    fs, root = _fs_path(spark, path)
+    return sorted(st.getPath().toUri().toString() for st in part_files(fs, root))
+
+
+def read_listed(
+    spark: SparkSession, schema, paths: list, base_path: str
+) -> DataFrame:
+    """spark.read.parquet(*paths) with `schema`, for paths listed on the
+    driver, partition columns taken below `base_path`. No job infers the
+    schema, and none lists the paths: Spark lists more paths of one read
+    than parallelPartitionDiscovery.threshold (32) in a job, so the
+    threshold is raised to their count for this read only."""
+    conf = spark.conf
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = conf.get(key)
+    conf.set(key, str(max(len(paths), int(threshold))))
+    try:
+        reader = spark.read.schema(schema).option("basePath", base_path)
+        return reader.parquet(*paths)
+    finally:
+        conf.set(key, threshold)
 
 
 # bytes per py4j call: the JVM flushes a reply in 8 KiB writes on a
@@ -353,6 +391,29 @@ def stored_n_cells(spark: SparkSession, silver_path: str) -> int:
     return int(stored["n_cells"])
 
 
+# a bronze file a silver has consumed, by its data_files URI
+SOURCES_SCHEMA = T.StructType(
+    [
+        T.StructField("file", T.StringType()),
+        T.StructField("job_id", T.StringType()),
+        T.StructField("committed_at", T.DoubleType()),
+    ]
+)
+
+
+def commit_sources(spark: SparkSession, silver_path: str, files) -> None:
+    """Record `files` as consumed in <silver>/_sources, in one commit."""
+    now, job_id = time.time(), uuid.uuid4().hex[:12]
+    rows = [(f, job_id, now) for f in files]
+    _commit_file(spark, f"{silver_path}/_sources", SOURCES_SCHEMA, rows)
+
+
+def consumed_sources(spark: SparkSession, silver_path: str) -> set[str]:
+    """The bronze files <silver>/_sources records."""
+    rows = _committed_rows(spark, f"{silver_path}/_sources", SOURCES_SCHEMA)
+    return {r["file"] for r in rows}
+
+
 ATTRS_SCHEMA = T.StructType(
     [
         T.StructField("var", T.StringType()),
@@ -471,23 +532,7 @@ class ResumableTierWriter:
         written = [p.toString() for p in self._cell_dirs(done)]
         if not written:
             return 0
-        # the input's schema, so no job infers one from the files; the
-        # written directories are listed on the driver, one listStatus
-        # each, as _cell_dirs just listed out_dir: Spark's partition
-        # discovery would list more than its threshold (32) of them in a
-        # Spark job
-        conf = self.spark.conf
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        threshold = conf.get(key)
-        conf.set(key, str(max(len(written), int(threshold))))
-        try:
-            audit = (
-                self.spark.read.schema(df.schema)
-                .option("basePath", self.out_dir)
-                .parquet(*written)
-            )
-        finally:
-            conf.set(key, threshold)
+        audit = read_listed(self.spark, df.schema, written, self.out_dir)
         stats = sorted(cell_stats(audit).collect(), key=lambda r: r["cell_id"])
         crash = fail_after_cells is not None and fail_after_cells < len(stats)
         todo = stats[:fail_after_cells] if crash else stats
@@ -533,7 +578,8 @@ class ResumableTierWriter:
                 for r in cell_stats(d).collect()
             }
 
-        written = self.spark.read.parquet(self.out_dir).select(*df.columns)
+        cells = [p.toString() for p in self._cell_dirs(())]
+        written = read_listed(self.spark, df.schema, cells, self.out_dir)
         lineage = {
             c: (r["row_count"], r["checksum"])
             for c, r in _latest_commits(

@@ -1,32 +1,37 @@
 """CLI round trip of `update-img` (reference cli.py:271-310 exposes
 update_images as a first-class command): passes over a growing bronze
-dir upsert each new file into a silver from `reshuffle` and re-roll the
-changed tier cells. The tiers they leave equal `reshuffle` + `rollup` of
-all the bronze, also for turns a watermarked window aggregate would drop
-or miscount; `audit` passes on them and fails on tiers an extend left
-stale."""
+dir upsert each file the silver's _sources does not record and re-roll
+the changed tier cells. The tiers they leave equal `reshuffle` +
+`rollup` of all the bronze; `audit` passes on them and fails on tiers an
+extend left stale. A file is new by name, whatever its mtime."""
 
+import glob
+import os
 import shutil
-import subprocess
-import sys
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark import lineage
 from ecmwf_models_spark.lineage import LINEAGE_SCHEMA
+from ecmwf_models_spark.operators.reshuffle import SILVER_COLS, reshuffle
 from ecmwf_models_spark.operators.rollup import TIERS
 from ecmwf_models_spark.synth import gen_transcripts
 
 CUTOFF = "2010-01-02 00:00:00"
 
 
-def _cli(*args, ok=True):
-    out = subprocess.run(
-        [sys.executable, "-m", "ecmwf_models_spark.cli", "--cpus", "4", *args],
-        capture_output=True, text=True, timeout=600,
-    )
-    assert (out.returncode == 0) == ok, out.stderr[-2000:]
-    return out.stdout
+@pytest.fixture()
+def cli(argv_runner, capsys):
+    """Run one CLI command in this process; returns what it printed."""
+
+    def run(*args):
+        capsys.readouterr()
+        argv_runner(*args)
+        return capsys.readouterr().out
+
+    return run
 
 
 def _latest_stats(spark, tiers: str, tier: str) -> dict:
@@ -46,24 +51,26 @@ def _latest_stats(spark, tiers: str, tier: str) -> dict:
 def _assert_rerolled(stdout: str) -> None:
     """Every tier committed the cells the pass extended."""
     n = int(stdout.split("update-img: extended ")[1].split()[0])
-    assert n > 0
+    assert n > 0, stdout
     for t in TIERS:
-        assert f"tier {t}: {n} cells committed" in stdout
+        assert f"tier {t}: {n} cells committed" in stdout, stdout
 
 
-def test_cli_update_img_incremental(tmp_path, spark):
+def test_cli_update_img_incremental(tmp_path, spark, cli, capsys):
     src, silver, tiers = (str(tmp_path / d) for d in ("in", "silver", "tiers"))
 
     full = gen_transcripts(spark, n_conv=20, days=2, turns_per_conv=6)
     first = full.where(F.col("ts") < CUTOFF)
     first.write.mode("append").parquet(src)
-    _cli("reshuffle", "--bronze", src, "--out", silver, "--n-cells", "8")
+    cli("reshuffle", "--bronze", src, "--out", silver, "--n-cells", "8")
 
-    # pass 1 replays the first files into the silver made from them (a
-    # harmless upsert) and rolls every tier cell up
-    _assert_rerolled(
-        _cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
-    )
+    # reshuffle recorded the files it read, so pass 1 upserts none of
+    # them and extends no cell; it rolls every tier cell up
+    out = cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
+    assert "update-img: extended 0 cells" in out, out
+    n_cells = len(glob.glob(f"{silver}/cell_id=*"))
+    for t in TIERS:
+        assert f"tier {t}: {n_cells} cells committed" in out, out
     stale = str(tmp_path / "stale")
     shutil.copytree(tiers, stale)
 
@@ -99,12 +106,12 @@ def test_cli_update_img_incremental(tmp_path, spark):
         .parquet(src)
     )
     _assert_rerolled(
-        _cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
+        cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
     )
 
     ref_silver, ref = str(tmp_path / "ref_silver"), str(tmp_path / "ref")
-    _cli("reshuffle", "--bronze", src, "--out", ref_silver, "--n-cells", "8")
-    _cli("rollup", "--silver", ref_silver, "--out", ref)
+    cli("reshuffle", "--bronze", src, "--out", ref_silver, "--n-cells", "8")
+    cli("rollup", "--silver", ref_silver, "--out", ref)
     for t in TIERS:
         a = spark.read.parquet(f"{tiers}/{t}")
         b = spark.read.parquet(f"{ref}/{t}").select(*a.columns)
@@ -112,8 +119,41 @@ def test_cli_update_img_incremental(tmp_path, spark):
         assert b.exceptAll(a).count() == 0, t
         assert _latest_stats(spark, tiers, t) == _latest_stats(spark, ref, t), t
 
-    assert "MISMATCH" not in _cli("audit", "--silver", silver, "--out", tiers)
+    assert "MISMATCH" not in cli("audit", "--silver", silver, "--out", tiers)
     # the tiers of pass 1, not re-rolled after pass 2's extend
-    assert "audit hourly: MISMATCH" in _cli(
-        "audit", "--silver", silver, "--out", stale, ok=False
+    with pytest.raises(SystemExit):
+        cli("audit", "--silver", silver, "--out", stale)
+    assert "audit hourly: MISMATCH" in capsys.readouterr().out
+
+
+def test_cli_update_img_consumes_old_mtime_backfill(tmp_path, spark, cli):
+    """A backfilled day that lands with a 10-day-old mtime, as `cp -p` or
+    `rsync -t` leaves a file copied from an older store, is upserted: a
+    file is new by name, not by age, so no file is too old to count."""
+    src, silver, tiers = (str(tmp_path / d) for d in ("in", "silver", "tiers"))
+    full = gen_transcripts(spark, n_conv=20, days=2, turns_per_conv=6)
+    full = full.withColumn("ds", F.to_date("ts"))
+    full.where(F.col("ts") < CUTOFF).write.partitionBy("ds").parquet(src)
+    cli("reshuffle", "--bronze", src, "--out", silver, "--n-cells", "8")
+    cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
+
+    before = set(glob.glob(f"{src}/ds=*/*.parquet"))
+    (
+        full.where(F.col("ts") >= CUTOFF)
+        .write.mode("append")
+        .partitionBy("ds")
+        .parquet(src)
     )
+    old = time.time() - 10 * 86400
+    backfill = set(glob.glob(f"{src}/ds=*/*.parquet")) - before
+    assert backfill
+    for f in backfill:
+        os.utime(f, (old, old))
+
+    _assert_rerolled(
+        cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
+    )
+    a = spark.read.parquet(silver).select(*SILVER_COLS)
+    b = reshuffle(full.drop("ds"), n_cells=8).select(*SILVER_COLS)
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0

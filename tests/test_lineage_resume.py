@@ -285,29 +285,37 @@ def test_attrs_propagate_reshuffle_rollup_read(tmp_path, spark, bronze):
 
 
 def test_audit_lists_written_cells_on_the_driver(tmp_path, spark):
-    """run() reads the cells it wrote back for their lineage rows. Spark
-    lists more than 32 directories of a read in a Spark job of its own;
-    the audit's are listed on the driver, so a 64-cell tier launches no
-    more jobs than a 16-cell one."""
+    """run() reads the cells it wrote back for their lineage rows, and
+    verify() reads every cell of the tier. Spark lists more than 32
+    directories of a read in a Spark job of its own, and infers a schema
+    in another; both reads list the cells on the driver and take the
+    input's schema, so at 64 cells each launches no more jobs than at
+    16."""
     from ecmwf_models_spark.synth import gen_transcripts
 
     bronze = gen_transcripts(spark, n_conv=400, days=2, turns_per_conv=4)
     daily = finalize(rollup_from_raw(reshuffle(bronze, num_partitions=4), "daily"))
     daily.cache().count()
     sc = spark.sparkContext
-    jobs = {}
+
+    def jobs(name, f):
+        sc.setJobGroup(name, name)
+        try:
+            assert f()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    runs, verifies = {}, {}
     for n in (16, 64):
         name = f"daily{n}"
         w = ResumableTierWriter(
             spark, str(tmp_path / name), str(tmp_path / f"{name}_lin"),
             tier="daily",
         )
-        sc.setJobGroup(name, name)
-        try:
-            assert w.run(with_cell_id(daily, n)) == n
-        finally:
-            sc.setJobGroup(None, None)
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(name))
-        assert w.verify(with_cell_id(daily, n))
-    assert jobs[64] <= jobs[16], jobs
+        df = with_cell_id(daily, n)
+        runs[n] = jobs(f"run{n}", lambda: w.run(df) == n)
+        verifies[n] = jobs(f"verify{n}", lambda: w.verify(df))
+    assert runs[64] <= runs[16], runs
+    assert verifies[64] == verifies[16], verifies
     daily.unpersist()

@@ -23,8 +23,8 @@ their commit, so `extend` (or `update-img`, which extends and re-rolls)
 followed by `rollup` never serves a stale tier; `audit` checks each tier
 against a fresh rollup of the silver.
 
-`reshuffle` and each `update-img` pass record the bronze files they
-consumed in <silver>/_sources; `update-img` upserts only the others.
+`reshuffle`, `extend` and each `update-img` pass record the bronze files
+they consumed in <silver>/_sources; `update-img` upserts only the others.
 
 On a real cluster each subcommand is the driver program for
 `spark-submit --py-files ecmwf_models_spark.zip`.
@@ -117,13 +117,18 @@ def rollup_silver(spark, silver: str, out: str, tiers=None) -> dict[str, int]:
     from pyspark.sql import functions as F
 
     from .grid import with_cell_id
-    from .lineage import ResumableTierWriter, cell_generations, pending_cells
+    from .lineage import (
+        ResumableTierWriter,
+        cell_generations,
+        pending_cells,
+        read_cells,
+    )
     from .operators.rollup import TIERS, finalize, rollup_tiers
 
     tiers = tiers or TIERS
     n_cells = _silver_n_cells(spark, silver)
     lineage = f"{out}/_lineage"
-    src = spark.read.parquet(silver)
+    src = read_cells(spark, silver)
     gens = cell_generations(src)
     pending = sorted(
         {c for t in tiers for c in pending_cells(spark, lineage, t, gens)}
@@ -155,7 +160,7 @@ def cmd_audit(args):
     it; exits non-zero when any tier differs (e.g. a tier not re-rolled
     after an extend) or when --out holds no committed tier."""
     from .grid import with_cell_id
-    from .lineage import ResumableTierWriter, committed_cells
+    from .lineage import ResumableTierWriter, committed_cells, read_cells
     from .operators.rollup import TIERS, finalize, rollup_tiers
 
     spark = _spark(args)
@@ -164,7 +169,7 @@ def cmd_audit(args):
     tiers = [t for t in TIERS if committed_cells(spark, lineage, t)]
     if not tiers:
         raise SystemExit(f"audit: {lineage} records no committed tier")
-    frames = rollup_tiers(spark.read.parquet(args.silver))
+    frames = rollup_tiers(read_cells(spark, args.silver))
     bad = []
     for tier in tiers:
         w = ResumableTierWriter(spark, f"{args.out}/{tier}", lineage, tier=tier)
@@ -178,11 +183,14 @@ def cmd_audit(args):
 
 def cmd_extend(args):
     from .incremental import extend_silver
+    from .lineage import commit_sources
 
     spark = _spark(args)
     n_cells = _silver_n_cells(spark, args.silver)
     new_bronze = spark.read.parquet(args.bronze)
     cells = extend_silver(spark, args.silver, new_bronze, n_cells=n_cells)
+    # so a later update-img over the same bronze dir skips these files
+    commit_sources(spark, args.silver, new_bronze.inputFiles())
     print(f"extended {len(cells)} cells: {sorted(cells)[:20]}")
 
 

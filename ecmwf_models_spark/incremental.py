@@ -24,12 +24,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .grid import with_cell_id
 from .lineage import (
+    cell_paths,
     commit_sources,
     consumed_sources,
     data_files,
+    read_cells,
     read_listed,
     stored_n_cells,
-    table_schema,
 )
 from .operators.reshuffle import reshuffle
 
@@ -82,24 +83,24 @@ def extend_silver(
     if not affected:
         return []
 
-    # the footer schema, so no job infers one from the files
-    existing = (
-        spark.read.schema(table_schema(spark, silver_path))
-        .parquet(silver_path)
-        .where(F.col("cell_id").isin(affected))
+    # the new rows, and the stored rows of the affected cells that have a
+    # directory: read with the footer's schema from a driver listing, so
+    # no job infers a schema or lists cells, at any cell count. Stored
+    # rows come back bronze-shaped (silver keeps every bronze column but
+    # the prelim metadata, which dedup already resolved).
+    merged = new_bronze.select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts",
+        "is_prelim", "ingest_ts",
     )
-    # rebuild bronze-shaped rows from existing silver (it retains all bronze
-    # columns except prelim metadata, which dedup already resolved)
-    merged = existing.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    ).withColumns(
-        {"is_prelim": F.lit(False), "ingest_ts": F.col("ts")}
-    ).unionByName(
-        new_bronze.select(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "is_prelim", "ingest_ts",
-        )
-    )
+    have = cell_paths(spark, silver_path)
+    stored = [have[c] for c in affected if c in have]
+    if stored:
+        existing = read_cells(spark, silver_path, stored)
+        merged = existing.select(
+            "conv_id", "turn_idx", "role", "text", "tool", "ts"
+        ).withColumns(
+            {"is_prelim": F.lit(False), "ingest_ts": F.col("ts")}
+        ).unionByName(merged)
     resorted = reshuffle(merged, n_cells=n_cells)
     (
         resorted.write.mode("overwrite")

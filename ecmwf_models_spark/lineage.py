@@ -45,6 +45,7 @@ stable under any task placement/parallelism.
 
 from __future__ import annotations
 
+import binascii
 import contextlib
 import functools
 import hashlib
@@ -52,9 +53,14 @@ import io
 import json
 import time
 import uuid
+from typing import Any, NamedTuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from py4j import protocol as proto
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
@@ -95,27 +101,68 @@ def _hidden(name: str) -> bool:
     )
 
 
-def part_files(fs, d) -> list:
-    """FileStatus of each data file under the Hadoop directory `d`, as
-    Spark's file index finds them: subdirectories (ds=<date>) included,
-    hidden names skipped; [] when `d` does not exist."""
-    found, todo = [], [d] if fs.exists(d) else []
+class PartFile(NamedTuple):
+    """A data file part_files listed: its Hadoop Path, name and size."""
+
+    path: Any
+    name: str
+    size: int
+
+
+def _list_status(fs, d) -> list:
+    """fs.listStatus(d); [] when `d` does not exist (the FileSystem
+    contract's FileNotFoundException), without a separate exists call."""
+    try:
+        return fs.listStatus(d)
+    except Py4JJavaError as e:
+        missing = "java.io.FileNotFoundException"
+        if is_instance_of(SparkContext._gateway, e.java_exception, missing):
+            return []
+        raise
+
+
+def part_files(fs, d) -> list[PartFile]:
+    """Each data file under the Hadoop directory `d`, as Spark's file
+    index finds them: subdirectories (ds=<date>) included, hidden names
+    skipped; [] when `d` does not exist."""
+    found, todo = [], [d]
     while todo:
-        for st in fs.listStatus(todo.pop()):
-            if _hidden(st.getPath().getName()):
+        for st in _list_status(fs, todo.pop()):
+            path = st.getPath()
+            name = path.getName()
+            if _hidden(name):
                 continue
             if st.isDirectory():
-                todo.append(st.getPath())
+                todo.append(path)
             else:
-                found.append(st)
+                found.append(PartFile(path, name, st.getLen()))
     return found
+
+
+def cell_dirs(fs, root) -> dict:
+    """cell_id -> Hadoop Path of each cell_id=<c> directory under `root`;
+    {} when `root` does not exist."""
+    found = {}
+    for st in _list_status(fs, root):
+        path = st.getPath()
+        key, _, cell = path.getName().partition("=")
+        if key == "cell_id" and st.isDirectory():
+            found[int(cell)] = path
+    return found
+
+
+def cell_paths(spark: SparkSession, path: str) -> dict[int, str]:
+    """cell_id -> path string of each cell_id=<c> directory of the
+    cell-partitioned table at `path`, listed on the driver."""
+    fs, root = _fs_path(spark, path)
+    return {c: p.toString() for c, p in cell_dirs(fs, root).items()}
 
 
 def data_files(spark: SparkSession, path: str) -> list[str]:
     """The part_files under `path`, spelled as DataFrame.inputFiles()
     spells them: Path.toUri()."""
     fs, root = _fs_path(spark, path)
-    return sorted(st.getPath().toUri().toString() for st in part_files(fs, root))
+    return sorted(f.path.toUri().toString() for f in part_files(fs, root))
 
 
 def read_listed(
@@ -137,23 +184,55 @@ def read_listed(
         conf.set(key, threshold)
 
 
+def read_cells(
+    spark: SparkSession, path: str, paths: list | None = None
+) -> DataFrame:
+    """spark.read.parquet(path) of a cell-partitioned table, restricted to
+    the cell directories `paths` (all of them for None): the footer's
+    schema (table_schema) and a driver listing, so no job infers the
+    schema and none lists the directories, at any cell count."""
+    if paths is None:
+        paths = list(cell_paths(spark, path).values())
+    return read_listed(spark, table_schema(spark, path), paths, path)
+
+
 # bytes per py4j call: the JVM flushes a reply in 8 KiB writes on a
 # socket with Nagle's algorithm on, so a longer reply (base64, 4/3 of the
 # bytes) waits out the receiver's delayed ACK, ~40 ms
 _PY4J_CHUNK = 4096
 
 
+def _read_n_bytes(stream, n: int) -> bytes:
+    """stream.readNBytes(n) through py4j, the reply's base64 decoded by
+    binascii: py4j's own decoder builds the bytes one Python int at a
+    time, ~40% of the Python CPU of a point read's fetch of a 12 KB file."""
+    client = stream._gateway_client
+    answer = client.send_command(
+        proto.CALL_COMMAND_NAME
+        + f"{stream._target_id}\nreadNBytes\n"
+        + proto.get_command_part(n)
+        + proto.END_COMMAND_PART
+    )
+    if answer.startswith(proto.SUCCESS + proto.BYTES_TYPE):
+        return binascii.a2b_base64(answer[2:])
+    # raises the Java exception
+    return proto.get_return_value(answer, client, stream._target_id, "readNBytes")
+
+
 class _HadoopInput(io.RawIOBase):
     """A seekable read-only file over a Hadoop input stream, for pyarrow.
     Each read that misses the block fetched last is one positioned fetch
-    of just the bytes asked for (seek, then readNBytes through py4j in
-    _PY4J_CHUNK pieces). pyarrow reads a parquet footer as one tail block
-    (the whole file, when it is small), so the column chunks of a small
-    file come from that block. `fetched` counts the bytes fetched."""
+    of just the bytes asked for (a seek unless the stream is there, then
+    readNBytes through py4j in _PY4J_CHUNK pieces). pyarrow reads a
+    parquet footer as one tail block (the whole file, when it is small),
+    so the column chunks of a small file come from that block. `fetched`
+    counts the bytes fetched."""
 
     def __init__(self, stream, size: int):
         self._in, self._size, self._pos = stream, size, 0
         self._at, self._block = 0, b""
+        # where the stream is: a fetch from there needs no seek
+        self._in_pos = 0
         self.fetched = 0
 
     def readable(self) -> bool:
@@ -173,12 +252,14 @@ class _HadoopInput(io.RawIOBase):
     def read(self, n: int = -1) -> bytes:
         end = self._size if n < 0 else min(self._pos + n, self._size)
         if not self._at <= self._pos <= end <= self._at + len(self._block):
-            self._in.seek(self._pos)
+            if self._in_pos != self._pos:
+                self._in.seek(self._pos)
             parts = []
             for at in range(self._pos, end, _PY4J_CHUNK):
-                parts.append(self._in.readNBytes(min(_PY4J_CHUNK, end - at)))
+                parts.append(_read_n_bytes(self._in, min(_PY4J_CHUNK, end - at)))
             self._block = b"".join(parts)
             self._at = self._pos
+            self._in_pos = self._pos + len(self._block)
             self.fetched += len(self._block)
         out = self._block[self._pos - self._at : end - self._at]
         self._pos = end
@@ -191,11 +272,11 @@ class _HadoopInput(io.RawIOBase):
 
 
 @contextlib.contextmanager
-def parquet_file(fs, status):
-    """pq.ParquetFile over the Hadoop file `status`, fetched range by
-    range: the footer first, then only the column chunks a read asks for.
-    INT96 timestamps (Spark's default) come back as microseconds."""
-    src = _HadoopInput(fs.open(status.getPath()), status.getLen())
+def parquet_file(fs, f: PartFile):
+    """pq.ParquetFile over the listed file `f`, fetched range by range:
+    the footer first, then only the column chunks a read asks for. INT96
+    timestamps (Spark's default) come back as microseconds."""
+    src = _HadoopInput(fs.open(f.path), f.size)
     try:
         yield pq.ParquetFile(src, coerce_int96_timestamp_unit="us")
     finally:
@@ -214,11 +295,9 @@ def table_schema(spark: SparkSession, path: str) -> T.StructType:
     schema inference is one (two above 32 cell directories). Raises
     FileNotFoundError when no cell directory holds a part file."""
     fs, root = _fs_path(spark, path)
-    for d in fs.listStatus(root) if fs.exists(root) else []:
-        if not (d.isDirectory() and d.getPath().getName().startswith("cell_id=")):
-            continue
-        for st in part_files(fs, d.getPath()):
-            with parquet_file(fs, st) as pf:
+    for d in cell_dirs(fs, root).values():
+        for f in part_files(fs, d):
+            with parquet_file(fs, f) as pf:
                 arrow = pf.schema_arrow
             stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
             data = (
@@ -261,8 +340,8 @@ def _committed_rows(spark: SparkSession, path: str, schema) -> list[dict]:
     wrote (part files beside _SUCCESS and .crc files)."""
     fs, d = _fs_path(spark, path)
     tables = []
-    for st in part_files(fs, d):
-        with parquet_file(fs, st) as pf:
+    for f in part_files(fs, d):
+        with parquet_file(fs, f) as pf:
             tables.append(
                 pf.read(columns=schema.names).cast(to_arrow_schema(schema))
             )
@@ -491,15 +570,8 @@ class ResumableTierWriter:
         """Hadoop Paths of the cell_id=* directories whose cell is not in
         `skip`."""
         fs, out = _fs_path(self.spark, self.out_dir)
-        if not fs.exists(out):
-            return []
         skip = set(skip)
-        found = []
-        for st in fs.listStatus(out):
-            key, _, cell = st.getPath().getName().partition("=")
-            if st.isDirectory() and key == "cell_id" and int(cell) not in skip:
-                found.append(st.getPath())
-        return found
+        return [p for c, p in cell_dirs(fs, out).items() if c not in skip]
 
     def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
         """Materialize pending cells; returns number of cells committed.

@@ -6,18 +6,23 @@ Reference: ERATs.read(lon, lat) -> nearest gpi -> gpi2cell -> open one
 read_bulk caches the whole cell file (interface.py:705-711).
 
 A driver read, as the reference opens one file locally — no Spark job:
-  * routing (gpi2cell) is a driver-side call of the same Catalyst XXH64
-    that `grid.cell_of` runs on the write path;
+  * routing (gpi2cell) is one py4j call of the same Catalyst XXH64 that
+    `grid.cell_of` runs on the write path;
   * <silver>/cell_id=<cell> is listed at every read, through the Hadoop
-    FileSystem Spark resolves the path with, so a reader opened before
-    `extend_silver` sees the extended cells;
+    FileSystem Spark resolves the path with (resolved once per reader, as
+    is each cell's Path), so a reader opened before `extend_silver` sees
+    the extended cells; a cell with no directory holds no conv;
   * of each part file, the footer is fetched first, then only the row
     groups whose conv_id min/max can hold the conv: a cell file is sorted
     by conv_id, so that is the conv's row groups, not the cell; pyarrow
     filters them to the conv;
-  * the rows convert to pandas by Spark's own Arrow-to-pandas path and
-    are ordered by (ts, turn_idx) — a total order, since (conv_id, turn_idx)
-    is unique in silver.
+  * the rows are ordered by (ts, turn_idx) in Arrow — a total order, since
+    (conv_id, turn_idx) is unique in silver — then rescaled, their
+    timestamps made naive in the session zone (read at every read), and
+    converted by one Table.to_pandas with the options toPandas() uses.
+    Spark's own converter runs only on the column types whose Arrow
+    conversion differs from toPandas()'s, decided when the reader opens,
+    so the frame is the Spark query's, dtypes included.
 Opening a reader takes the table's schema from one part file's footer
 (`lineage.table_schema`), so it launches no job either.
 `offsets`/`scale_factors` (interface.py:694-714) map to an affine select.
@@ -35,6 +40,7 @@ from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schem
 
 from ..lineage import (
     _fs_path,
+    _path_class,
     generation,
     parquet_file,
     part_files,
@@ -48,13 +54,13 @@ _XXHASH64_SEED = 42
 
 
 @functools.lru_cache(maxsize=1)
-def _xxhash64_utf8(jvm):
-    """(UTF8String.fromString, XXH64.hashUTF8String) of one JVM, resolved
-    once: py4j resolves a dotted class name with one round trip per name
-    part, ~10x the cost of the two calls themselves."""
+def _xxhash64(jvm):
+    """(a Catalyst XXH64 hasher with Spark's seed, Platform.BYTE_ARRAY_OFFSET)
+    of one JVM, made once: py4j resolves a dotted class name with one round
+    trip per name part, ~10x the cost of the call itself."""
     return (
-        jvm.org.apache.spark.unsafe.types.UTF8String.fromString,
-        jvm.org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String,
+        jvm.org.apache.spark.sql.catalyst.expressions.XXH64(_XXHASH64_SEED),
+        jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
     )
 
 
@@ -62,11 +68,13 @@ def cell_id_for(spark: SparkSession, conv_id: str, n_cells: int) -> int:
     """Driver-side cell routing (gpi2cell), without a Spark job.
 
     Calls through py4j the Catalyst XXH64 function that `F.xxhash64` (and
-    so `grid.cell_of` on the write path) evaluates, so the cell is
-    bit-identical to the one the row was written to. Python's `%` with a
-    positive modulus is Spark's `pmod`."""
-    from_string, hash_utf8 = _xxhash64_utf8(spark.sparkContext._jvm)
-    return hash_utf8(from_string(conv_id), _XXHASH64_SEED) % n_cells
+    so `grid.cell_of` on the write path) evaluates on a string, over the
+    same UTF-8 bytes, so the cell is bit-identical to the one the row was
+    written to: one py4j call, the bytes sent as a Java byte[]. Python's
+    `%` with a positive modulus is Spark's `pmod`."""
+    hasher, offset = _xxhash64(spark.sparkContext._jvm)
+    data = conv_id.encode("utf-8")
+    return hasher.hashUnsafeBytes(data, offset, len(data)) % n_cells
 
 
 def conv_row_groups(meta, conv_id: str) -> list[int]:
@@ -82,28 +90,42 @@ def conv_row_groups(meta, conv_id: str) -> list[int]:
     return out
 
 
-def _to_pandas(table: pa.Table, schema: T.StructType, timezone: str):
-    """Spark's Arrow-to-pandas conversion of a collected DataFrame
-    (pyspark.sql.pandas.conversion), over a table read on the driver: the
-    same Arrow options, then Spark's converter per field (timestamps naive
-    in the session zone)."""
-    if table.num_rows:
-        pdf = table.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
-    else:
-        pdf = pd.DataFrame(columns=schema.names)
-    return pd.concat(
-        [
-            _create_converter_to_pandas(
-                f.dataType,
-                f.nullable,
-                timezone=timezone,
-                struct_in_pandas="dict",
-                error_on_duplicated_field_names=False,
-            )(ser)
-            for (_, ser), f in zip(pdf.items(), schema.fields)
-        ],
-        axis="columns",
-    )
+# field types whose Table.to_pandas column (Spark's Arrow options) is
+# the column Spark's converter returns: numpy int/float dtypes (float64
+# for an int column with nulls), bool (object with nulls), and objects
+# Spark's converter passes through
+_ARROW_AS_SPARK = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+    T.BinaryType,
+    T.DateType,
+    T.DecimalType,
+)
+
+# Spark's ascending order: nulls first, here on each key
+_ORDER = dict(
+    sort_keys=[("ts", "ascending"), ("turn_idx", "ascending")],
+    null_placement="at_start",
+)
+
+_TZ_KEY = "spark.sql.session.timeZone"
+
+
+@functools.lru_cache(maxsize=64)
+def _arrow_knows(zone: str) -> bool:
+    """Whether Arrow's time zone database has `zone`: it lacks the fixed
+    offsets (+08:00) Spark and pandas take."""
+    try:
+        pc.local_timestamp(pa.array([0], pa.timestamp("us", zone)))
+    except pa.ArrowInvalid:
+        return False
+    return True
 
 
 class TsReader:
@@ -141,26 +163,52 @@ class TsReader:
         self.scale_factors = scale_factors or {}
         cols = self.schema.names
         if parameters:
-            # turn_idx rides along for the order
-            extra = [] if "turn_idx" in parameters else ["turn_idx"]
-            cols = ["ts", *parameters, *extra]
-        # the columns read returns before rescaling, and those it reads
-        # from the files (cell_id is the directory; conv_id the filter)
-        self._out = T.StructType([self.schema[c] for c in cols])
+            cols = ["ts", *parameters]
+        # the returned columns before set_index; Spark's float * double
+        # is a double
+        rescaled = {*self.scale_factors, *self.offsets}
+        self._out = T.StructType(
+            [
+                T.StructField(c, T.DoubleType()) if c in rescaled else self.schema[c]
+                for c in cols
+            ]
+        )
+        # the columns whose Arrow conversion is not toPandas()'s, by type:
+        # Spark's converter runs on them. Timestamps localize in Arrow.
+        self._by_spark = [
+            f
+            for f in self._out.fields
+            if not isinstance(f.dataType, (*_ARROW_AS_SPARK, T.TimestampType))
+        ]
+        # the columns read from the files: cell_id is the directory, the
+        # filter needs conv_id and the order turn_idx
         file_cols = [c for c in cols if c != "cell_id"]
-        file_cols += [] if "conv_id" in file_cols else ["conv_id"]
+        file_cols += [c for c in ("conv_id", "turn_idx") if c not in file_cols]
         self._file_schema = to_arrow_schema(
             T.StructType([self.schema[c] for c in file_cols])
         )
+        # resolved once: the FileSystem and each cell directory's Path
+        self._fs, _ = _fs_path(spark, silver_path)
+        self._dirs: dict[int, object] = {}
         # read_bulk: cell -> (generation, the cell's rows)
         self._cell_cache: dict[int, tuple[str, pa.Table]] = {}
 
-    def _fetch(self, fs, files, conv_id: str | None) -> pa.Table:
+    def _files(self, cell: int) -> list:
+        """The part files of cell directory `cell`, listed now; [] when it
+        has no directory yet."""
+        d = self._dirs.get(cell)
+        if d is None:
+            d = self._dirs[cell] = _path_class(self.spark._jvm)(
+                f"{self.silver_path}/cell_id={cell}"
+            )
+        return part_files(self._fs, d)
+
+    def _fetch(self, files, conv_id: str | None) -> pa.Table:
         """The rows of `files` in the row groups that can hold `conv_id`
         (all of them for None), in the file columns."""
         tables = [self._file_schema.empty_table()]
-        for st in files:
-            with parquet_file(fs, st) as pf:
+        for f in files:
+            with parquet_file(self._fs, f) as pf:
                 rgs = (
                     range(pf.num_row_groups)
                     if conv_id is None
@@ -172,44 +220,70 @@ class TsReader:
             tables.append(t.cast(self._file_schema))
         return pa.concat_tables(tables)
 
-    def _cell_rows(self, cell: int, conv_id: str) -> pa.Table:
-        """The conv's rows of cell directory `cell`, listed now. A cell with
-        no directory yet holds no conv."""
-        fs, d = _fs_path(self.spark, f"{self.silver_path}/cell_id={cell}")
-        files = part_files(fs, d)
+    def _cell_rows(self, cell: int, files: list, conv_id: str) -> pa.Table:
+        """The conv's rows of cell `cell`, whose directory holds `files`,
+        in the file columns and cell_id."""
         if self.read_bulk:
-            gen = generation(st.getPath().getName() for st in files)
+            gen = generation(f.name for f in files)
             cached = self._cell_cache.get(cell)
             if cached is None or cached[0] != gen:
-                cached = (gen, self._fetch(fs, files, None))
+                cached = (gen, self._fetch(files, None))
                 self._cell_cache[cell] = cached
             rows = cached[1]
         else:
-            rows = self._fetch(fs, files, conv_id)
+            rows = self._fetch(files, conv_id)
         rows = rows.filter(pc.equal(rows["conv_id"], conv_id))
         return rows.append_column(
             "cell_id", pa.array([cell] * rows.num_rows, pa.int32())
         )
 
+    def _frame(self, rows: pa.Table, zone: str) -> pd.DataFrame:
+        """toPandas().set_index("ts") of `rows` ordered by (ts, turn_idx),
+        in the returned columns. Rows are ordered by their instants, as
+        Spark sorts timestamps, then rescaled and localized in Arrow and
+        converted by one Table.to_pandas with Spark's options; Spark's
+        converter runs only on the columns Arrow converts otherwise."""
+        rows = rows.take(pc.sort_indices(rows, **_ORDER))
+        by_spark = list(self._by_spark)
+        cols = {}
+        for f in self._out.fields:
+            col = rows[f.name]
+            if f.name in self.scale_factors or f.name in self.offsets:
+                col = col.cast(pa.float64(), safe=False)
+                if f.name in self.scale_factors:
+                    col = pc.multiply(col, self.scale_factors[f.name])
+                if f.name in self.offsets:
+                    col = pc.add(col, self.offsets[f.name])
+            elif isinstance(f.dataType, T.TimestampType):
+                if _arrow_knows(zone):
+                    col = pc.local_timestamp(col.cast(pa.timestamp("us", zone)))
+                else:
+                    by_spark.append(f)
+            cols[f.name] = col
+        # the index is converted apart: set_index would copy every column
+        ts = cols.pop("ts").to_pandas(coerce_temporal_nanoseconds=True)
+        pdf = pa.table(cols).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True, split_blocks=True
+        )
+        for f in by_spark:
+            convert = _create_converter_to_pandas(
+                f.dataType,
+                f.nullable,
+                timezone=zone,
+                struct_in_pandas="dict",
+                error_on_duplicated_field_names=False,
+            )
+            if f.name == "ts":
+                ts = convert(ts)
+            else:
+                pdf[f.name] = convert(pdf[f.name])
+        pdf.index = pd.Index(ts, name="ts")
+        return pdf
+
     def read(self, conv_id: str) -> pd.DataFrame:
         cell = cell_id_for(self.spark, conv_id, self.n_cells)
-        pdf = _to_pandas(
-            self._cell_rows(cell, conv_id).select(self._out.names),
-            self._out,
-            self.spark.conf.get("spark.sql.session.timeZone"),
-        )
-        # Spark's float * double is a double
-        for c, sf in self.scale_factors.items():
-            pdf[c] = pdf[c].astype("float64") * sf
-        for c, off in self.offsets.items():
-            pdf[c] = pdf[c].astype("float64") + off
-        # Spark's ascending order puts nulls first
-        pdf = pdf.sort_values(
-            ["ts", "turn_idx"], kind="stable", na_position="first"
-        )
-        if self.parameters and "turn_idx" not in self.parameters:
-            pdf = pdf.drop(columns="turn_idx")
-        pdf = pdf.set_index("ts")
+        rows = self._cell_rows(cell, self._files(cell), conv_id)
+        pdf = self._frame(rows, self.spark.conf.get(_TZ_KEY))
         # pandas-native attrs carry: units/long_name per variable
         pdf.attrs["var_attrs"] = {
             c: self.attrs[c] for c in pdf.columns if c in self.attrs

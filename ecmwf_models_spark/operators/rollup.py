@@ -158,24 +158,18 @@ def rollup_cascade(
 
 def finalize(df: DataFrame, value_cols: tuple[str, ...] = METRICS) -> DataFrame:
     """Derive means, convert micro sums back to value units, and apply the
-    float32 edge cast."""
-    out = df
+    float32 edge cast: one projection (each withColumn would re-analyse
+    the plan so far). Replaced columns keep their place; the means follow
+    the input's columns, in value_cols order."""
+    cols = {}
     for c in value_cols:
-        out = out.withColumn(
-            f"{c}_avg",
-            (
-                F.col(f"{c}_sum").cast("double")
-                / MICRO
-                / F.col(f"{c}_cnt")
-            ).cast("float"),
-        ).withColumn(
-            f"{c}_sum", F.col(f"{c}_sum").cast("double") / MICRO
-        )
+        cols[f"{c}_avg"] = (
+            F.col(f"{c}_sum").cast("double") / MICRO / F.col(f"{c}_cnt")
+        ).cast("float")
+        cols[f"{c}_sum"] = F.col(f"{c}_sum").cast("double") / MICRO
         for suffix in ("min", "max", "first", "last"):
-            out = out.withColumn(
-                f"{c}_{suffix}", F.col(f"{c}_{suffix}").cast("float")
-            )
-    return out
+            cols[f"{c}_{suffix}"] = F.col(f"{c}_{suffix}").cast("float")
+    return df.withColumns(cols)
 
 
 def rollup_tiers(

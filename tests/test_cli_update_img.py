@@ -157,3 +157,22 @@ def test_cli_update_img_consumes_old_mtime_backfill(tmp_path, spark, cli):
     b = reshuffle(full.drop("ds"), n_cells=8).select(*SILVER_COLS)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_cli_extend_records_its_sources(tmp_path, spark, cli):
+    """`extend` records the bronze files it upserts in <silver>/_sources,
+    so an `update-img` over the same dir finds nothing new and extends no
+    cell."""
+    src, silver, tiers = (str(tmp_path / d) for d in ("in", "silver", "tiers"))
+    full = gen_transcripts(spark, n_conv=20, days=2, turns_per_conv=6)
+    full.where(F.col("ts") < CUTOFF).write.parquet(src)
+    cli("reshuffle", "--bronze", src, "--out", silver, "--n-cells", "8")
+    full.where(F.col("ts") >= CUTOFF).write.mode("append").parquet(src)
+
+    out = cli("extend", "--silver", silver, "--bronze", src)
+    assert not out.startswith("extended 0 cells"), out
+    out = cli("update-img", "--bronze", src, "--silver", silver, "--out", tiers)
+    assert "update-img: extended 0 cells" in out, out
+    assert lineage.consumed_sources(spark, silver) == set(
+        lineage.data_files(spark, src)
+    )

@@ -131,6 +131,24 @@ def test_float32_edge_contract(silver):
     assert raw["text_len_cnt"] == "bigint"
 
 
+def test_finalize_column_order(silver):
+    """finalize keeps each carried column in its place and appends the
+    means, in METRICS order: the column order of every tier file."""
+    state = [
+        f"{c}_{s}"
+        for c in ("text_len", "tool_call")
+        for s in ("sum", "cnt", "min", "max", "first", "last")
+    ]
+    for raw in (
+        rollup_from_raw(silver, "hourly"),
+        rollup_cascade(rollup_from_raw(silver, "hourly"), "daily"),
+    ):
+        assert finalize(raw).columns == [
+            "conv_id", "bucket_ts", "n_turns", *state,
+            "text_len_avg", "tool_call_avg",
+        ]
+
+
 def test_monthly_tier_bit_stable_across_parallelism(spark, bronze):
     """The round-1 driver failure mode: double sums flipped rounding
     boundaries between partitionings. int64 micro sums are associative,

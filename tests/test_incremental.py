@@ -4,13 +4,16 @@ preceding day's 12:00 image; merged series must be in time order and
 contain both points)."""
 
 import glob
+import os
+import shutil
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark.incremental import extend_silver, stored_end
-from ecmwf_models_spark.operators.pointread import TsReader
+from ecmwf_models_spark.lineage import cell_generations, read_cells
+from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.synth import gen_transcripts
 
@@ -233,3 +236,40 @@ def test_extend_prelim_redelivery_matches_reshuffle(tmp_path, spark):
     want = text(reshuffle(initial.unionByName(a).unionByName(b), n_cells=8))
     assert want == ["B"]
     assert text(spark.read.parquet(path)) == want
+
+
+def test_extend_and_silver_open_jobs_independent_of_cell_count(
+    tmp_path, spark, jobs_of
+):
+    """The silver is opened from its footer's schema and a driver listing
+    of the cell directories (lineage.read_cells): no schema-inference job,
+    and no parallel listing job above 32 directories. So opening it for
+    rollup/audit launches no job, and one batch extends a silver of 16
+    cell directories and one of 64 with as many jobs: both hold the same
+    rows in the cells the batch touches."""
+    initial = gen_transcripts(spark, n_conv=400, days=2, turns_per_conv=4)
+    later = (
+        initial.where(~F.col("is_prelim") & (F.col("conv_id") < "conv-000004"))
+        .withColumn("turn_idx", F.col("turn_idx") + 100)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 3 DAYS"))
+    )
+    path64, path16 = str(tmp_path / "silver64"), str(tmp_path / "silver16")
+    write_silver(reshuffle(initial, n_cells=64, num_partitions=4), path64)
+    dirs = sorted(glob.glob(f"{path64}/cell_id=*"))
+    assert len(dirs) == 64
+    touched = {
+        f"cell_id={cell_id_for(spark, f'conv-{i:06d}', 64)}" for i in range(4)
+    }
+    kept = [d for d in dirs if os.path.basename(d) in touched]
+    kept += [d for d in dirs if d not in kept][: 16 - len(kept)]
+    for d in kept:
+        shutil.copytree(d, f"{path16}/{os.path.basename(d)}")
+    jobs = {}
+    for n, path in ((16, path16), (64, path64)):
+        src, open_jobs = jobs_of(read_cells, spark, path)
+        assert open_jobs == 0
+        _, gen_jobs = jobs_of(cell_generations, src)
+        assert gen_jobs == 0
+        cells, jobs[n] = jobs_of(extend_silver, spark, path, later, 64)
+        assert {f"cell_id={c}" for c in cells} == touched
+    assert jobs[16] == jobs[64], jobs

@@ -255,6 +255,7 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
     from ecmwf_models_spark.grid import with_cell_id
     from ecmwf_models_spark.lineage import (
         ResumableTierWriter,
+        read_cells,
         write_run_settings,
     )
     from ecmwf_models_spark.operators.rollup import finalize, rollup_tiers
@@ -279,7 +280,8 @@ def test_cli_rollup_writes_rollup_tiers(bronze, tmp_path, monkeypatch):
     rollup("daily")
     assert list(written) == ["daily"]
     pending = F.col("cell_id").isin(list(range(16)))
-    want = rollup_tiers(spark.read.parquet(path).where(pending))["daily"]
+    # the silver as the command opens it (read_cells: 16 listed paths)
+    want = rollup_tiers(read_cells(spark, path).where(pending))["daily"]
     want = with_cell_id(finalize(want), 16)
     got, want = (
         re.sub(r"#\d+|plan_id=\d+", "", plan_of(df, "simple"))

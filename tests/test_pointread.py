@@ -10,14 +10,17 @@ read_bulk's cached cells.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 import uuid
+from decimal import Decimal
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark.grid import with_cell_id
 from ecmwf_models_spark.incremental import extend_silver
 from ecmwf_models_spark.lineage import read_table_attrs, write_run_settings
 from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
@@ -241,3 +244,67 @@ def test_read_bulk_serves_no_stale_cell(spark, tmp_path):
     assert len(got) == 18
     pd.testing.assert_frame_equal(got, spark_read(spark, path, conv))
     r.close()
+
+
+def test_reader_reads_session_time_zone_at_each_read(spark, silver16):
+    """A reader opened before spark.sql.session.timeZone changes returns
+    the Spark query's frames in the new zone: the zone is read at every
+    read, not at open. +08:00 is a fixed offset that Arrow's time zone
+    database lacks, so its timestamps take Spark's converter."""
+    key = "spark.sql.session.timeZone"
+    readers = [TsReader(spark, silver16), TsReader(spark, silver16, **RESCALED)]
+    zone = spark.conf.get(key)
+    try:
+        for new_zone in ("America/Los_Angeles", "+08:00"):
+            spark.conf.set(key, new_zone)
+            for r, opts in zip(readers, ({}, RESCALED)):
+                for conv in CONVS:
+                    pd.testing.assert_frame_equal(
+                        r.read(conv), spark_read(spark, silver16, conv, **opts)
+                    )
+    finally:
+        spark.conf.set(key, zone)
+
+
+def test_read_converts_every_column_type_as_to_pandas(spark, tmp_path):
+    """Column types silver does not hold yet convert as toPandas() does:
+    Arrow's own conversion where it gives Spark's result (numbers, bools,
+    strings, binaries, dates, decimals; nulls included), timestamps
+    localized, Spark's converter where Arrow differs (a map is a dict, not
+    a list of pairs). One conv holds nulls in every column, the other
+    none, so int and bool columns come back both as numpy ints/bools and
+    as float64/object."""
+    schema = (
+        "conv_id string, turn_idx int, ts timestamp, b boolean, i8 tinyint,"
+        " i16 smallint, i32 int, i64 bigint, f32 float, f64 double,"
+        " s string, bin binary, d date, dec decimal(10,2), t timestamp,"
+        " m map<string,int>"
+    )
+    at = dt.datetime(2024, 3, 10, 9, 30)
+    # 08:30 and 09:10 UTC on 2024-11-03 are 01:30 PDT, then 01:10 PST
+    t = dt.datetime(2024, 11, 3, 8, 30)
+    full = (True, 1, 2, 3, 4, 1.5, 2.5, "x", b"\x01", dt.date(2024, 1, 1),
+            Decimal("1.25"), t, {"k": 1})
+    rows = [
+        ("c-full", 0, at, *full),
+        ("c-full", 1, at + dt.timedelta(hours=1), False, -1, -2, -3, -4,
+         -1.5, -2.5, "y", b"\x02", dt.date(2024, 1, 2), Decimal("-1.25"),
+         t + dt.timedelta(minutes=40), {"k": 2, "j": None}),
+        ("c-null", 0, at, *full),
+        ("c-null", 1, None, *[None] * len(full)),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "typed")
+    with_cell_id(df, 4).write.partitionBy("cell_id").parquet(path)
+    r = TsReader(spark, path, n_cells=4)
+    key = "spark.sql.session.timeZone"
+    zone = spark.conf.get(key)
+    try:
+        for new_zone in (zone, "America/Los_Angeles", "+08:00"):
+            spark.conf.set(key, new_zone)
+            for conv in ("c-full", "c-null"):
+                pd.testing.assert_frame_equal(
+                    r.read(conv), spark_read(spark, path, conv)
+                )
+    finally:
+        spark.conf.set(key, zone)

@@ -99,11 +99,11 @@ DRIVER_QUERY_NAMES = [
     "ann_topk",
     "quality_per_source",
 ]
-# The remaining 39 oracled entries (remap family, ANN variants, scalar
+# The remaining 38 oracled entries (remap family, ANN variants, scalar
 # fns, ...) are CORRECTNESS-graded, not throughput paths: most are
 # dominated by plan compilation on sub-second data, so adding them here
-# would measure Catalyst overhead, not the engine. The driver's
-# correctness gate grades the first 50 of the 51 QUERIES entries.
+# would measure Catalyst overhead, not the engine. The correctness
+# gate grades all 50 QUERIES entries.
 
 
 def main():

@@ -558,13 +558,12 @@ class ResumableTierWriter:
         out_dir: str,
         lineage_dir: str,
         tier: str,
-        job_id: str | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.lineage_dir = lineage_dir
         self.tier = tier
-        self.job_id = job_id or uuid.uuid4().hex[:12]
+        self.job_id = uuid.uuid4().hex[:12]
 
     def _cell_dirs(self, skip) -> list:
         """Hadoop Paths of the cell_id=* directories whose cell is not in

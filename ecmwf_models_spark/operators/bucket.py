@@ -11,15 +11,16 @@ operators fall out:
   * filter_h_steps  — keep only rows already on configured hours
                       (selection, not averaging — the reference never
                       averages over time).
-  * timeline        — generate the expected bucket set for a range
-                      (the generated-not-observed timestamp contract).
+
+The generated-not-observed timestamp set is built per conv by
+operators/gapfill.py gap_fill, not as one global timeline.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 STEP_HOURS = 6
 
@@ -53,22 +54,3 @@ def filter_h_steps(
         & (F.second(c) == 0)
     )
 
-
-def timeline(
-    spark: SparkSession,
-    start: str,
-    end: str,
-    hours: int = STEP_HOURS,
-) -> DataFrame:
-    """DataFrame of every expected bucket in [start, end] — the generated
-    timestamp set (reference interface.py:361-386). sequence() is evaluated
-    JVM-side; explode distributes."""
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.to_timestamp(F.lit(start)),
-                F.to_timestamp(F.lit(end)),
-                F.expr(f"INTERVAL {hours} HOURS"),
-            )
-        ).alias("ts_bucket")
-    )

@@ -5,7 +5,7 @@ timestamp, the final file silently wins (fn_templ_priority,
 reference interface.py:289-296,344-354; golden test
 tests/tests_era5/test_era5_reshuffle.py:61-74 — the 99-valued duplicate
 must not leak). Graft: duplicate (conv_id, turn_idx) rows resolved by
-(is_prelim asc, ingest_ts desc).
+(is_prelim asc, ingest_ts desc, payload hash).
 
 Spark-first: a single window dedup — Catalyst plans it as one shuffle on
 the partition keys which is then REUSED by the reshuffle's range partition
@@ -27,15 +27,17 @@ def latest_final_wins(
     prelim_col: str = "is_prelim",
     ingest_col: str = "ingest_ts",
 ) -> DataFrame:
-    """Keep exactly one row per key: non-preliminary preferred, then the
-    latest ingested. Deterministic for any input order."""
+    """Keep exactly one row per key, ranked as reshuffle() ranks: final
+    (a NULL prelim flag counts as final) before preliminary, then the
+    latest ingest (a NULL ingest time falls back to `ts`), then the
+    xxhash64 of the other columns. Deterministic for any input order."""
     order = []
     if prelim_col in df.columns:
-        order.append(F.col(prelim_col).asc())
+        order.append(F.coalesce(F.col(prelim_col), F.lit(False)).asc())
     if ingest_col in df.columns:
-        order.append(F.col(ingest_col).desc())
-    if not order:  # stable fallback: hash of all columns
-        order.append(F.xxhash64(*df.columns).asc())
+        order.append(F.coalesce(F.col(ingest_col), F.col("ts")).desc())
+    payload = [c for c in df.columns if c not in (*keys, prelim_col, ingest_col)]
+    order.append(F.xxhash64(*payload))
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))

@@ -62,7 +62,6 @@ def derive_metrics(df: DataFrame) -> DataFrame:
 def reshuffle(
     bronze: DataFrame,
     n_cells: int = DEFAULT_N_CELLS,
-    bucket_hours: int = 6,
     num_partitions: int | None = None,
     salt_segment_hours: int | None = None,
 ) -> DataFrame:
@@ -148,7 +147,7 @@ def reshuffle(
     flat = winner_first.groupBy(
         "cell_id", "conv_id", *salt, "turn_idx"
     ).agg(*[F.first(c).alias(c) for c in payload])
-    out = with_ts_bucket(derive_metrics(flat), hours=bucket_hours)
+    out = with_ts_bucket(derive_metrics(flat))
     out = out.select(*[c for c in SILVER_COLS if c in out.columns])
     return out.sortWithinPartitions("cell_id", "conv_id", "ts", "turn_idx")
 
@@ -171,6 +170,3 @@ def write_silver(
         attrs if attrs is not None else attrs_for(silver.columns),
     )
 
-
-def read_silver(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -19,6 +19,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import similarity as SIM
 from ..functions import text as TXT
+from ..operators import bucket as BKT
+from ..operators import dedup as DD
+from ..operators import gapfill as GF
+from ..operators import masking as M
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -141,11 +145,8 @@ def q_bucket_6h(spark, sf_dir):
     """A2: assignment to the regular 6-hourly grid
     (operators/bucket.py bucket_col) — global per-bucket counts."""
     ev = _t(spark, sf_dir, "events")
-    b = F.timestamp_seconds(
-        F.floor(F.unix_timestamp("ts") / 21600).cast("long") * 21600
-    )
     return (
-        ev.groupBy(b.alias("bucket"))
+        ev.groupBy(BKT.bucket_col("ts", 6).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n_events"), R6(DSUM("value")).alias("value_sum"))
         .select(_fmt("bucket").alias("bucket_ts"), "n_events", "value_sum")
     )
@@ -163,22 +164,18 @@ FROM events GROUP BY 1
 # ----------------------------------------------------------- dedup / sel
 
 def q_dedup_latest_wins(spark, sf_dir):
-    """S4/P7/I4: latest-writer-wins dedup per (user_id, event_type, day)
-    (operators/dedup.py latest_final_wins)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy(
-        "user_id", "event_type", F.date_trunc("day", "ts")
-    ).orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select(
-            "user_id",
-            "event_type",
-            _fmt(F.date_trunc("day", "ts")).alias("day_ts"),
-            "event_id",
-            "value",
-        )
+    """S4/J4/I4: latest-writer-wins dedup per (user_id, event_type, day)
+    through operators/dedup.py latest_final_wins, with ts as the ingest
+    time. No ts repeats within a key in the testdata, so the operator's
+    payload-hash tiebreak never decides and the oracle's event_id DESC
+    tiebreak is vacuous."""
+    ev = _t(spark, sf_dir, "events").withColumn(
+        "day", F.date_trunc("day", "ts")
+    )
+    return DD.latest_final_wins(
+        ev, keys=("user_id", "event_type", "day"), ingest_col="ts"
+    ).select(
+        "user_id", "event_type", _fmt("day").alias("day_ts"), "event_id", "value"
     )
 
 
@@ -196,11 +193,13 @@ FROM (
 
 
 def q_h_steps_selection(spark, sf_dir):
-    """A2 selection grid: keep only hours (0,6,12,18)
-    (operators/bucket.py filter_h_steps semantics at hour grain)."""
-    ev = _t(spark, sf_dir, "events")
+    """A2 selection grid: bin each event to the hourly image grid
+    (operators/bucket.py with_ts_bucket), then keep the images at hours
+    (0,6,12,18) with filter_h_steps (which needs minute = second = 0, so
+    it selects on the binned ts, not the raw one)."""
+    ev = BKT.with_ts_bucket(_t(spark, sf_dir, "events"), hours=1, out="hour_ts")
     return (
-        ev.where(F.hour("ts").isin(0, 6, 12, 18))
+        BKT.filter_h_steps(ev, ts_col="hour_ts")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -216,26 +215,19 @@ FROM events WHERE hour(ts) IN (0, 6, 12, 18) GROUP BY 1
 
 
 def q_gapfill_missing_buckets(spark, sf_dir):
-    """J3 gap-fill: generated hourly timeline per user LEFT JOIN observed
-    buckets; count the holes (operators/gapfill.py gap_fill)."""
-    ev = _t(spark, sf_dir, "events")
-    per_bucket = ev.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    spans = per_bucket.groupBy("user_id").agg(
-        F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
+    """J3 gap-fill: each user's hourly series made dense by
+    operators/gapfill.py gap_fill (generated per-user timeline LEFT JOIN
+    observed buckets); count the holes (n_turns == 0)."""
+    ev = _t(spark, sf_dir, "events").select(
+        F.col("user_id").alias("conv_id"),
+        BKT.bucket_col("ts", 1).alias("ts_bucket"),
     )
-    grid = spans.select(
-        "user_id",
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-        ).alias("bucket"),
-    )
-    filled = grid.join(per_bucket, ["user_id", "bucket"], "left")
-    return filled.groupBy("user_id").agg(
+    filled = GF.gap_fill(ev, value_cols=(), hours=1)
+    present = F.col("n_turns") > 0
+    return filled.groupBy(F.col("conv_id").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_buckets"),
-        F.count("n").alias("n_present"),
-        (F.count(F.lit(1)) - F.count("n")).alias("n_missing"),
+        F.count(F.when(present, 1)).alias("n_present"),
+        F.count(F.when(~present, 1)).alias("n_missing"),
     )
 
 
@@ -257,8 +249,10 @@ FROM spans
 
 
 def q_point_read(spark, sf_dir):
-    """S10 point query: one conversation's (= user's) full series,
-    pruned by key (operators/pointread.py)."""
+    """S10 point query shape: one conversation's (= user's) full series
+    by a key-pruned scan of the events. It does not run
+    operators/pointread.py TsReader.read; clibench's DuckDB read check
+    and tests/test_pointread.py grade that."""
     ev = _t(spark, sf_dir, "events")
     return ev.where(F.col("user_id") == 42).select(
         "event_id", _fmt("ts").alias("ts_s"), "event_type", "value"
@@ -276,9 +270,9 @@ def q_semijoin_active(spark, sf_dir):
     one signup (broadcast left-semi join, operators/masking.py
     subgrid_gather)."""
     ev = _t(spark, sf_dir, "events")
-    active = ev.where(F.col("event_type") == "signup").select("user_id")
+    signups = ev.where(F.col("event_type") == "signup")
     return (
-        ev.join(F.broadcast(active.distinct()), "user_id", "left_semi")
+        M.subgrid_gather(ev, signups, key="user_id")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
@@ -349,10 +343,8 @@ def q_version_coalesce(spark, sf_dir):
         _favg("purchase").alias("purchase_avg"),
         _favg("view").alias("view_avg"),
     )
-    return g.select(
-        "user_id",
-        _fmt("day").alias("day_ts"),
-        F.coalesce("purchase_avg", "view_avg").alias("metric"),
+    return M.coalesce_versions(g, "purchase_avg", "view_avg", "metric").select(
+        "user_id", _fmt("day").alias("day_ts"), "metric"
     )
 
 
@@ -367,32 +359,6 @@ SELECT user_id,
            AS metric
 FROM events GROUP BY 1, 2
 """.format(dec=_dec("value"))
-
-
-def q_cell_assignment(spark, sf_dir):
-    """Grid cell routing (grid.py cell_of) in a hash portable to the
-    oracle: cell = md5-derived bigint mod 64. Counts per cell prove the
-    partitioning is uniform and deterministic."""
-    ev = _t(spark, sf_dir, "events")
-    cell = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(64),
-    ).cast("int")
-    return (
-        ev.select(cell.alias("cell_id"))
-        .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-ORACLE_CELL = """
-SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 64
-            AS INTEGER) AS cell_id,
-       count(*) AS n_rows
-FROM events GROUP BY 1
-"""
 
 
 def q_sortedness_check(spark, sf_dir):
@@ -487,19 +453,12 @@ GROUP BY 1
 # ------------------------------------------------------------- text ops
 
 def q_exact_dedup_docs(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.withColumn("text_hash", F.md5("text"))
-        .groupBy("text_hash")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
+    """Exact dedup through functions/text.py exact_dedup (sha2-256)."""
+    return TXT.exact_dedup(_t(spark, sf_dir, "documents"))
 
 
 ORACLE_EXACT_DEDUP = """
-SELECT md5(text) AS text_hash, min(doc_id) AS keep_doc_id,
+SELECT sha256(text) AS text_hash, min(doc_id) AS keep_doc_id,
        count(*) AS n_copies
 FROM documents GROUP BY 1
 """
@@ -2292,7 +2251,6 @@ QUERIES = {
     "semijoin_active": q_semijoin_active,
     "minmax_bounds": q_minmax_bounds,
     "version_coalesce": q_version_coalesce,
-    "cell_assignment": q_cell_assignment,
     "sortedness_check": q_sortedness_check,
     "tpch_q1": q_tpch_q1,
     "revenue_by_nation": q_revenue_by_nation,
@@ -2346,7 +2304,6 @@ ORACLES = {
     "semijoin_active": ORACLE_SEMIJOIN,
     "minmax_bounds": ORACLE_MINMAX,
     "version_coalesce": ORACLE_COALESCE,
-    "cell_assignment": ORACLE_CELL,
     "sortedness_check": ORACLE_SORTED,
     "tpch_q1": ORACLE_TPCH_Q1,
     "revenue_by_nation": ORACLE_REVENUE,

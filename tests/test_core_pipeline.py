@@ -5,16 +5,14 @@ Models the reference's golden reshuffle round-trip
 small fixture, assert exact point values, sortedness, and prelim exclusion.
 """
 
+import datetime as dt
+
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ecmwf_models_spark.operators.dedup import latest_final_wins
+from ecmwf_models_spark.operators.dedup import drop_prelim, latest_final_wins
 from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
-from ecmwf_models_spark.operators.reshuffle import (
-    read_silver,
-    reshuffle,
-    write_silver,
-)
+from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 
 
 def test_dedup_drops_sentinel(bronze):
@@ -30,6 +28,36 @@ def test_dedup_drops_sentinel(bronze):
         out.select("conv_id", "turn_idx").distinct().count()
         == bronze.select("conv_id", "turn_idx").distinct().count()
     )
+    # P7 ingest-time policy: every turn has a final row, so dropping the
+    # preliminary rows leaves one row per turn and no sentinel
+    finals = drop_prelim(bronze)
+    assert finals.where("is_prelim OR text = 'PRELIM-99'").count() == 0
+    assert finals.count() == out.count()
+
+
+def test_latest_final_wins_ranks_as_reshuffle(spark):
+    """The window dedup keeps the row the reshuffle keeps: a NULL
+    ingest_ts ranks by its ts, and a NULL is_prelim counts as final."""
+    t0, t1 = dt.datetime(2024, 1, 1, 0), dt.datetime(2024, 1, 1, 6)
+    df = spark.createDataFrame(
+        [
+            # a final ingested at t0 against a final at t1 with no ingest_ts
+            ("c1", 0, "user", "ingested-t0", None, t0, False, t0),
+            ("c1", 0, "user", "null-ingest-t1", None, t1, False, None),
+            # a NULL-prelim row against a final ingested later
+            ("c2", 0, "user", "null-prelim", None, t0, None, t0),
+            ("c2", 0, "user", "final-later", None, t0, False, t1),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string,"
+        " ts timestamp, is_prelim boolean, ingest_ts timestamp",
+    )
+
+    def survivors(frame):
+        return {tuple(r) for r in frame.select("conv_id", "text").collect()}
+
+    kept = survivors(latest_final_wins(df))
+    assert kept == survivors(reshuffle(df, n_cells=4))
+    assert kept == {("c1", "null-ingest-t1"), ("c2", "final-later")}
 
 
 def test_reshuffle_roundtrip(tmp_path, spark, bronze):
@@ -37,7 +65,7 @@ def test_reshuffle_roundtrip(tmp_path, spark, bronze):
     silver = reshuffle(bronze, n_cells=16, num_partitions=8)
     write_silver(silver, path)
 
-    back = read_silver(spark, path)
+    back = spark.read.parquet(path)
     base = latest_final_wins(bronze)
     assert back.count() == base.count()
 

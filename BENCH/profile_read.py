@@ -17,8 +17,11 @@ resolve them), per call; each figure is the median of --reps loops. py4j
 round trips are counted by wrapping the gateway client's send_command:
 the calls each step makes, averaged over the convs, and the deletes of
 garbage-collected Java object proxies that py4j's finalizer thread sends
-while the read loop runs, per read. Spark's REST UI is not used. Prints
-one JSON object.
+while the read loop runs, per read. Bytes fetched per read are the bytes
+the reads' file inputs fetched (lineage._RangedInput.fetched: on a local
+silver, whole .crc chunks read by os.pread; through Hadoop, the bytes
+py4j moved), counted in the untimed loop. Spark's REST UI is not used.
+Prints one JSON object.
 
 Usage: python BENCH/profile_read.py [--reads 200] [--reps 5] [--cpus 4]
 """
@@ -38,6 +41,7 @@ from py4j import protocol as proto
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ecmwf_models_spark import lineage  # noqa: E402
 from ecmwf_models_spark.lineage import write_run_settings  # noqa: E402
 from ecmwf_models_spark.operators.pointread import (  # noqa: E402
     _TZ_KEY,
@@ -100,6 +104,29 @@ class Py4jCounter:
         client.send_command = counted
 
 
+class FetchCounter:
+    """Sums the bytes fetched by the file inputs the readers close
+    (lineage._RangedInput.fetched), while installed."""
+
+    def __init__(self):
+        self.bytes = 0
+        self._close = lineage._RangedInput.close
+
+    def __enter__(self):
+        close = self._close
+
+        def counted(src):
+            if not src.closed:
+                self.bytes += src.fetched
+            close(src)
+
+        lineage._RangedInput.close = counted
+        return self
+
+    def __exit__(self, *exc):
+        lineage._RangedInput.close = self._close
+
+
 def main(argv=None) -> dict:
     p = argparse.ArgumentParser()
     p.add_argument("--reads", type=int, default=200)
@@ -133,10 +160,12 @@ def main(argv=None) -> dict:
         calls: dict[str, float] = {}
         for name, fn in steps(spark, reader):
             counter.calls = counter.deletes = 0
-            for a in inputs:
-                fn(*a[name])
+            with FetchCounter() as fetch:
+                for a in inputs:
+                    fn(*a[name])
             calls[name] = counter.calls / len(inputs)
         deletes = counter.deletes / len(inputs)  # of the read step
+        fetched = fetch.bytes / len(inputs)  # of the read step
         for _ in range(args.reps):
             for name, fn in steps(spark, reader):
                 c0 = cpu_s()
@@ -154,6 +183,8 @@ def main(argv=None) -> dict:
         "reads": args.reads,
         "reps": args.reps,
         "rows_per_read": rows,
+        "source": type(reader._src).__name__,
+        "bytes_fetched_per_read": round(fetched),
         "cpu_ms": {k: round(statistics.median(v), 3) for k, v in cpu_ms.items()},
         "py4j_calls": {k: round(v, 2) for k, v in calls.items()},
         "py4j_deletes_per_read": round(deletes, 2),

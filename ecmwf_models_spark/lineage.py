@@ -35,9 +35,25 @@ file on the driver, skipping `_`/`.` names as Spark does, so neither a
 commit nor a lookup launches a Spark job, and `spark.read.parquet` still
 reads the table for an audit. Point reads (operators/pointread.py) and
 `table_schema` read silver files on the driver the same way
-(`parquet_file`), fetching only the byte ranges pyarrow asks for. The rename is atomic on local FS and HDFS.
-On S3 it is a copy then a delete, not atomic: a commit there rests on the
-store showing a whole object or none.
+(`parquet_file`), fetching only the byte ranges pyarrow asks for. The
+rename is atomic on local FS and HDFS. On S3 it is a copy then a delete,
+not atomic: a commit there rests on the store showing a whole object or
+none.
+
+Those driver reads go through one of two byte sources, chosen once per
+table by `_source` from the scheme of the FileSystem Spark resolves the
+path with. On a local FileSystem (`file`) the driver lists directories
+with os.scandir and reads the ranges with os.pread, with no py4j round
+trip, and checks them as Hadoop's ChecksumFileSystem does: each range is
+widened to the chunks of the `.<name>.crc` file beside it (the magic
+`crc\0`, the big-endian bytesPerChecksum, then one CRC32 per chunk), a
+mismatch raises ChecksumError, and a file with no .crc is read unchecked.
+On any other store (HDFS, S3A, ...) it lists and reads through the Hadoop
+FileSystem over py4j, the only client that reaches those stores. Writes
+stay on Hadoop whatever the store (`_commit_file` and Spark's writers),
+so that the local FileSystem writes the .crc files the reads check, and
+every path handed back to Spark or Hadoop (`cell_paths`, `data_files`,
+the tier writer's deletes) comes from a Hadoop listing, Hadoop-qualified.
 
 Checksums are order-insensitive (bit_xor of xxhash64 over rows) so they are
 stable under any task placement/parallelism.
@@ -51,8 +67,11 @@ import functools
 import hashlib
 import io
 import json
+import os
+import struct
 import time
 import uuid
+import zlib
 from typing import Any, NamedTuple
 
 import pyarrow as pa
@@ -102,67 +121,165 @@ def _hidden(name: str) -> bool:
 
 
 class PartFile(NamedTuple):
-    """A data file part_files listed: its Hadoop Path, name and size."""
+    """A data file part_files listed: its path (a Hadoop Path, or a path
+    string on the local source), name and size."""
 
     path: Any
     name: str
     size: int
 
 
+def _array_items(array) -> list:
+    """The elements of a py4j JavaArray: one length command, then one get
+    per element, sent as raw commands. Iterating the JavaArray asks for
+    its length again before every get."""
+    client, target = array._gateway_client, array._target_id
+
+    def send(sub: str, *args) -> Any:
+        command = (
+            proto.ARRAY_COMMAND_NAME
+            + sub
+            + target
+            + "\n"
+            + "".join(proto.get_command_part(a) for a in args)
+            + proto.END_COMMAND_PART
+        )
+        return proto.get_return_value(client.send_command(command), client)
+
+    n = send(proto.ARRAY_LEN_SUB_COMMAND_NAME)
+    return [send(proto.ARRAY_GET_SUB_COMMAND_NAME, i) for i in range(n)]
+
+
 def _list_status(fs, d) -> list:
-    """fs.listStatus(d); [] when `d` does not exist (the FileSystem
-    contract's FileNotFoundException), without a separate exists call."""
+    """fs.listStatus(d) as a list; [] when `d` does not exist (the
+    FileSystem contract's FileNotFoundException), without a separate
+    exists call."""
     try:
-        return fs.listStatus(d)
+        statuses = fs.listStatus(d)
     except Py4JJavaError as e:
         missing = "java.io.FileNotFoundException"
         if is_instance_of(SparkContext._gateway, e.java_exception, missing):
             return []
         raise
+    return _array_items(statuses)
 
 
-def part_files(fs, d) -> list[PartFile]:
-    """Each data file under the Hadoop directory `d`, as Spark's file
-    index finds them: subdirectories (ds=<date>) included, hidden names
-    skipped; [] when `d` does not exist."""
+class _HadoopSource:
+    """Lists and reads through a Hadoop FileSystem, each listing call and
+    each fetch a py4j round trip: the source of every store but the local
+    one (HDFS, S3A, ...)."""
+
+    def __init__(self, fs, path_class):
+        self.fs, self._path = fs, path_class
+
+    def child(self, d, name: str):
+        return self._path(d, name)
+
+    def entries(self, d):
+        """(name, path, status) of each entry of the directory `d`."""
+        for st in _list_status(self.fs, d):
+            path = st.getPath()
+            yield path.getName(), path, st
+
+    def is_dir(self, st) -> bool:
+        return st.isDirectory()
+
+    def size(self, st) -> int:
+        return st.getLen()
+
+    def open(self, f: PartFile) -> io.RawIOBase:
+        return _HadoopInput(self.fs.open(f.path), f.size)
+
+
+class _LocalSource:
+    """Lists and reads a local directory tree on the driver itself
+    (os.scandir, os.pread), without py4j: the source when the silver's
+    FileSystem is the local one. Reads are checked against Hadoop's .crc
+    files (_LocalInput)."""
+
+    child = staticmethod(os.path.join)
+
+    def entries(self, d: str) -> list:
+        """(name, path, entry) of each entry of the directory `d`."""
+        try:
+            with os.scandir(d) as it:
+                return [(e.name, e.path, e) for e in it]
+        except FileNotFoundError:
+            return []
+
+    def is_dir(self, e: os.DirEntry) -> bool:
+        return e.is_dir()
+
+    def size(self, e: os.DirEntry) -> int:
+        return e.stat().st_size
+
+    def open(self, f: PartFile) -> io.RawIOBase:
+        return _LocalInput(os.open(f.path, os.O_RDONLY), f.path, f.size)
+
+
+def _hadoop_source(spark: SparkSession, path: str):
+    """(the Hadoop source, Path) of `path`: for listings whose paths go
+    back to Spark or Hadoop, which need them Hadoop-qualified."""
+    fs, p = _fs_path(spark, path)
+    return _HadoopSource(fs, _path_class(spark._jvm)), p
+
+
+def _local_path(fs, p) -> str | None:
+    """The local path of the Hadoop Path `p` when `fs` is the local
+    FileSystem (scheme file), else None."""
+    if fs.getUri().getScheme() != "file":
+        return None
+    return fs.makeQualified(p).toUri().getPath()
+
+
+def _source(spark: SparkSession, path: str):
+    """(source, root) the driver lists and reads the table at `path`
+    through: the local source on a local FileSystem, else the Hadoop
+    one. The one place the choice is made."""
+    src, p = _hadoop_source(spark, path)
+    local = _local_path(src.fs, p)
+    return (src, p) if local is None else (_LocalSource(), local)
+
+
+def part_files(src, d) -> list[PartFile]:
+    """Each data file under the directory `d` of the source `src`, as
+    Spark's file index finds them: subdirectories (ds=<date>) included,
+    hidden names skipped; [] when `d` does not exist."""
     found, todo = [], [d]
     while todo:
-        for st in _list_status(fs, todo.pop()):
-            path = st.getPath()
-            name = path.getName()
+        for name, path, st in src.entries(todo.pop()):
             if _hidden(name):
                 continue
-            if st.isDirectory():
+            if src.is_dir(st):
                 todo.append(path)
             else:
-                found.append(PartFile(path, name, st.getLen()))
+                found.append(PartFile(path, name, src.size(st)))
     return found
 
 
-def cell_dirs(fs, root) -> dict:
-    """cell_id -> Hadoop Path of each cell_id=<c> directory under `root`;
-    {} when `root` does not exist."""
+def cell_dirs(src, root) -> dict:
+    """cell_id -> path of each cell_id=<c> directory under `root` of the
+    source `src`; {} when `root` does not exist."""
     found = {}
-    for st in _list_status(fs, root):
-        path = st.getPath()
-        key, _, cell = path.getName().partition("=")
-        if key == "cell_id" and st.isDirectory():
+    for name, path, st in src.entries(root):
+        key, _, cell = name.partition("=")
+        if key == "cell_id" and src.is_dir(st):
             found[int(cell)] = path
     return found
 
 
 def cell_paths(spark: SparkSession, path: str) -> dict[int, str]:
-    """cell_id -> path string of each cell_id=<c> directory of the
+    """cell_id -> Hadoop path string of each cell_id=<c> directory of the
     cell-partitioned table at `path`, listed on the driver."""
-    fs, root = _fs_path(spark, path)
-    return {c: p.toString() for c, p in cell_dirs(fs, root).items()}
+    src, root = _hadoop_source(spark, path)
+    return {c: p.toString() for c, p in cell_dirs(src, root).items()}
 
 
 def data_files(spark: SparkSession, path: str) -> list[str]:
     """The part_files under `path`, spelled as DataFrame.inputFiles()
     spells them: Path.toUri()."""
-    fs, root = _fs_path(spark, path)
-    return sorted(f.path.toUri().toString() for f in part_files(fs, root))
+    src, root = _hadoop_source(spark, path)
+    return sorted(f.path.toUri().toString() for f in part_files(src, root))
 
 
 def read_listed(
@@ -196,6 +313,47 @@ def read_cells(
     return read_listed(spark, table_schema(spark, path), paths, path)
 
 
+class _RangedInput(io.RawIOBase):
+    """A seekable read-only file for pyarrow that fetches only the byte
+    ranges it is asked for: a read that misses the block fetched last is
+    one fetch (a subclass's `_fetch`). pyarrow reads a parquet footer as
+    one tail block (the whole file, when it is small), so the column
+    chunks of a small file come from that block. `fetched` counts the
+    bytes fetched."""
+
+    def __init__(self, size: int):
+        self._size, self._pos = size, 0
+        self._at, self._block = 0, b""
+        self.fetched = 0
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
+        base = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos, io.SEEK_END: self._size}
+        self._pos = base[whence] + offset
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        end = self._size if n < 0 else min(self._pos + n, self._size)
+        if not self._at <= self._pos <= end <= self._at + len(self._block):
+            self._at, self._block = self._fetch(self._pos, end)
+            self.fetched += len(self._block)
+        out = self._block[self._pos - self._at : end - self._at]
+        self._pos = end
+        return out
+
+    def _fetch(self, start: int, end: int) -> tuple[int, bytes]:
+        """(at, block): bytes from `at` that cover [start, end)."""
+        raise NotImplementedError
+
+
 # bytes per py4j call: the JVM flushes a reply in 8 KiB writes on a
 # socket with Nagle's algorithm on, so a longer reply (base64, 4/3 of the
 # bytes) waits out the receiver's delayed ACK, ~40 ms
@@ -219,51 +377,25 @@ def _read_n_bytes(stream, n: int) -> bytes:
     return proto.get_return_value(answer, client, stream._target_id, "readNBytes")
 
 
-class _HadoopInput(io.RawIOBase):
-    """A seekable read-only file over a Hadoop input stream, for pyarrow.
-    Each read that misses the block fetched last is one positioned fetch
-    of just the bytes asked for (a seek unless the stream is there, then
-    readNBytes through py4j in _PY4J_CHUNK pieces). pyarrow reads a
-    parquet footer as one tail block (the whole file, when it is small),
-    so the column chunks of a small file come from that block. `fetched`
-    counts the bytes fetched."""
+class _HadoopInput(_RangedInput):
+    """A file over a Hadoop input stream: a fetch is a seek (unless the
+    stream is there), then readNBytes through py4j in _PY4J_CHUNK pieces.
+    The FileSystem checks what it reads (ChecksumFileSystem's .crc)."""
 
     def __init__(self, stream, size: int):
-        self._in, self._size, self._pos = stream, size, 0
-        self._at, self._block = 0, b""
+        super().__init__(size)
         # where the stream is: a fetch from there needs no seek
-        self._in_pos = 0
-        self.fetched = 0
+        self._in, self._in_pos = stream, 0
 
-    def readable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return True
-
-    def tell(self) -> int:
-        return self._pos
-
-    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
-        base = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos, io.SEEK_END: self._size}
-        self._pos = base[whence] + offset
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        end = self._size if n < 0 else min(self._pos + n, self._size)
-        if not self._at <= self._pos <= end <= self._at + len(self._block):
-            if self._in_pos != self._pos:
-                self._in.seek(self._pos)
-            parts = []
-            for at in range(self._pos, end, _PY4J_CHUNK):
-                parts.append(_read_n_bytes(self._in, min(_PY4J_CHUNK, end - at)))
-            self._block = b"".join(parts)
-            self._at = self._pos
-            self._in_pos = self._pos + len(self._block)
-            self.fetched += len(self._block)
-        out = self._block[self._pos - self._at : end - self._at]
-        self._pos = end
-        return out
+    def _fetch(self, start: int, end: int) -> tuple[int, bytes]:
+        if self._in_pos != start:
+            self._in.seek(start)
+        block = b"".join(
+            _read_n_bytes(self._in, min(_PY4J_CHUNK, end - at))
+            for at in range(start, end, _PY4J_CHUNK)
+        )
+        self._in_pos = start + len(block)
+        return start, block
 
     def close(self) -> None:
         if not self.closed:
@@ -271,16 +403,87 @@ class _HadoopInput(io.RawIOBase):
         super().close()
 
 
+# Hadoop's checksum file .<name>.crc: the magic, the big-endian int
+# bytesPerChecksum, then the big-endian CRC32 of each chunk of the file
+_CRC_MAGIC = b"crc\0"
+_CRC_HEADER = struct.Struct(">4si")
+_CRC32 = struct.Struct(">I")
+
+
+class ChecksumError(OSError):
+    """A local file's bytes differ from the checksums of its .crc file."""
+
+
+class _LocalInput(_RangedInput):
+    """A local file, fetched by os.pread and checked as Hadoop's
+    ChecksumFileSystem checks it: each fetch is widened to the whole
+    chunks its `.<name>.crc` covers, and a chunk whose CRC32 is not the
+    stored one (or that the .crc does not cover) raises ChecksumError.
+    A file with no .crc, or one whose .crc lacks the magic, is read
+    unchecked, as Hadoop reads it."""
+
+    def __init__(self, fd: int, path: str, size: int):
+        super().__init__(size)
+        self._fd, self._path = fd, path
+        # unchecked: no .crc, fetches not widened
+        self._crc, self._chunk = None, 1
+        d, name = os.path.split(path)
+        try:
+            crc = os.open(os.path.join(d, f".{name}.crc"), os.O_RDONLY)
+        except FileNotFoundError:
+            return
+        header = os.pread(crc, _CRC_HEADER.size, 0)
+        magic, chunk = (
+            _CRC_HEADER.unpack(header)
+            if len(header) == _CRC_HEADER.size
+            else (b"", 0)
+        )
+        if magic == _CRC_MAGIC and chunk > 0:
+            self._crc, self._chunk = crc, chunk
+        else:
+            os.close(crc)
+
+    def _fetch(self, start: int, end: int) -> tuple[int, bytes]:
+        chunk = self._chunk
+        at = start - start % chunk
+        block = os.pread(self._fd, min(end - end % -chunk, self._size) - at, at)
+        if self._crc is not None:
+            self._check(at, block)
+        return at, block
+
+    def _check(self, at: int, block: bytes) -> None:
+        """Raise ChecksumError unless each chunk of `block`, which starts
+        at the chunk boundary `at`, has its stored CRC32."""
+        chunk = self._chunk
+        n = -(-len(block) // chunk)
+        sums = os.pread(self._crc, 4 * n, _CRC_HEADER.size + 4 * (at // chunk))
+        view = memoryview(block)
+        for i in range(n):
+            crc = zlib.crc32(view[i * chunk : (i + 1) * chunk])
+            if 4 * i + 4 > len(sums) or crc != _CRC32.unpack_from(sums, 4 * i)[0]:
+                raise ChecksumError(
+                    f"Checksum error: {self._path} at {at + i * chunk}"
+                )
+
+    def close(self) -> None:
+        if not self.closed:
+            os.close(self._fd)
+            if self._crc is not None:
+                os.close(self._crc)
+        super().close()
+
+
 @contextlib.contextmanager
-def parquet_file(fs, f: PartFile):
-    """pq.ParquetFile over the listed file `f`, fetched range by range:
-    the footer first, then only the column chunks a read asks for. INT96
-    timestamps (Spark's default) come back as microseconds."""
-    src = _HadoopInput(fs.open(f.path), f.size)
+def parquet_file(src, f: PartFile):
+    """pq.ParquetFile over the file `f` the source `src` listed, fetched
+    range by range: the footer first, then only the column chunks a read
+    asks for. INT96 timestamps (Spark's default) come back as
+    microseconds."""
+    data = src.open(f)
     try:
-        yield pq.ParquetFile(src, coerce_int96_timestamp_unit="us")
+        yield pq.ParquetFile(data, coerce_int96_timestamp_unit="us")
     finally:
-        src.close()
+        data.close()
 
 
 # the Spark schema a Spark write stores in every parquet footer
@@ -294,10 +497,10 @@ def table_schema(spark: SparkSession, path: str) -> T.StructType:
     files), then the int `cell_id` partition column. No Spark job, where
     schema inference is one (two above 32 cell directories). Raises
     FileNotFoundError when no cell directory holds a part file."""
-    fs, root = _fs_path(spark, path)
-    for d in cell_dirs(fs, root).values():
-        for f in part_files(fs, d):
-            with parquet_file(fs, f) as pf:
+    src, root = _source(spark, path)
+    for d in cell_dirs(src, root).values():
+        for f in part_files(src, d):
+            with parquet_file(src, f) as pf:
                 arrow = pf.schema_arrow
             stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
             data = (
@@ -338,10 +541,10 @@ def _committed_rows(spark: SparkSession, path: str, schema) -> list[dict]:
     """Every row of the table at `path`, read on the driver file by file;
     [] when the directory does not exist. Also reads directories Spark
     wrote (part files beside _SUCCESS and .crc files)."""
-    fs, d = _fs_path(spark, path)
+    src, d = _source(spark, path)
     tables = []
-    for f in part_files(fs, d):
-        with parquet_file(fs, f) as pf:
+    for f in part_files(src, d):
+        with parquet_file(src, f) as pf:
             tables.append(
                 pf.read(columns=schema.names).cast(to_arrow_schema(schema))
             )
@@ -568,9 +771,9 @@ class ResumableTierWriter:
     def _cell_dirs(self, skip) -> list:
         """Hadoop Paths of the cell_id=* directories whose cell is not in
         `skip`."""
-        fs, out = _fs_path(self.spark, self.out_dir)
+        src, out = _hadoop_source(self.spark, self.out_dir)
         skip = set(skip)
-        return [p for c, p in cell_dirs(fs, out).items() if c not in skip]
+        return [p for c, p in cell_dirs(src, out).items() if c not in skip]
 
     def run(self, df: DataFrame, fail_after_cells: int | None = None) -> int:
         """Materialize pending cells; returns number of cells committed.

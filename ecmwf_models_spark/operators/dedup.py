@@ -48,5 +48,6 @@ def latest_final_wins(
 
 def drop_prelim(df: DataFrame, prelim_col: str = "is_prelim") -> DataFrame:
     """Ingest-time policy: drop preliminary rows outright
-    (reference extract.py:165-188, keep_prelim=False path)."""
-    return df.where(~F.col(prelim_col))
+    (reference extract.py:165-188, keep_prelim=False path). A NULL prelim
+    flag counts as final, as latest_final_wins ranks it."""
+    return df.where(~F.coalesce(F.col(prelim_col), F.lit(False)))

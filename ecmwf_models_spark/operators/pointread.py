@@ -8,14 +8,21 @@ read_bulk caches the whole cell file (interface.py:705-711).
 A driver read, as the reference opens one file locally — no Spark job:
   * routing (gpi2cell) is one py4j call of the same Catalyst XXH64 that
     `grid.cell_of` runs on the write path;
-  * <silver>/cell_id=<cell> is listed at every read, through the Hadoop
-    FileSystem Spark resolves the path with (resolved once per reader, as
-    is each cell's Path), so a reader opened before `extend_silver` sees
-    the extended cells; a cell with no directory holds no conv;
+  * <silver>/cell_id=<cell> is listed at every read, so a reader opened
+    before `extend_silver` sees the extended cells; a cell with no
+    directory holds no conv;
   * of each part file, the footer is fetched first, then only the row
     groups whose conv_id min/max can hold the conv: a cell file is sorted
     by conv_id, so that is the conv's row groups, not the cell; pyarrow
     filters them to the conv;
+  * listings and fetches go through the byte source `lineage._source`
+    picks when the reader opens. On a local silver the driver lists with
+    os.scandir and reads with os.pread, each range widened to the chunks
+    of the file's Hadoop `.crc` and checked against it (a mismatch raises
+    lineage.ChecksumError), so a read sends two py4j calls: the routing
+    and the session zone lookup. On any other store (HDFS, S3A, ...) it
+    lists and fetches through the Hadoop FileSystem over py4j. Writes of
+    the silver stay on Hadoop, which writes the .crc files;
   * the rows are ordered by (ts, turn_idx) in Arrow — a total order, since
     (conv_id, turn_idx) is unique in silver — then rescaled, their
     timestamps made naive in the session zone (read at every read), and
@@ -39,8 +46,7 @@ from pyspark.sql import SparkSession, types as T
 from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
 
 from ..lineage import (
-    _fs_path,
-    _path_class,
+    _source,
     generation,
     parquet_file,
     part_files,
@@ -187,8 +193,8 @@ class TsReader:
         self._file_schema = to_arrow_schema(
             T.StructType([self.schema[c] for c in file_cols])
         )
-        # resolved once: the FileSystem and each cell directory's Path
-        self._fs, _ = _fs_path(spark, silver_path)
+        # resolved once: the byte source and each cell directory's path
+        self._src, self._root = _source(spark, silver_path)
         self._dirs: dict[int, object] = {}
         # read_bulk: cell -> (generation, the cell's rows)
         self._cell_cache: dict[int, tuple[str, pa.Table]] = {}
@@ -198,17 +204,15 @@ class TsReader:
         has no directory yet."""
         d = self._dirs.get(cell)
         if d is None:
-            d = self._dirs[cell] = _path_class(self.spark._jvm)(
-                f"{self.silver_path}/cell_id={cell}"
-            )
-        return part_files(self._fs, d)
+            d = self._dirs[cell] = self._src.child(self._root, f"cell_id={cell}")
+        return part_files(self._src, d)
 
     def _fetch(self, files, conv_id: str | None) -> pa.Table:
         """The rows of `files` in the row groups that can hold `conv_id`
         (all of them for None), in the file columns."""
         tables = [self._file_schema.empty_table()]
         for f in files:
-            with parquet_file(self._fs, f) as pf:
+            with parquet_file(self._src, f) as pf:
                 rgs = (
                     range(pf.num_row_groups)
                     if conv_id is None

@@ -8,7 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ecmwf_models_spark import cli  # noqa: E402
+from ecmwf_models_spark import cli, lineage  # noqa: E402
 from ecmwf_models_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -52,6 +52,31 @@ def jobs_of(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def hadoop_source(monkeypatch):
+    """The driver lists and reads tables through the Hadoop FileSystem, as
+    on a store that is not local: lineage._source takes the Hadoop source
+    for every path."""
+    monkeypatch.setattr(lineage, "_local_path", lambda fs, p: None)
+
+
+@pytest.fixture()
+def py4j_commands(spark, monkeypatch):
+    """Every py4j command sent while the test runs, in order: a list of
+    command strings. Deletes of garbage-collected Java object proxies,
+    which py4j's finalizer thread sends whenever they come, start with
+    py4j.protocol.MEMORY_COMMAND_NAME."""
+    client = spark._jvm._gateway_client
+    sent, send = [], client.send_command
+
+    def record(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", record)
+    return sent
 
 
 @pytest.fixture()

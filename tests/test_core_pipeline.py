@@ -60,6 +60,25 @@ def test_latest_final_wins_ranks_as_reshuffle(spark):
     assert kept == {("c1", "null-ingest-t1"), ("c2", "final-later")}
 
 
+def test_drop_prelim_keeps_null_prelim_as_final(spark):
+    """drop_prelim drops only rows flagged preliminary: a turn whose
+    is_prelim is NULL is a final, as latest_final_wins keeps it."""
+    t0 = dt.datetime(2024, 1, 1, 0)
+    df = spark.createDataFrame(
+        [
+            ("c1", 0, "user", "null-prelim", None, t0, None, t0),
+            ("c1", 1, "user", "final", None, t0, False, t0),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string,"
+        " ts timestamp, is_prelim boolean, ingest_ts timestamp",
+    )
+
+    def turns(frame):
+        return sorted(r["turn_idx"] for r in frame.collect())
+
+    assert turns(drop_prelim(df)) == turns(latest_final_wins(df)) == [0, 1]
+
+
 def test_reshuffle_roundtrip(tmp_path, spark, bronze):
     path = str(tmp_path / "silver")
     silver = reshuffle(bronze, n_cells=16, num_partitions=8)

@@ -5,6 +5,7 @@ the graft's generalization of overview.yml-driven idempotent extension
 import glob
 
 import pytest
+from py4j import protocol as proto
 from pyspark.sql import functions as F
 
 from ecmwf_models_spark import lineage
@@ -215,6 +216,36 @@ def test_bookkeeping_reads_tables_spark_wrote(tmp_path, spark):
     assert read_run_settings(spark, st) == {"n_cells": "8", "salt": "6"}
     write_run_settings(spark, st, {"n_cells": 16})
     assert read_run_settings(spark, st) == {"n_cells": "16", "salt": "6"}
+
+
+def test_bookkeeping_reads_spark_tables_through_hadoop(
+    tmp_path, spark, hadoop_source
+):
+    """The same reads through the Hadoop FileSystem, the source of every
+    store that is not local."""
+    test_bookkeeping_reads_tables_spark_wrote(tmp_path, spark)
+
+
+def test_hadoop_listing_sends_one_length_command(
+    tmp_path, spark, py4j_commands
+):
+    """A listing through the Hadoop FileSystem reads its FileStatus[] with
+    one array-length command, then one get per entry: 1 + k array
+    commands for k entries, where iterating py4j's JavaArray sends a
+    length before every get and once more at the end."""
+    for k in (1, 3):
+        d = tmp_path / f"dir{k}"
+        d.mkdir()
+        for i in range(k):
+            (d / f"part-{i}.parquet").write_bytes(b"PAR1")
+        src, root = lineage._hadoop_source(spark, str(d))
+        py4j_commands.clear()
+        files = lineage.part_files(src, root)
+        assert sorted(f.name for f in files) == [
+            f"part-{i}.parquet" for i in range(k)
+        ]
+        arrays = [c for c in py4j_commands if c.startswith(proto.ARRAY_COMMAND_NAME)]
+        assert len(arrays) == 1 + k, arrays
 
 
 def test_spark_reads_driver_committed_lineage(tmp_path, spark, daily_with_cells):

@@ -85,6 +85,16 @@ def test_reshuffle_honours_num_partitions(bronze):
                      r"conv_id#\d+ ASC NULLS FIRST, 8\)", plan), plan
 
 
+def _row_group_span(meta, i: int) -> tuple[int, int]:
+    """[start, end) of the column chunks of row group `i` in its file."""
+    cols = [meta.row_group(i).column(j) for j in range(meta.num_columns)]
+    starts = [
+        c.dictionary_page_offset if c.has_dictionary_page else c.data_page_offset
+        for c in cols
+    ]
+    return min(starts), max(s + c.total_compressed_size for s, c in zip(starts, cols))
+
+
 def test_point_read_fetches_only_the_convs_row_groups(
     spark, tmp_path, monkeypatch
 ):
@@ -92,7 +102,10 @@ def test_point_read_fetches_only_the_convs_row_groups(
     its footer, then only the row groups whose conv_id min/max can hold
     the conv. On a silver written with many small row groups per cell
     file, each read equals the Spark query and fetches fewer row groups
-    and fewer bytes than the file holds."""
+    and fewer bytes than the file holds, on the local source and through
+    Hadoop. The local source widens each fetch to the 512-byte chunks of
+    the file's .crc (it checks them), and no further: every fetch lies in
+    the footer's tail read or in one of the row groups read."""
     path = str(tmp_path / "silver")
     bronze = gen_transcripts(spark, n_conv=400, days=4, turns_per_conv=12)
     (
@@ -101,18 +114,28 @@ def test_point_read_fetches_only_the_convs_row_groups(
         .partitionBy("cell_id")
         .parquet(path)
     )
-    files = {}  # cell -> (bytes, row groups) of its one file
+    files = {}  # cell -> (bytes, footer metadata) of its one file
     for f in glob.glob(f"{path}/cell_id=*/*.parquet"):
         cell = int(f.split("cell_id=")[1].split("/")[0])
-        files[cell] = (os.path.getsize(f), pq.ParquetFile(f).num_row_groups)
+        files[cell] = (os.path.getsize(f), pq.ParquetFile(f).metadata)
     # files larger than the footer's 64 KiB tail read
     assert len(files) == 2 and all(
-        b > 2**16 and n > 10 for b, n in files.values()
+        b > 2**16 and m.num_row_groups > 10 for b, m in files.values()
     ), files
 
-    fetched, groups = [], []
+    fetched, fetches, groups = [], [], []
 
-    class Counting(lineage._HadoopInput):
+    class LocalCounting(lineage._LocalInput):
+        def _fetch(self, start, end):
+            at, block = super()._fetch(start, end)
+            fetches.append((self._chunk, at, len(block)))
+            return at, block
+
+        def close(self):
+            fetched.append(self.fetched)
+            super().close()
+
+    class HadoopCounting(lineage._HadoopInput):
         def close(self):
             fetched.append(self.fetched)
             super().close()
@@ -121,24 +144,42 @@ def test_point_read_fetches_only_the_convs_row_groups(
         groups.append(select(meta, conv_id))
         return groups[-1]
 
-    monkeypatch.setattr(lineage, "_HadoopInput", Counting)
+    monkeypatch.setattr(lineage, "_LocalInput", LocalCounting)
+    monkeypatch.setattr(lineage, "_HadoopInput", HadoopCounting)
     monkeypatch.setattr(pointread, "conv_row_groups", counted)
-    r = TsReader(spark, path, n_cells=2)
+    want = {}
     for i in range(0, 400, 37):
         conv = f"conv-{i:06d}"
-        fetched.clear()
-        got = r.read(conv)
-        want = (
+        want[conv] = (
             spark.read.parquet(path)
             .where(F.col("conv_id") == conv)
             .orderBy("ts", "turn_idx")
             .toPandas()
             .set_index("ts")
         )
-        pd.testing.assert_frame_equal(got, want)
-        size, n_groups = files[cell_id_for(spark, conv, 2)]
-        assert len(fetched) == 1 and fetched[0] < size, (conv, fetched, size)
-        assert 0 < len(groups[-1]) < n_groups, (conv, groups[-1])
+    for through in ("local", "hadoop"):
+        if through == "hadoop":
+            monkeypatch.setattr(lineage, "_local_path", lambda fs, p: None)
+        r = TsReader(spark, path, n_cells=2)
+        for conv, frame in want.items():
+            fetched.clear()
+            fetches.clear()
+            pd.testing.assert_frame_equal(r.read(conv), frame)
+            size, meta = files[cell_id_for(spark, conv, 2)]
+            assert len(fetched) == 1 and fetched[0] < size, (conv, fetched, size)
+            assert 0 < len(groups[-1]) < meta.num_row_groups, (conv, groups[-1])
+            if through == "hadoop":
+                continue
+            tail = (size - max(2**16, meta.serialized_size + 8), size)
+            spans = [tail] + [_row_group_span(meta, g) for g in groups[-1]]
+            assert sum(n for _, _, n in fetches) == fetched[0]
+            for chunk, at, n in fetches:
+                assert chunk == 512 and at % chunk == 0, (conv, at, n)
+                assert (at + n) % chunk == 0 or at + n == size, (conv, at, n)
+                assert any(
+                    lo - lo % chunk <= at and at + n <= hi - hi % -chunk
+                    for lo, hi in spans
+                ), (conv, at, n, spans)
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):

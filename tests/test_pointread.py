@@ -11,6 +11,7 @@ read_bulk's cached cells.
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 import shutil
 import uuid
@@ -18,12 +19,15 @@ from decimal import Decimal
 
 import pandas as pd
 import pytest
+from py4j import protocol as proto
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from ecmwf_models_spark import lineage
 from ecmwf_models_spark.grid import with_cell_id
 from ecmwf_models_spark.incremental import extend_silver
 from ecmwf_models_spark.lineage import read_table_attrs, write_run_settings
-from ecmwf_models_spark.operators.pointread import TsReader, cell_id_for
+from ecmwf_models_spark.operators.pointread import _TZ_KEY, TsReader, cell_id_for
 from ecmwf_models_spark.operators.reshuffle import reshuffle, write_silver
 from ecmwf_models_spark.synth import gen_transcripts
 
@@ -99,6 +103,72 @@ def test_read_matches_spark_query(spark, silver16, read_bulk, opts):
                 assert len(got) > 0
     finally:
         r.close()
+
+
+@pytest.mark.parametrize("read_bulk", [False, True])
+@pytest.mark.parametrize("opts", [{}, RESCALED], ids=["all", "rescaled"])
+def test_read_matches_spark_query_through_hadoop(
+    spark, silver16, read_bulk, opts, hadoop_source
+):
+    """The Hadoop source, which every store but the local one reads
+    through, returns the same frames."""
+    assert isinstance(lineage._source(spark, silver16)[0], lineage._HadoopSource)
+    test_read_matches_spark_query(spark, silver16, read_bulk, opts)
+
+
+def test_local_silver_reads_without_hadoop(spark, silver16, py4j_commands):
+    """On a local silver the driver lists and reads the cell's files
+    itself: a read sends two py4j commands, the route call and the
+    session zone lookup, whatever deletes of collected proxies py4j
+    sends beside them."""
+    assert isinstance(lineage._source(spark, silver16)[0], lineage._LocalSource)
+    r = TsReader(spark, silver16)
+    # the first routing in a JVM resolves the hasher's classes
+    cell_id_for(spark, CONVS[0], 16)
+    for conv in CONVS:
+        py4j_commands.clear()
+        r.read(conv)
+        calls = [
+            c for c in py4j_commands if not c.startswith(proto.MEMORY_COMMAND_NAME)
+        ]
+        assert len(calls) == 2, calls
+        assert "\nhashUnsafeBytes\n" in calls[0] and _TZ_KEY in calls[1], calls
+
+
+@pytest.mark.parametrize("through", ["local", "hadoop"])
+def test_read_checks_part_files_against_crc(
+    request, spark, silver16, tmp_path, through
+):
+    """A part file whose bytes no longer match its Hadoop .crc fails the
+    read of a conv in its cell (each of the cell's footers is read), on
+    the local source as through Hadoop's ChecksumFileSystem; part files
+    with no .crc are read unchecked, as Hadoop reads them."""
+    if through == "hadoop":
+        request.getfixturevalue("hadoop_source")
+    path = str(tmp_path / "silver")
+    shutil.copytree(silver16, path)
+    conv = CONVS[0]
+    bad = cell_id_for(spark, conv, 16)
+    other = next(
+        c for c in (f"conv-{i:06d}" for i in range(50))
+        if cell_id_for(spark, c, 16) != bad
+    )
+    part = glob.glob(f"{path}/cell_id={bad}/*.parquet")[0]
+    with open(part, "r+b") as f:
+        f.seek(os.path.getsize(part) // 2)
+        byte = f.read(1)[0]
+        f.seek(-1, os.SEEK_CUR)
+        f.write(bytes([byte ^ 0xFF]))
+    for crc in glob.glob(f"{path}/cell_id={cell_id_for(spark, other, 16)}/.*.crc"):
+        os.remove(crc)
+
+    r = TsReader(spark, path)
+    error = lineage.ChecksumError if through == "local" else Py4JJavaError
+    with pytest.raises(error, match="Checksum error"):
+        r.read(conv)
+    got = r.read(other)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, spark_read(spark, silver16, other))
 
 
 def test_reader_sees_extends_after_open(spark, tmp_path):
@@ -264,6 +334,14 @@ def test_reader_reads_session_time_zone_at_each_read(spark, silver16):
                     )
     finally:
         spark.conf.set(key, zone)
+
+
+def test_read_in_session_time_zone_through_hadoop(
+    spark, silver16, hadoop_source
+):
+    """The session-zone contracts hold on the Hadoop source too."""
+    test_read_matches_spark_query_in_session_time_zone(spark, silver16)
+    test_reader_reads_session_time_zone_at_each_read(spark, silver16)
 
 
 def test_read_converts_every_column_type_as_to_pandas(spark, tmp_path):
